@@ -11,10 +11,11 @@ import graft.sources.TranscriptGen
   * 12.6M-turn round-3 best — with per-stage wall seconds and shuffle
   * bytes, proving the stage shapes (clustered conv aggregation, banded
   * dedup, broadcast dims) hold as data grows, not just that sf0.1
-  * finishes. The stage decomposition IS [[Bench.kgStages]] (eager-
-  * unpersist mode) — one canonical S1-S6 loop serves both the driver
-  * bench and this anchor, so the two artifacts can never measure
-  * different pipelines. A SparkListener registered AFTER generation
+  * finishes. The stage decomposition is [[Bench.kgStages]] (eager-
+  * unpersist mode), which composes the same KgPipeline stage functions
+  * as the fused run and PipelineMain — so the anchor, the driver bench
+  * and the shipped driver measure one S4-S6 plan (the one-join emit).
+  * A SparkListener registered AFTER generation
   * and tagger training folds only the PIPELINE stages' shuffle
   * read/write into totals and a peak, so the artifact shows where the
   * exchange pressure actually lands.

@@ -69,17 +69,16 @@ object Bench {
     (r, Measured(sec, cpu, steal))
   }
 
-  /** Stage-attributed wall times over pre-cleaned turns: each stage is
-    * materialized (cache + count) so the deltas isolate one operator. The
+  /** Stage-attributed wall times: the KgPipeline stage functions that the
+    * fused run composes, each materialized (cache + count) so the deltas
+    * isolate one stage; `s6_emit` times the fused run's one-join emit. The
     * sum slightly exceeds a fused end-to-end run (caching overhead), which
     * is why the headline `kg_pipeline` number comes from the un-instrumented
     * runs instead. `unpersistEagerly` drops each upstream cache as soon as
     * its consumer materializes — the memory policy the 100M-turn
     * AnchorScale leg needs; the default keeps the round-4 behavior (all
     * unpersisted at the end). Returns (per-stage seconds, triple count) —
-    * ONE canonical S1-S6 decomposition serving both the driver bench and
-    * the scale anchor, so the two artifacts can never measure different
-    * pipelines.
+    * serving both the driver bench and the scale anchor.
     */
   def kgStages(spark: SparkSession, tagger: SectionTagger.Trained,
       turns: org.apache.spark.sql.Dataset[graft.model.Turn],
@@ -102,18 +101,13 @@ object Bench {
     val convs = ConvFinalize.runClustered(extracted).cache()
     phase("s4_conv")(convs.count())
     if (unpersistEagerly) extracted.unpersist()
-    val convSkills = convs.select(col("conv_id"), explode(col("skills")).as("skill"))
-    val si = Scoring.sectorAndIsco(convSkills).cache()
+    val si = KgPipeline.scoreConvs(convs).cache()
     phase("s5_scoring")(si.count())
     val canon = phase("s5_linking") {
-      val c = Linking.canonicalize(
-        convs.toDF().select(explode(col("orgs")).as("surface"))).cache()
+      val c = Linking.canonicalize(KgPipeline.orgMentions(convs)).cache()
       c.count(); c
     }
-    val estimates = Scoring.estimates(si.select("conv_id", "isco3"),
-      convs.toDF().select(col("conv_id"), col("location")).filter(col("location").isNotNull))
-    val nTriples = phase("s6_emit")(
-      TripleEmit.run(convs, si.select("conv_id", "sector"), estimates, canon).count())
+    val nTriples = phase("s6_emit")(KgPipeline.emitTriples(convs, si, canon).count())
     if (!unpersistEagerly) Seq(cleaned, tagged, extracted).foreach(_.unpersist())
     Seq(convs.toDF(), si, canon).foreach(_.unpersist())
     (out.toSeq, nTriples)

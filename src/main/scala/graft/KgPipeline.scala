@@ -41,48 +41,52 @@ object KgPipeline {
       .sortWithinPartitions("text_clean", "category")
   }
 
-  /** S2-S6 from cleaned turns to triples. `extractDates` is the X5 flag
-    * (reference ships it disabled — ExtractInfo.py:131-132).
+  /** S1-S6 from raw turns to triples: the fused composition of the stage
+    * functions below, the same ones the checkpointing driver and the
+    * stage bench call. `extractDates` is the X5 flag (reference ships it
+    * disabled — ExtractInfo.py:131-132).
     *
-    * `clusteredConv = true` (default) resolves conversations via
-    * [[ConvFinalize.runClustered]] — every caller of this dataflow feeds
-    * conv-clustered, turn-sorted input (transcript tables sorted by
-    * (conv_id, turn_idx), the generator, the stage checkpoints), and the
-    * clustered path keeps the per-turn payload out of the shuffle while
-    * throwing (never corrupting) on contract violations. Pass false for
-    * arbitrarily-ordered inputs.
+    * S4 resolves conversations via [[ConvFinalize.runClustered]]: every
+    * input here is conv-clustered and turn-sorted (transcript tables sorted
+    * by (conv_id, turn_idx), the generator), and the clustered path keeps
+    * the per-turn payload out of the shuffle while throwing (never
+    * corrupting) on contract violations.
     */
-  def triplesFromCleaned(cleaned: DataFrame, tagger: SectionTagger.Trained,
-      extractDates: Boolean = false, clusteredConv: Boolean = true)(
-      implicit spark: SparkSession): Dataset[Triple] = {
-    val tagged = SectionTagger.predict(tagger, cleaned)
+  def computeTriples(turns: Dataset[Turn], tagger: SectionTagger.Trained,
+      extractDates: Boolean = false)(implicit spark: SparkSession): Dataset[Triple] = {
+    val tagged = SectionTagger.predict(tagger, cleanTurns(turns))
     val extracted = TurnExtract.extract(tagged, extractDates)
-    val convs = (if (clusteredConv) ConvFinalize.runClustered(extracted)
-                 else ConvFinalize.run(extracted)).cache()
+    val convs = ConvFinalize.runClustered(extracted).cache()
+    val si = scoreConvs(convs).cache()
+    emitTriples(convs, si, Linking.canonicalize(orgMentions(convs)))
+  }
 
-    val convSkills = convs.select(col("conv_id"), explode(col("skills")).as("skill"))
-    val si = Scoring.sectorAndIsco(convSkills).cache()
-    val convLoc = convs.toDF().select(col("conv_id"), col("location"))
+  /** S5 scoring — (conv_id, sector, isco3) over the exploded skills. */
+  def scoreConvs(convs: Dataset[ConvExtract])(implicit spark: SparkSession): DataFrame =
+    Scoring.sectorAndIsco(convs.select(col("conv_id"), explode(col("skills")).as("skill")))
+
+  /** S5 linking input — one `surface` row per org mention. */
+  def orgMentions(convs: Dataset[ConvExtract]): DataFrame =
+    convs.toDF().select(explode(col("orgs")).as("surface"))
+
+  /** S5 enrichment — (conv_id, sector, estimated_salary) resolved against
+    * `si` in ONE conv-scale join chain: si ⟕ convLoc ⟕ broadcast dim. A
+    * missed location or dim key just leaves estimated_salary null, so the
+    * left joins keep exactly the estimates an inner join would find.
+    */
+  def enrichScores(si: DataFrame, convs: DataFrame)(implicit spark: SparkSession): DataFrame = {
+    val convLoc = convs.select(col("conv_id"), col("location"))
       .filter(col("location").isNotNull)
-    // sector + salary estimate resolved against si in ONE conv-scale join
-    // chain (si ⟕ convLoc ⟕ broadcast dim) instead of two separate frames
-    // each re-joined to convs — TripleEmit.runEnriched then pays a single
-    // conv-scale left join (2 conv joins total where round 5 paid 3; the
-    // left joins preserve exactly the inner-join estimate rows because a
-    // missed location or dim key just leaves estimated_salary null)
-    val enriched = si.select(col("conv_id"), col("sector"), col("isco3"))
+    si.select(col("conv_id"), col("sector"), col("isco3"))
       .join(convLoc, Seq("conv_id"), "left")
       .join(broadcast(Scoring.estimateDim), Seq("location", "isco3"), "left")
       .select(col("conv_id"), col("sector"), col("estimated_salary"))
-
-    val orgMentions = convs.toDF().select(explode(col("orgs")).as("surface"))
-    val orgCanonical = Linking.canonicalize(orgMentions)
-
-    TripleEmit.runEnriched(convs, enriched, orgCanonical)
   }
 
-  def computeTriples(turns: Dataset[Turn], tagger: SectionTagger.Trained,
-      extractDates: Boolean = false, clusteredConv: Boolean = true)(
+  /** S6 emit — the enrichment above, then [[TripleEmit.runEnriched]]'s
+    * single conv-scale left join plus the canonicalized org triples.
+    */
+  def emitTriples(convs: Dataset[ConvExtract], si: DataFrame, orgCanonical: DataFrame)(
       implicit spark: SparkSession): Dataset[Triple] =
-    triplesFromCleaned(cleanTurns(turns), tagger, extractDates, clusteredConv)
+    TripleEmit.runEnriched(convs, enrichScores(si, convs.toDF()), orgCanonical)
 }

@@ -68,7 +68,20 @@ object PipelineMain {
   val stageNames = Seq("s0_transcripts", "s1_clean", "s2_model", "s3_extract",
     "s4_conv", "s5_entities", "s6_triples")
 
+  /** Builds the session, runs the driver on it, and stops it however the
+    * run ends.
+    */
   def main(args: Array[String]): Unit = {
+    val cores = parseArgs(args).getOrElse("cores", "32").toInt
+    implicit val spark: SparkSession = Sessions.local(cores, appName = "graft-pipeline")
+    spark.sparkContext.setLogLevel("WARN")
+    try run(args) finally spark.stop()
+  }
+
+  /** The driver body on a caller-owned session (`--cores` only sizes the
+    * session [[main]] builds).
+    */
+  def run(args: Array[String])(implicit spark: SparkSession): Unit = {
     val a = parseArgs(args)
     // --maintain/--rollback/--tag target a table directly and need no --out
     val out = a.getOrElse("out", a.getOrElse("maintain",
@@ -80,11 +93,7 @@ object PipelineMain {
     val from = a.getOrElse("from-stage", "s0")
     val to = a.getOrElse("to-stage", "s6")
     val skip = a.getOrElse("skip", "").split(',').filter(_.nonEmpty).toSet
-    val cores = a.getOrElse("cores", "32").toInt
     val runId = a.getOrElse("run-id", s"run-${System.currentTimeMillis()}")
-
-    implicit val spark: SparkSession = Sessions.local(cores, appName = "graft-pipeline")
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     // ---- maintenance mode: the standing table-care recipe ----------------
@@ -110,7 +119,6 @@ object PipelineMain {
         else VersionedTable.rollbackTo(table, target.toInt)
       println(s"[graft] rollback $table -> v${v.seq} " +
         s"snapshot=${v.snapshotId} (${v.dirs.size} file groups)")
-      spark.stop()
       return
     }
     a.get("tag").foreach { name =>
@@ -121,7 +129,6 @@ object PipelineMain {
         .getOrElse(VersionedTable.versions(table).last.seq)
       VersionedTable.tag(table, name, seq)
       println(s"[graft] tagged $table v$seq as '$name'")
-      spark.stop()
       return
     }
     // `--history <table>`: DESCRIBE HISTORY + layout summary from the
@@ -136,7 +143,6 @@ object PipelineMain {
         .agg(count(lit(1)), sum(col("bytes"))).head()
       println(s"[graft] tip layout: ${fm.getLong(0)} data files, " +
         s"${fm.getLong(1)} bytes; tags=${VersionedTable.tags(table)}")
-      spark.stop()
       return
     }
 
@@ -163,7 +169,6 @@ object PipelineMain {
       println(s"[graft] $table schema now: " +
         s"${VersionedTable.tableSchema(table).fieldNames.mkString(", ")} " +
         s"(snapshot unchanged: ${v.snapshotId})")
-      spark.stop()
       return
     }
 
@@ -217,7 +222,6 @@ object PipelineMain {
         println(s"[graft] mor-delete $table -> v${v.seq} " +
           s"matched=${v.dels.last.matched} pending_delete_files=${v.dels.size} " +
           s"snapshot=${v.snapshotId} (0 data files rewritten)")
-      spark.stop()
       return
     }
 
@@ -270,7 +274,6 @@ object PipelineMain {
         s"retained=${after.size} tip=v${after.last.seq} " +
         s"snapshot=${after.last.snapshotId} (content unchanged: " +
         s"${after.last.snapshotId == before.last.snapshotId})")
-      spark.stop()
       return
     }
 
@@ -324,17 +327,11 @@ object PipelineMain {
       println(s"[graft] s2_model saved -> ${path("s2_model")}")
     }
 
-    def loadTagger(): SectionTagger.Trained = {
-      val m = PipelineModel.load(path("s2_model"))
-      val labels = m.stages.collectFirst { case s: StringIndexerModel => s.labelsArray(0) }.get
-      SectionTagger.Trained(m, labels)
-    }
-
     // ---- streaming mode: the whole construction as one StreamingQuery ----
     val streaming = a.getOrElse("stream", "false").toBoolean
     if (streaming) {
       import java.nio.file.{Files, Paths}
-      val tagger = loadTagger()
+      val tagger = loadTagger(path("s2_model"))
       // --stream-source versioned: the input side of the table-to-table
       // story — turns live in a VersionedTable and the query TAILS its
       // commits (offsets = version seqs, each batch reads only the newly
@@ -446,14 +443,13 @@ object PipelineMain {
       val nConvsDone = streamed.select("subj").distinct().count()
       println(s"[graft] ${if (versionedSink) "s6_stream_triples_v" else "s6_stream_triples"} " +
         s"rows=$n convs=$nConvsDone -> $outPath")
-      spark.stop()
       return
     }
 
     // ---- s3: tag + per-turn mention extraction ----
     if (active("s3_extract")) {
       val cleaned = spark.read.parquet(path("s1_clean"))
-      val tagged = SectionTagger.predict(loadTagger(), cleaned)
+      val tagged = SectionTagger.predict(loadTagger(path("s2_model")), cleaned)
       val extractDates = a.getOrElse("extract-dates", "false").toBoolean // X5 flag
       write("s3_extract", TurnExtract.extract(tagged, extractDates), Seq("s1_clean"))
     }
@@ -495,9 +491,8 @@ object PipelineMain {
 
     // ---- s5: entity linking over org mentions ----
     if (active("s5_entities")) {
-      val convs = spark.read.parquet(path("s4_conv"))
-      val mentions = convs.select(explode(col("orgs")).as("surface"))
-      val (canon, blockingAudit) = Linking.canonicalizeWithMetrics(mentions)
+      val convs = spark.read.parquet(path("s4_conv")).as[ConvExtract]
+      val (canon, blockingAudit) = Linking.canonicalizeWithMetrics(KgPipeline.orgMentions(convs))
       write("s5_entities", canon, Seq("s4_conv"))
       // blocking-skew audit beside the stage output (VERDICT r3 #5): on
       // the LSH path this records n_oversized_buckets / n_star_pairs —
@@ -512,14 +507,8 @@ object PipelineMain {
     // ---- s6: scoring + triple emission, partitioned by pred ----
     if (active("s6_triples")) {
       val convs = spark.read.parquet(path("s4_conv")).as[ConvExtract]
-      val convSkills = convs.select(col("conv_id"), explode(col("skills")).as("skill"))
-      val si = Scoring.sectorAndIsco(convSkills).cache()
-      val sectors = si.select("conv_id", "sector")
-      val estimates = Scoring.estimates(
-        si.select("conv_id", "isco3"),
-        convs.toDF().select(col("conv_id"), col("location")).filter(col("location").isNotNull))
-      val canon = spark.read.parquet(path("s5_entities"))
-      val triples = TripleEmit.run(convs, sectors, estimates, canon)
+      val triples = KgPipeline.emitTriples(convs, KgPipeline.scoreConvs(convs),
+        spark.read.parquet(path("s5_entities")))
       if (a.getOrElse("merge-append", "false").toBoolean) {
         // MERGE-style incremental emit: only triples of subjects not yet in
         // the table are appended (reference backup-table swap semantics,
@@ -590,8 +579,13 @@ object PipelineMain {
       write("s8_negatives", Negatives.corrupt(pos, k = kNeg),
         Seq("s6_triples"), partitionBy = Seq("pred"))
     }
+  }
 
-    spark.stop()
+  /** The section tagger an s2 stage saved under `dir`. */
+  def loadTagger(dir: String): SectionTagger.Trained = {
+    val m = PipelineModel.load(dir)
+    val labels = m.stages.collectFirst { case s: StringIndexerModel => s.labelsArray(0) }.get
+    SectionTagger.Trained(m, labels)
   }
 
   private val knownArgs = Set(

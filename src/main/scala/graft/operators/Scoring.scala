@@ -92,12 +92,6 @@ object Scoring {
     spark.createDataFrame(rows).toDF("location", "isco3", "estimated_salary")
   }
 
-  /** (conv_id, isco3) × (conv_id, location) -> (conv_id, estimated_salary). */
-  def estimates(isco: DataFrame, convLoc: DataFrame)(implicit spark: SparkSession): DataFrame =
-    isco.join(convLoc, "conv_id")
-      .join(broadcast(estimateDim), Seq("location", "isco3"))
-      .select("conv_id", "estimated_salary")
-
   /** Single-pass variant used by the pipeline: ONE broadcast join + ONE
     * partial-aggregated shuffle + ONE mapGroups computes the NACE sector
     * argmax and the whole 3-level ISCO walk together. The per-op functions
@@ -181,8 +175,9 @@ object Scoring {
     }
   }
 
-  /** Pure twin of [[estimates]]' dim join: None unless the walked isco3 is
-    * a real occupation code AND the location names a dim country.
+  /** Pure twin of the estimate dim join (graft.KgPipeline.enrichScores):
+    * None unless the walked isco3 is a real occupation code AND the
+    * location names a dim country.
     */
   def estimatePure(isco3: String, location: Option[String]): Option[Int] =
     for {

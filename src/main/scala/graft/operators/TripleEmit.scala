@@ -69,30 +69,10 @@ object TripleEmit {
     out.toSeq
   }
 
-  def run(
-      convs: Dataset[ConvExtract],
-      sectors: DataFrame,
-      estimates: DataFrame,
-      orgCanonical: DataFrame)(implicit spark: SparkSession): Dataset[Triple] = {
-    import spark.implicits._
-
-    val base = convs.drop("orgs")
-      .join(sectors, Seq("conv_id"), "left")
-      .join(estimates, Seq("conv_id"), "left")
-      .as[ConvFull]
-      .flatMap(convTriples _)
-
-    base.union(orgTriples(convs, orgCanonical))
-  }
-
-  /** One-join variant for the fused pipeline (r6, guide §2.4 "remove
-    * shuffles outright"): `enriched` already carries (conv_id, sector,
-    * estimated_salary) — ≤ 1 row per conv by construction — so the emit
-    * side pays ONE conv-scale left join where [[run]] pays two. Join
-    * associativity makes the two shapes row-identical: sectors and
-    * estimates are both keyed uniquely by conv_id and every estimate key
-    * is an si key, hence convs ⟕ S ⟕ E == convs ⟕ (S ⟕ E). The r5 shape
-    * stays in [[run]] (the frozen bench's stage split calls it).
+  /** Batch emit: `enriched` carries (conv_id, sector, estimated_salary),
+    * at most one row per conv (graft.KgPipeline.enrichScores builds it), so
+    * the non-org triples cost ONE conv-scale left join. Org triples go
+    * through the entity-linking canonical map.
     */
   def runEnriched(
       convs: Dataset[ConvExtract],
@@ -103,17 +83,12 @@ object TripleEmit {
       .join(enriched, Seq("conv_id"), "left")
       .as[ConvFull]
       .flatMap(convTriples _)
-    base.union(orgTriples(convs, orgCanonical))
-  }
-
-  private def orgTriples(convs: Dataset[ConvExtract], orgCanonical: DataFrame)(
-      implicit spark: SparkSession): Dataset[Triple] = {
-    import spark.implicits._
-    convs.select(col("conv_id"), explode(col("orgs")).as("surface"))
+    val orgs = convs.select(col("conv_id"), explode(col("orgs")).as("surface"))
       .join(orgCanonical, Seq("surface"), "left")
       .select(col("conv_id").as("subj"), lit("hiring_organization").as("pred"),
         coalesce(col("canonical"), col("surface")).as("obj"))
       .distinct()
       .as[Triple]
+    base.union(orgs)
   }
 }

@@ -100,7 +100,7 @@ object StreamingTriples {
     val convs = ConvFinalize.run(TurnExtract.extract(
       SectionTagger.predict(tagger, graft.KgPipeline.cleanTurns(allTurns.toDS()))))
     val canon: Map[String, String] = graft.operators.Linking.canonicalize(
-        convs.toDF().select(explode(col("orgs")).as("surface")))
+        graft.KgPipeline.orgMentions(convs))
       .select("surface", "canonical").as[(String, String)].collect().toMap
     val stream = MemoryStream[graft.model.Turn]
     val queryName = s"stream_parity_$nConvs"

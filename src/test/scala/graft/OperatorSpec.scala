@@ -23,7 +23,10 @@ class OperatorSpec extends SparkSpec {
 
     val sectors = Scoring.sectors(convSkills).as[(String, String)].collect().toMap
     val isco = Scoring.isco3(convSkills).as[(String, String)].collect().toMap
-    val est = Scoring.estimates(Scoring.isco3(convSkills), convLoc).as[(String, Int)].collect().toMap
+    // estimates through the production S5 enrichment (left joins), so the
+    // path the pipeline emits from is the one pinned to the pure reference
+    val est = KgPipeline.enrichScores(Scoring.sectorAndIsco(convSkills), convLoc)
+      .select("conv_id", "estimated_salary").as[(String, Int)].collect().toMap
     cases.foreach { case (c, sk, loc) =>
       assert(sectors(c) == DictRules.sector(sk), s"sector $c")
       assert(isco(c) == DictRules.isco3(sk), s"isco $c")

@@ -1,0 +1,64 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.functions._
+
+import graft.model.{Triple, Turn}
+
+/** The checkpointing driver on the shared session: a full s0→s6 run, a
+  * resume from s4 and the salted S4 path all land the triples the fused
+  * KgPipeline.computeTriples derives from the same s0 table and tagger.
+  */
+class PipelineMainSpec extends SparkSpec {
+
+  private lazy val out: String = {
+    val dir = Files.createTempDirectory("graft-pipeline-main").resolve("kg").toString
+    PipelineMain.run(Array("--out", dir, "--convs", "40", "--run-id", "full"))
+    dir
+  }
+
+  private lazy val fused: Set[Triple] = {
+    import spark.implicits._
+    val turns = spark.read.parquet(s"$out/s0_transcripts").as[Turn]
+    KgPipeline.computeTriples(turns, PipelineMain.loadTagger(s"$out/s2_model"))
+      .collect().toSet
+  }
+
+  private def landed(): Set[Triple] = {
+    import spark.implicits._
+    spark.read.parquet(s"$out/s6_triples").as[Triple].collect().toSet
+  }
+
+  private def assertSameTriples(got: Set[Triple], what: String): Unit = {
+    val missing = (fused diff got).toSeq.sortBy(t => (t.subj, t.pred)).take(10)
+    val extra = (got diff fused).toSeq.sortBy(t => (t.subj, t.pred)).take(10)
+    assert(got == fused, s"$what: ${got.size} triples vs fused ${fused.size}; " +
+      s"missing $missing; extra $extra")
+  }
+
+  test("s0→s6 lands the fused triple set; lineage rows_out sums match each table") {
+    import spark.implicits._
+    assert(fused.nonEmpty)
+    assertSameTriples(landed(), "s6_triples")
+    val rowsOut = spark.read.parquet(s"$out/lineage")
+      .filter(col("run_id") === "full")
+      .groupBy("stage").agg(sum("rows_out"))
+      .as[(String, Long)].collect().toMap
+    val written = Seq("s0_transcripts", "s1_clean", "s3_extract", "s4_conv",
+      "s5_entities", "s6_triples")
+    assert(rowsOut.keySet == written.toSet)
+    written.foreach { stage =>
+      assert(rowsOut(stage) == spark.read.parquet(s"$out/$stage").count(), stage)
+    }
+  }
+
+  test("a resume from s4 and the salted S4 path land the same s6 set") {
+    PipelineMain.run(Array("--out", out, "--from-stage", "s4", "--to-stage", "s6",
+      "--run-id", "resume"))
+    assertSameTriples(landed(), "resume from s4")
+    PipelineMain.run(Array("--out", out, "--from-stage", "s4", "--salted-conv", "true",
+      "--run-id", "salted"))
+    assertSameTriples(landed(), "salted s4")
+  }
+}
