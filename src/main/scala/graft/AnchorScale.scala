@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 import graft.ml.SectionTagger
+import graft.obs.StageMetrics
 import graft.sources.TranscriptGen
 
 /** The 100x scale anchor (VERDICT r4 item 8): ONE recorded end-to-end
@@ -15,7 +15,7 @@ import graft.sources.TranscriptGen
   * unpersist mode), which composes the same KgPipeline stage functions
   * as the fused run and PipelineMain — so the anchor, the driver bench
   * and the shipped driver measure one S4-S6 plan (the one-join emit).
-  * A SparkListener registered AFTER generation
+  * A [[StageMetrics]] collector started AFTER generation
   * and tagger training folds only the PIPELINE stages' shuffle
   * read/write into totals and a peak, so the artifact shows where the
   * exchange pressure actually lands.
@@ -25,29 +25,6 @@ import graft.sources.TranscriptGen
   * `SPARK_GRAFT_CONVS=6400000 java -Xmx90g ... graft.AnchorScale`.
   */
 object AnchorScale {
-
-  final class ShuffleTally extends SparkListener {
-    @volatile var writeTotal = 0L
-    @volatile var readTotal = 0L
-    @volatile var writePeak = 0L
-    @volatile var peakStage = ""
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        val w = m.shuffleWriteMetrics.bytesWritten
-        writeTotal += w
-        readTotal += m.shuffleReadMetrics.totalBytesRead
-        if (w > writePeak) {
-          writePeak = w
-          // keep the fragment JSON-safe: stage names embed plan text
-          // that may carry quotes/backslashes
-          peakStage = s"${sc.stageInfo.stageId}:${sc.stageInfo.name}"
-            .takeWhile(_ != '\n').take(64)
-            .map(c => if (c == '"' || c == '\\') '_' else c)
-        }
-      }
-    }
-  }
 
   def main(args: Array[String]): Unit = {
     // 6.4M convs ≈ 101M turns at the bench generator's ~15.8 turns/conv
@@ -69,21 +46,26 @@ object AnchorScale {
     val (nTurns, genSec) = Bench.time(turns.count())
 
     // the tally sees ONLY the pipeline stages: generation, persist and
-    // tagger training have all completed before it registers. The
-    // listener bus is ASYNC (ADVICE r5) — give queued generation-stage
-    // events time to drain before the tally registers, so they cannot be
-    // misattributed to the pipeline account
-    Thread.sleep(2000)
-    val tally = new ShuffleTally
-    spark.sparkContext.addSparkListener(tally)
+    // tagger training have all completed, and start() drains their
+    // listener events before it begins counting
+    val metrics = StageMetrics.attach(spark.sparkContext)
+    metrics.start()
     val ((stages, nTriples), totalSec) =
       Bench.time(Bench.kgStages(spark, tagger, turns, unpersistEagerly = true))
     turns.unpersist()
+    val rows = metrics.report()
+    val writeTotal = rows.map(_.shuffleWriteBytes).sum
+    val readTotal = rows.map(_.shuffleReadBytes).sum
+    val peak = rows.filter(_.shuffleWriteBytes > 0).maxByOption(_.shuffleWriteBytes)
+    // keep the fragment JSON-safe: stage names embed plan text that may
+    // carry quotes/backslashes
+    val peakStage = peak.fold("")(r => s"${r.stageId}:${r.name}".take(64)
+      .map(c => if (c == '"' || c == '\\') '_' else c))
 
     def jmap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + f"""\":$v%.1f""" }.mkString("{", ",", "}")
     println(
-      f"""{"metric":"anchor_100x","convs":$nConvs,"turns":$nTurns,"triples":$nTriples,"gen_sec":$genSec%.1f,"pipeline_sec":$totalSec%.1f,"turns_per_sec":${nTurns / totalSec}%.1f,"stages":${jmap(stages)},"shuffle_write_gb":${tally.writeTotal / 1e9}%.2f,"shuffle_read_gb":${tally.readTotal / 1e9}%.2f,"peak_stage_write_gb":${tally.writePeak / 1e9}%.2f,"peak_stage":"${tally.peakStage}","cores":$cpus}""")
+      f"""{"metric":"anchor_100x","convs":$nConvs,"turns":$nTurns,"triples":$nTriples,"gen_sec":$genSec%.1f,"pipeline_sec":$totalSec%.1f,"turns_per_sec":${nTurns / totalSec}%.1f,"stages":${jmap(stages)},"shuffle_write_gb":${writeTotal / 1e9}%.2f,"shuffle_read_gb":${readTotal / 1e9}%.2f,"peak_stage_write_gb":${peak.fold(0L)(_.shuffleWriteBytes) / 1e9}%.2f,"peak_stage":"$peakStage","cores":$cpus}""")
     spark.stop()
   }
 }

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ml.SectionTagger
+import graft.obs.StageMetrics
 import graft.operators.{ConvFinalize, Dedup, TurnExtract}
 import graft.sources.TranscriptGen
 
@@ -14,10 +14,11 @@ import graft.sources.TranscriptGen
   *
   *  - Conv path: ONE conversation carries ~10% of all turns
   *    (skewConvs=1 with skewTurns ≈ 0.1 × total). Both the salted
-  *    two-level path and the clustered map-side path run under a task
-  *    listener; the report includes per-pass seconds and the straggler
-  *    ratio (max task duration / median) of the heaviest stage — the
-  *    number that explodes when a hot key serializes one reducer.
+  *    two-level path and the clustered map-side path run under a
+  *    [[StageMetrics]] collector; the report includes per-pass seconds
+  *    and the straggler ratio (max task duration / median) of the
+  *    heaviest stage — the number that explodes when a hot key
+  *    serializes one reducer.
   *  - Linking path: a 30k-surface vocabulary where ONE boilerplate
   *    family of 5k near-identical surfaces shares its shingle sets (the
   *    all-pairs bucket would be ~12.5M pairs); bandedMinHashPairs must
@@ -31,36 +32,12 @@ import graft.sources.TranscriptGen
   */
 object HotKeyProbe {
 
-  private final class StageTasks extends SparkListener {
-    val byStage = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.ConcurrentLinkedQueue[Long]]()
-    override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
-      if (te.taskInfo != null && te.taskInfo.successful) {
-        byStage.computeIfAbsent(te.stageId,
-          _ => new java.util.concurrent.ConcurrentLinkedQueue[Long]())
-          .add(te.taskInfo.duration)
-      }
-    def reset(): Unit = byStage.clear()
-    /** (max/median task duration, task count) of the stage with the
-      * largest total task time — the stage a hot key would serialize. */
-    def heaviestStageStraggler(): (Double, Int) = {
-      import scala.jdk.CollectionConverters._
-      val stages = byStage.asScala.toSeq
-        .map { case (sid, q) => (sid, q.asScala.toSeq.sorted) }
-        .filter(_._2.size >= 4) // straggler ratio is meaningless on tiny stages
-      if (stages.isEmpty) return (-1.0, 0)
-      val (_, durs) = stages.maxBy(_._2.sum)
-      val median = durs(durs.size / 2).toDouble
-      (if (median > 0) durs.last / median else -1.0, durs.size)
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val nConvs = sys.env.getOrElse("SPARK_GRAFT_CONVS", "100000").toLong
     implicit val spark: SparkSession = Sessions.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, appName = "graft-hotkey")
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new StageTasks
-    spark.sparkContext.addSparkListener(listener)
+    val metrics = StageMetrics.attach(spark.sparkContext)
 
     // ---- conv path: one conversation ≈ 10% of all turns ----------------
     // baseline avg ≈ 15.8 turns/conv, so skewTurns ≈ 1.75 × nConvs puts
@@ -75,11 +52,11 @@ object HotKeyProbe {
     extracted.count()
     val hotShare = extracted.filter(col("conv_id") === "conv-00000000").count().toDouble / nTurns
     def pass(label: String, f: => Long): (Double, Double, Long) = {
-      listener.reset()
+      metrics.start()
       val t0 = System.nanoTime()
       val n = f
       val sec = (System.nanoTime() - t0) / 1e9
-      val (rat, _) = listener.heaviestStageStraggler()
+      val (rat, _) = metrics.heaviestStageStraggler()
       (sec, rat, n)
     }
     // warm-up, then measured passes of both paths

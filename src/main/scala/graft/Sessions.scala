@@ -27,14 +27,28 @@ object Sessions {
 
   def local(cores: Int = 32, shufflePartitions: Int = -1, appName: String = "graft"): SparkSession = {
     val sp = if (shufflePartitions > 0) shufflePartitions else cores
-    val b = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(appName)
+    withDefaults(SparkSession.builder().master(s"local[$cores]").appName(appName), sp)
+      // bypass-merge shuffle writes ONE FILE PER REDUCE PARTITION per map
+      // task and then NIO-merges them (mmap/unmap per file): thread-dump
+      // sampling showed that merge at 13% of active executor samples at
+      // R=32. Production jobs run R >> 200 where the bypass path never
+      // fires, so disabling it is scale-neutral; locally the serialized
+      // sort writer produces one spill file per map task instead.
+      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
+      .getOrCreate()
+  }
+
+  /** The SQL, join and scratch-dir defaults shared by [[local]] and
+    * [[localCluster]]. The join settings are the measured-best values of
+    * the OPTIMIZATION_r06.md A/B.
+    */
+  private def withDefaults(b: SparkSession.Builder, shufflePartitions: Int): SparkSession.Builder = {
+    val c = b
       // the engine's Catalyst surface (similarity-join rewrite + SQL
       // functions); spark-submit users pass
       // --conf spark.sql.extensions=graft.plans.GraftExtensions instead
       .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", sp.toString)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -54,26 +68,13 @@ object Sessions {
       // large (the kg emit stage's conv-keyed LeftOuter joins are SMJ only
       // because mapGroups output has no size stats; AQE sees the real
       // sizes at runtime)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shjThreshold)
-      // bypass-merge shuffle writes ONE FILE PER REDUCE PARTITION per map
-      // task and then NIO-merges them (mmap/unmap per file): thread-dump
-      // sampling showed that merge at 13% of active executor samples at
-      // R=32. Production jobs run R >> 200 where the bypass path never
-      // fires, so disabling it is scale-neutral; locally the serialized
-      // sort writer produces one spill file per map task instead.
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "1"))
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-    localDir.foreach(b.config("spark.local.dir", _))
-    b.getOrCreate()
+    // spark.local.dir propagates to local-cluster executor JVMs via SparkConf
+    localDir.fold(c)(c.config("spark.local.dir", _))
   }
-
-  // parameterised for A/B runs and cluster overrides (SPARK_GRAFT_PREFER_SMJ,
-  // SPARK_GRAFT_SHJ_THRESHOLD); local defaults = the measured-best values
-  private def preferSmj: String = sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false")
-  private def shjThreshold: String = sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m")
 
   /** REAL multi-executor session: `local-cluster[n, cores, memMb]` spawns
     * one separate executor JVM per `n` on this host — own heap, GC and
@@ -99,10 +100,9 @@ object Sessions {
       "java.util.concurrent.atomic", "sun.nio.ch", "sun.nio.cs",
       "sun.security.action", "sun.util.calendar")
       .map(p => s"--add-opens=java.base/$p=ALL-UNNAMED").mkString(" ")
-    val c = SparkSession.builder()
+    withDefaults(SparkSession.builder()
       .master(s"local-cluster[$executors,$coresPerExec,$memMb]")
-      .appName(appName)
-      .withExtensions(new graft.plans.GraftExtensions)
+      .appName(appName), executors * coresPerExec)
       .config("spark.executor.memory", s"${memMb}m")
       .config("spark.executor.extraClassPath", classesDir)
       // ActiveProcessorCount: on a real cluster the container runtime
@@ -113,19 +113,6 @@ object Sessions {
       // capped (measured: s2_tag 15.7 s -> capped matches local[32])
       .config("spark.executor.extraJavaOptions",
         s"-XX:+UseParallelGC -XX:ActiveProcessorCount=$coresPerExec $opens")
-      .config("spark.sql.shuffle.partitions", (executors * coresPerExec).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.autoBroadcastJoinThreshold", (8L * 1024 * 1024).toString)
-      // same join-strategy policy and scratch-dir default as [[local]]
-      // (spark.local.dir propagates to the executor JVMs via SparkConf)
-      .config("spark.sql.join.preferSortMergeJoin", preferSmj)
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", shjThreshold)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    localDir.foreach(c.config("spark.local.dir", _))
-    c.getOrCreate()
+      .getOrCreate()
   }
 }

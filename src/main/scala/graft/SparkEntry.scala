@@ -89,7 +89,7 @@ object SparkEntry {
   // stopped session + its checkpoint blocks for the JVM's lifetime)
   @volatile private var entryMemo: (SparkSession, DataFrame) = null
 
-  /** Drop the entry memo — timing harnesses (QBench) call this between
+  /** Drop the entry memo — the profiler (graft.Prof) calls this between
     * repeated runs so the second measurement re-runs the pipeline instead
     * of scanning checkpoint blocks.
     */

@@ -20,8 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * regexp_extract_all(...))` materialized per row just to take its length.
   *
   * All kernels walk the UTF-8 BYTES of the UTF8String directly — no
-  * per-row java.lang.String materialization (TextScanProbe measured the
-  * toString copy+decode dominating the char-level first cut). Every
+  * per-row java.lang.String materialization (the toString copy+decode
+  * dominated the char-level first cut; BENCH_SCALING.md round 3, "Native
+  * text-analysis kernels vs their Column twins"). Every
   * decision here is byte-decidable: the `\s` class and all kept charsets
   * are ASCII (single bytes; UTF-8 continuation bytes are >= 0x80 and can
   * never alias them), and a non-ASCII code point is exactly one leading

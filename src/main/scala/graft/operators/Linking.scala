@@ -160,7 +160,8 @@ object Linking {
     // count() materializes the cache in one parallel job, so the gated
     // collect below reads cached blocks (a limit()-based gate measured
     // WORSE here: CollectLimit's incremental take re-ran the aggregation
-    // across its scale-up jobs — KgProf stages 254-259, ~0.4 s)
+    // across its scale-up jobs, ~0.4 s in the round-6 stage profile,
+    // OPTIMIZATION_r06.md)
     val n = counts.count()
     val local =
       if (n <= localThreshold)
