@@ -71,7 +71,8 @@ object Bench {
 
   /** Stage-attributed wall times: the KgPipeline stage functions that the
     * fused run composes, each materialized (cache + count) so the deltas
-    * isolate one stage; `s6_emit` times the fused run's one-join emit. The
+    * isolate one stage; `s6_emit` times the fused run's map-side S5
+    * scoring and S6 emit, which have no Spark stage of their own. The
     * sum slightly exceeds a fused end-to-end run (caching overhead), which
     * is why the headline `kg_pipeline` number comes from the un-instrumented
     * runs instead. `unpersistEagerly` drops each upstream cache as soon as
@@ -101,15 +102,13 @@ object Bench {
     val convs = ConvFinalize.runClustered(extracted).cache()
     phase("s4_conv")(convs.count())
     if (unpersistEagerly) extracted.unpersist()
-    val si = KgPipeline.scoreConvs(convs).cache()
-    phase("s5_scoring")(si.count())
     val canon = phase("s5_linking") {
       val c = Linking.canonicalize(KgPipeline.orgMentions(convs)).cache()
       c.count(); c
     }
-    val nTriples = phase("s6_emit")(KgPipeline.emitTriples(convs, si, canon).count())
+    val nTriples = phase("s6_emit")(KgPipeline.emitTriples(convs, canon).count())
     if (!unpersistEagerly) Seq(cleaned, tagged, extracted).foreach(_.unpersist())
-    Seq(convs.toDF(), si, canon).foreach(_.unpersist())
+    Seq(convs.toDF(), canon).foreach(_.unpersist())
     (out.toSeq, nTriples)
   }
 

@@ -57,36 +57,25 @@ object KgPipeline {
     val tagged = SectionTagger.predict(tagger, cleanTurns(turns))
     val extracted = TurnExtract.extract(tagged, extractDates)
     val convs = ConvFinalize.runClustered(extracted).cache()
-    val si = scoreConvs(convs).cache()
-    emitTriples(convs, si, Linking.canonicalize(orgMentions(convs)))
+    emitTriples(convs, Linking.canonicalize(orgMentions(convs)))
   }
-
-  /** S5 scoring — (conv_id, sector, isco3) over the exploded skills. */
-  def scoreConvs(convs: Dataset[ConvExtract])(implicit spark: SparkSession): DataFrame =
-    Scoring.sectorAndIsco(convs.select(col("conv_id"), explode(col("skills")).as("skill")))
 
   /** S5 linking input — one `surface` row per org mention. */
   def orgMentions(convs: Dataset[ConvExtract]): DataFrame =
     convs.toDF().select(explode(col("orgs")).as("surface"))
 
-  /** S5 enrichment — (conv_id, sector, estimated_salary) resolved against
-    * `si` in ONE conv-scale join chain: si ⟕ convLoc ⟕ broadcast dim. A
-    * missed location or dim key just leaves estimated_salary null, so the
-    * left joins keep exactly the estimates an inner join would find.
+  /** S5 scoring + S6 emit. A conversation's sector, ISCO code and salary
+    * estimate depend only on its own skills and location (the reference
+    * scores each posting on its own, extractor.py:95-128), so both run
+    * map-side over the convs: [[Scoring.enrich]] against the weight and
+    * salary tables every executor already holds, then
+    * [[TripleEmit.convTriples]] — no join, no exchange. Only the org
+    * triples meet another table, the cross-conversation canonical map.
     */
-  def enrichScores(si: DataFrame, convs: DataFrame)(implicit spark: SparkSession): DataFrame = {
-    val convLoc = convs.select(col("conv_id"), col("location"))
-      .filter(col("location").isNotNull)
-    si.select(col("conv_id"), col("sector"), col("isco3"))
-      .join(convLoc, Seq("conv_id"), "left")
-      .join(broadcast(Scoring.estimateDim), Seq("location", "isco3"), "left")
-      .select(col("conv_id"), col("sector"), col("estimated_salary"))
+  def emitTriples(convs: Dataset[ConvExtract], orgCanonical: DataFrame)(
+      implicit spark: SparkSession): Dataset[Triple] = {
+    import spark.implicits._
+    convs.flatMap(c => TripleEmit.convTriples(Scoring.enrich(c)))
+      .union(TripleEmit.orgTriples(convs, orgCanonical))
   }
-
-  /** S6 emit — the enrichment above, then [[TripleEmit.runEnriched]]'s
-    * single conv-scale left join plus the canonicalized org triples.
-    */
-  def emitTriples(convs: Dataset[ConvExtract], si: DataFrame, orgCanonical: DataFrame)(
-      implicit spark: SparkSession): Dataset[Triple] =
-    TripleEmit.runEnriched(convs, enrichScores(si, convs.toDF()), orgCanonical)
 }

@@ -507,8 +507,7 @@ object PipelineMain {
     // ---- s6: scoring + triple emission, partitioned by pred ----
     if (active("s6_triples")) {
       val convs = spark.read.parquet(path("s4_conv")).as[ConvExtract]
-      val triples = KgPipeline.emitTriples(convs, KgPipeline.scoreConvs(convs),
-        spark.read.parquet(path("s5_entities")))
+      val triples = KgPipeline.emitTriples(convs, spark.read.parquet(path("s5_entities")))
       if (a.getOrElse("merge-append", "false").toBoolean) {
         // MERGE-style incremental emit: only triples of subjects not yet in
         // the table are appended (reference backup-table swap semantics,

@@ -10,20 +10,12 @@ import org.apache.spark.sql.SparkSession
   * runtime the same way they would on a 1000-executor cluster.
   */
 object Sessions {
-  /** Shuffle/spill scratch space (guide §2.1: "local disk bandwidth for
-    * shuffle files can be the tighter limit"): thread-dump sampling of the
-    * kg pipeline showed ~24% of active executor samples inside shuffle
-    * file open/write/mmap on this sandbox's virtio disk, so default the
-    * local dir to the host's tmpfs when one exists — the standard RAM-disk
-    * shuffle tuning for memory-rich nodes. On a real cluster operators
-    * point this at striped NVMe instead (SPARK_GRAFT_LOCAL_DIR, or leave
-    * unset to fall back to Spark's default java.io.tmpdir behavior).
+  /** Shuffle/spill scratch: `SPARK_GRAFT_LOCAL_DIR` when set, else Spark's
+    * own default. A tmpfs speeds shuffle-heavy local runs (thread dumps
+    * showed ~24% of executor samples in shuffle file I/O on a virtio disk)
+    * but takes memory from the executors, so it is opt-in.
     */
-  private def localDir: Option[String] =
-    sys.env.get("SPARK_GRAFT_LOCAL_DIR").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm/graft-spark") else None
-    }
+  private def localDir: Option[String] = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
 
   def local(cores: Int = 32, shufflePartitions: Int = -1, appName: String = "graft"): SparkSession = {
     val sp = if (shufflePartitions > 0) shufflePartitions else cores

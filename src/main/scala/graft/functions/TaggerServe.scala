@@ -24,7 +24,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Only the LR pipeline shape compiles; anything else (e.g. the
   * NaiveBayes alternate) falls back to the PipelineModel path.
+  *
+  * The serial version is declared, so a tagger shipped to executors (it
+  * travels inside every task's codegen references) deserializes by field
+  * layout, not by a compiler-derived hash that any added member changes.
   */
+@SerialVersionUID(1L)
 final class CompiledTagger(
     val vocab1: java.util.HashMap[String, Integer],
     val vocab2: java.util.HashMap[String, Integer],

@@ -7,12 +7,15 @@ import org.apache.spark.sql.functions._
 import graft.rules.DictRules
 import graft.sources.Dims
 
-/** Taxonomy scoring as broadcast joins (X15 sector, X16 ISCO walk +
-  * salary estimate). The reference walks in-memory trees per posting
-  * (utilities.py:678-742); here the propagated trees are precomputed
-  * weight tables (A8/A9 rollup) broadcast to a join + partial aggregation —
-  * the shape that survives 10^12 rows: explode(skills) is narrow, the
-  * groupBy is a map-side-combined partial agg over ≤ |nodes| rows per conv.
+/** Taxonomy scoring (X15 sector, X16 ISCO walk + salary estimate). The
+  * reference walks in-memory trees per posting (utilities.py:678-742); here
+  * the propagated trees are precomputed weight tables (A8/A9 rollup).
+  *
+  * The pipeline scores with [[enrich]]: one conversation at a time, against
+  * the weight rows and salary dims held in every executor's JVM, so S5 adds
+  * no job and no exchange. The broadcast-join forms below ([[sectors]],
+  * [[isco3]], [[sectorAndIsco]], [[estimateDim]]) are the reference twins
+  * the per-conversation path is pinned against (MapSideEmitSpec, q50).
   */
 object Scoring {
 
@@ -92,12 +95,12 @@ object Scoring {
     spark.createDataFrame(rows).toDF("location", "isco3", "estimated_salary")
   }
 
-  /** Single-pass variant used by the pipeline: ONE broadcast join + ONE
-    * partial-aggregated shuffle + ONE mapGroups computes the NACE sector
-    * argmax and the whole 3-level ISCO walk together. The per-op functions
-    * above are the readable reference implementations (the differential
-    * spec pins this fast path against them); at bench scale the 12-stage
-    * chain of windows/joins was pure scheduling latency.
+  /** Single-pass join twin: ONE broadcast join + ONE partial-aggregated
+    * shuffle + ONE mapGroups computes the NACE sector argmax and the whole
+    * 3-level ISCO walk together. The per-op functions above are the
+    * readable reference implementations (the differential spec pins this
+    * path against them). Kept as the distributed reference for
+    * [[sectorIscoPure]]; the pipeline scores with [[enrich]].
     * Returns (conv_id, sector, isco3).
     */
   def sectorAndIsco(convSkills: DataFrame)(implicit spark: SparkSession): DataFrame = {
@@ -145,8 +148,7 @@ object Scoring {
     * weight row yields None (the join produces no rows, so the batch path
     * emits no sector/estimate triples for it — unlike DictRules.sector,
     * which scores every node and returns the head on an all-zero match).
-    * Used by the streaming completion path so streamed triples stay
-    * bit-identical to batch for taxonomy-orphan skill sets too.
+    * [[enrich]] scores every conversation with it, batch and streaming.
     */
   def sectorIscoPure(skills: Seq[String]): Option[(String, String)] = {
     val acc = scala.collection.mutable.HashMap.empty[(Int, String), Double]
@@ -175,7 +177,7 @@ object Scoring {
     }
   }
 
-  /** Pure twin of the estimate dim join (graft.KgPipeline.enrichScores):
+  /** Pure twin of the left joins onto [[estimateDim]] by (location, isco3):
     * None unless the walked isco3 is a real occupation code AND the
     * location names a dim country.
     */
@@ -186,4 +188,22 @@ object Scoring {
       if Dims.occupationByIsco.contains(isco3)
     } yield (Dims.monthlySalary(country.iso2, isco3) * 12 *
       Dims.fxToEur(country.currency)).toInt
+
+  /** S5 for one conversation: sector and salary estimate from its own
+    * skills and location, with the join twins' edge semantics — no sector
+    * and no estimate when no skill carries taxonomy mass (the inner join
+    * finds no row), no estimate unless the walk reaches a real occupation
+    * code and the location names a dim country.
+    */
+  def enrich(c: ConvExtract): ConvFull = enrich(c, sectorIscoPure(c.skills))
+
+  /** [[enrich]] from a given (sector, isco3) score, the shape one
+    * [[sectorAndIsco]] row carries.
+    */
+  def enrich(c: ConvExtract, si: Option[(String, String)]): ConvFull =
+    ConvFull(c.conv_id, c.title, c.skills, c.employment, c.location,
+      c.education, c.sal_values, c.currencies, c.work_hours, c.tools,
+      c.start_dates, c.deadline_dates,
+      sector = si.map(_._1),
+      estimated_salary = si.flatMap { case (_, code) => estimatePure(code, c.location) })
 }

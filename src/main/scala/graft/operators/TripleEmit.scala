@@ -38,8 +38,9 @@ object TripleEmit {
       "start_date", "deadline_date")
 
   /** Pure per-conversation emission of the non-org triples — shared by the
-    * batch path below and the streaming completion path
-    * (streaming.StreamingTriples), so the two emit bit-identical rows.
+    * batch emit (graft.KgPipeline.emitTriples), its join twin below and the
+    * streaming completion path (streaming.StreamingTriples), so all three
+    * emit bit-identical rows.
     */
   def convTriples(c: ConvFull): Seq[Triple] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[Triple]
@@ -69,10 +70,9 @@ object TripleEmit {
     out.toSeq
   }
 
-  /** Batch emit: `enriched` carries (conv_id, sector, estimated_salary),
-    * at most one row per conv (graft.KgPipeline.enrichScores builds it), so
-    * the non-org triples cost ONE conv-scale left join. Org triples go
-    * through the entity-linking canonical map.
+  /** Join twin of graft.KgPipeline.emitTriples, kept as its reference:
+    * `enriched` carries (conv_id, sector, estimated_salary), at most one
+    * row per conv, and the non-org triples cost ONE conv-scale left join.
     */
   def runEnriched(
       convs: Dataset[ConvExtract],
@@ -83,12 +83,21 @@ object TripleEmit {
       .join(enriched, Seq("conv_id"), "left")
       .as[ConvFull]
       .flatMap(convTriples _)
-    val orgs = convs.select(col("conv_id"), explode(col("orgs")).as("surface"))
+    base.union(orgTriples(convs, orgCanonical))
+  }
+
+  /** `hiring_organization` triples: each org surface through the
+    * entity-linking canonical map (a surface the map lacks stands for
+    * itself), one triple per distinct (conv, canonical) pair.
+    */
+  def orgTriples(convs: Dataset[ConvExtract], orgCanonical: DataFrame)(
+      implicit spark: SparkSession): Dataset[Triple] = {
+    import spark.implicits._
+    convs.select(col("conv_id"), explode(col("orgs")).as("surface"))
       .join(orgCanonical, Seq("surface"), "left")
       .select(col("conv_id").as("subj"), lit("hiring_organization").as("pred"),
         coalesce(col("canonical"), col("surface")).as("obj"))
       .distinct()
       .as[Triple]
-    base.union(orgs)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 import graft.ml.SectionTagger
 import graft.model.Triple
-import graft.operators.{ConvExtract, ConvFinalize, ConvFull, SalStruct, TripleEmit, TurnExtract}
+import graft.operators.{ConvExtract, ConvFinalize, SalStruct, Scoring, TripleEmit, TurnExtract}
 
 /** Streaming KG construction end-to-end: turns stream in, conversations
   * accumulate in keyed state, and when a conversation goes quiet (no turn
@@ -19,9 +19,9 @@ import graft.operators.{ConvExtract, ConvFinalize, ConvFull, SalStruct, TripleEm
   *   clean (compiled expression) → tag (compiled LR serve) → per-turn
   *   extraction (TurnExtract) → stateful buffer per conv_id
   *   (flatMapGroupsWithState, event-time timeout) → ConvFinalize
-  *   .finalizeConv → pure sector/isco/estimate twins (differential-pinned
-  *   equal to the batch broadcast joins in OperatorSpec) →
-  *   TripleEmit.convTriples.
+  *   .finalizeConv → Scoring.enrich → TripleEmit.convTriples — the
+  *   per-conversation scorer and emitter the batch KgPipeline.emitTriples
+  *   runs too.
   *
   * The one documented divergence: `hiring_organization` objects are the
   * RAW surfaces here — canonicalization is a cross-conversation
@@ -57,26 +57,12 @@ object StreamingTriples {
     */
   final case class ConvBuf(turns: Seq[ConvFinalize.SlimTurn], maxTsMs: Long)
 
-  /** Pure conv-level completion: batch ConvFinalize kernel + the pure
-    * scoring twins + the shared TripleEmit body + surface-org triples.
+  /** Pure conv-level completion: batch ConvFinalize kernel + the batch
+    * per-conversation scorer and emitter + surface-org triples.
     */
   def completeConv(convId: String, turns: Seq[ConvFinalize.SlimTurn]): Seq[Triple] = {
     val c: ConvExtract = ConvFinalize.finalizeConv(convId, turns)
-    // Scoring.sectorIscoPure/estimatePure replicate the batch joins' exact
-    // edge semantics (no row when no skill carries taxonomy mass; no
-    // estimate unless the walked code is a real occupation and the
-    // location names a dim country) — DictRules.sector would fabricate a
-    // head-node sector for taxonomy-orphan skill sets the batch path
-    // leaves sector-less
-    val si = graft.operators.Scoring.sectorIscoPure(c.skills)
-    val sector = si.map(_._1)
-    val estimate = si.flatMap { case (_, code) =>
-      graft.operators.Scoring.estimatePure(code, c.location)
-    }
-    val full = ConvFull(c.conv_id, c.title, c.skills, c.employment, c.location,
-      c.education, c.sal_values, c.currencies, c.work_hours, c.tools,
-      c.start_dates, c.deadline_dates, sector, estimate)
-    TripleEmit.convTriples(full) ++
+    TripleEmit.convTriples(Scoring.enrich(c)) ++
       c.orgs.map(s => Triple(convId, "hiring_organization", s))
   }
 

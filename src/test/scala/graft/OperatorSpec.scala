@@ -23,14 +23,19 @@ class OperatorSpec extends SparkSpec {
 
     val sectors = Scoring.sectors(convSkills).as[(String, String)].collect().toMap
     val isco = Scoring.isco3(convSkills).as[(String, String)].collect().toMap
-    // estimates through the production S5 enrichment (left joins), so the
-    // path the pipeline emits from is the one pinned to the pure reference
-    val est = KgPipeline.enrichScores(Scoring.sectorAndIsco(convSkills), convLoc)
+    // estimates through the S5 join twin (left joins) and through the
+    // per-conversation scorer the pipeline emits from, both pinned to the
+    // pure reference
+    val est = ScoringJoin.enrichScores(Scoring.sectorAndIsco(convSkills), convLoc)
       .select("conv_id", "estimated_salary").as[(String, Int)].collect().toMap
     cases.foreach { case (c, sk, loc) =>
       assert(sectors(c) == DictRules.sector(sk), s"sector $c")
       assert(isco(c) == DictRules.isco3(sk), s"isco $c")
       assert(est(c) == DictRules.estimateSalary(sk, Some(loc)).get, s"estimate $c")
+      val full = Scoring.enrich(ConvExtract(c, "", sk, None, Some(loc), None,
+        Nil, Nil, None, Nil, Nil, Nil, Nil))
+      assert(full.sector.contains(DictRules.sector(sk)), s"enrich sector $c")
+      assert(full.estimated_salary == DictRules.estimateSalary(sk, Some(loc)), s"enrich estimate $c")
     }
   }
 
