@@ -16,9 +16,11 @@ object KgPipeline {
 
   /** S1 — canonical clean chain as one codegen'd projection (the
     * precompiled clean_text expression; the pure-Column chain it is pinned
-    * against lives in operators.CleanText).
+    * against lives in operators.CleanText). Any frame with a `text` column:
+    * batch turns, the turn stream and the tagger's training frame all
+    * clean through this one expression.
     */
-  def cleanTurns(turns: Dataset[Turn]): DataFrame =
+  def cleanTurns(turns: Dataset[_]): DataFrame =
     turns.toDF().withColumn("text_clean",
       graft.functions.CleanFunctions.clean_text(col("text")))
 
@@ -32,8 +34,7 @@ object KgPipeline {
     val labeled = spark.range(firstConv, firstConv + nConvs)
       .flatMap(i => TranscriptGen.labeledTurnsFor(i, seed).map { case (t, c) => (t.text, c) })
       .toDF("text", "category")
-    labeled.withColumn("text_clean", graft.functions.CleanFunctions.clean_text(col("text")))
-      .select("text_clean", "category")
+    cleanTurns(labeled).select("text_clean", "category")
       // pin partition assignment AND in-partition order so model fitting
       // (treeAggregate fold order, per-partition sampling) is bit-identical
       // across parallelism levels — the q23/q31 golden oracles rely on it

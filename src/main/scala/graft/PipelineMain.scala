@@ -21,7 +21,7 @@ import graft.sources.TranscriptGen
   * Usage:
   *   runMain graft.PipelineMain --out /tmp/kg --convs 1000 [--seed 42]
   *     [--from-stage s0] [--to-stage s6] [--skip s2,s3] [--cores 32]
-  *     [--extract-dates true] [--merge-append true] [--salted-conv true]
+  *     [--extract-dates true] [--merge-append true]
   *     [--jdbc-url jdbc:derby:memory:kg;create=true] [--jdbc-table kg_wide]
   *     [--jdbc-batchsize 1000]
   *     [--stream true [--stream-in DIR] [--stream-gap-ms 60000]
@@ -465,28 +465,25 @@ object PipelineMain {
       // may land reordered in one partition. runClustered THROWS on that
       // (never corrupts) and the driver falls back to the order-insensitive
       // salted path — the same planner decision an Iceberg sort-order-aware
-      // scan would make. --salted-conv true forces the fallback directly.
+      // scan would make.
       def writeConv(df: DataFrame): Unit = write("s4_conv", df, Seq("s3_extract"))
-      if (a.getOrElse("salted-conv", "false").toBoolean)
-        writeConv(ConvFinalize.run(extracted).toDF())
-      else
-        try writeConv(ConvFinalize.runClustered(extracted).toDF())
-        catch {
-          // Match the dedicated contract-violation type by class (executor
-          // exceptions usually deserialize intact on the driver) or by its
-          // class NAME inside a Spark-wrapped message — never by a broader
-          // substring like "ConvFinalize.", which any unrelated failure
-          // whose stack trace merely passes through the stage would match,
-          // silently re-running (and possibly mis-merging) on the salted
-          // path instead of surfacing the real error.
-          case e: Exception if Iterator.iterate(e: Throwable)(_.getCause)
-              .takeWhile(_ != null).take(8)
-              .exists(t => t.isInstanceOf[graft.operators.ConvContractViolation] ||
-                Option(t.getMessage).exists(_.contains("ConvContractViolation"))) =>
-            println("[graft] s4_conv: scan did not preserve the clustered layout; " +
-              "falling back to the salted path")
-            writeConv(ConvFinalize.run(extracted).toDF())
-        }
+      try writeConv(ConvFinalize.runClustered(extracted).toDF())
+      catch {
+        // Match the dedicated contract-violation type by class (executor
+        // exceptions usually deserialize intact on the driver) or by its
+        // class NAME inside a Spark-wrapped message — never by a broader
+        // substring like "ConvFinalize.", which any unrelated failure
+        // whose stack trace merely passes through the stage would match,
+        // silently re-running (and possibly mis-merging) on the salted
+        // path instead of surfacing the real error.
+        case e: Exception if Iterator.iterate(e: Throwable)(_.getCause)
+            .takeWhile(_ != null).take(8)
+            .exists(t => t.isInstanceOf[graft.operators.ConvContractViolation] ||
+              Option(t.getMessage).exists(_.contains("ConvContractViolation"))) =>
+          println("[graft] s4_conv: scan did not preserve the clustered layout; " +
+            "falling back to the salted path")
+          writeConv(ConvFinalize.run(extracted).toDF())
+      }
     }
 
     // ---- s5: entity linking over org mentions ----
@@ -595,7 +592,7 @@ object PipelineMain {
     "maintain-sort-by", "maintain-sort-groups", "maintain-vacuum-hours",
     "maintain-zorder-by", "merge-append", "mor-delete", "mor-col",
     "mor-values", "negatives", "out", "rollback", "rollback-to",
-    "run-id", "salted-conv", "seed", "skip", "stream", "stream-gap-ms",
+    "run-id", "seed", "skip", "stream", "stream-gap-ms",
     "stream-in", "stream-lateness", "stream-sink", "stream-source",
     "history", "tag", "tag-table", "tag-version", "to-stage",
     "alter", "alter-rename", "alter-drop")

@@ -124,10 +124,6 @@ object GoldenPipeline {
     out.toSeq
   }
 
-  /** Golden triples for conv i of the seeded generator. */
-  def triplesForConv(i: Long, seed: Long = 42L, skewConvs: Int = 2, skewTurns: Int = 800): Seq[Triple] =
-    triplesFor(TranscriptGen.labeledTurnsFor(i, seed, skewConvs, skewTurns))
-
   /** Golden triples for the whole generated range, with the org canonical
     * computed the way the linking stage defines it: cluster (= fixture base
     * group, which is what LSH+CC must recover) → most frequent member

@@ -19,32 +19,7 @@ final case class Turn(
     tool: String, // nullable
     ts: Timestamp)
 
-/** A cleaned turn (reference `cleaned_chunk`, ExtractInfo.py:312). */
-final case class CleanTurn(conv_id: String, turn_idx: Int, role: String, text: String, tool: String, text_clean: String)
-
-/** One extraction hit — long form of the reference's per-field
-  * `extracted_<field>.csv` rows (ExtractInfo.py:359-361,515-519).
-  */
-final case class Mention(
-    conv_id: String,
-    turn_idx: Int,
-    pred: String,
-    obj: String,
-    conf: Double,
-    extractor: String)
-
 /** Final KG row — long form of the reference's wide MySQL row
   * (MergeAndExportInfo.py:90). subj is a conv_id or a canonical entity id.
   */
 final case class Triple(subj: String, pred: String, obj: String)
-
-/** Per-stage, per-partition audit row (north_rule: lineage + metrics). */
-final case class LineageRow(
-    run_id: String,
-    stage: String,
-    partition_id: Int,
-    rows_in: Long,
-    rows_out: Long,
-    rejects: Long)
-
-final case class MetricRow(run_id: String, stage: String, key: String, value: Double)

@@ -429,8 +429,8 @@ object GraphMetrics {
     // join's edge side then already satisfies its distribution and only
     // the NODE-scale rank frame crosses the wire each superstep — without
     // this, every superstep re-shuffles all the edges (measured 1.2× on
-    // the 40M-edge GraphScale run, 8→32-core efficiency 0.47 → 0.54 =
-    // this host's memory-copy ceiling)
+    // 40M edges, 8→32-core efficiency 0.47 → 0.54 = that host's
+    // memory-copy ceiling; BENCH_SCALING.md, GraphScale section)
     val ew = e.join(outdeg, Seq("src"))
       .select(col("src"), col("dst"), weightTimesD(col("outdeg")).as("wd"))
       .repartition(col("src"))

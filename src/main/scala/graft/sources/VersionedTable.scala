@@ -2029,7 +2029,7 @@ object VersionedTable {
     })
   }
 
-  /** The file groups APPENDED across versions (fromSeq, toSeq] — the one
+  /** The file groups APPENDED across versions (fromSeq, toSeq] of `vs` — the one
     * manifest walk behind both the streaming source's micro-batches and
     * [[readChangesBetween]]. Per step, decided from manifest evidence
     * alone: an append (dirs superset) contributes its new dirs; a
@@ -2041,10 +2041,6 @@ object VersionedTable {
     * version beats silently re-delivering or dropping. Both endpoints
     * must still be retained (expire makes the walk unanswerable).
     */
-  private[graft] def appendedDirsBetween(table: String, fromSeq: Int,
-      toSeq: Int): Seq[String] =
-    appendedDirsIn(versions(table), table, fromSeq, toSeq)
-
   private[graft] def appendedDirsIn(vs: Seq[Version], table: String, fromSeq: Int,
       toSeq: Int): Seq[String] = {
     require(fromSeq <= toSeq, s"fromSeq $fromSeq > toSeq $toSeq")

@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.ml.SectionTagger
@@ -110,10 +109,6 @@ object StreamingTriples {
     (streamed, batch, canon)
   }
 
-  /** The streaming pipeline: `turns` must carry the input_hint columns
-    * (conv_id, turn_idx, role, text, tool, ts). Emits each conversation's
-    * triples once, when the watermark passes its last turn + gapMs.
-    */
   /** `lateness` (a Spark interval string) in milliseconds. Month-bearing
     * intervals are rejected — their length is calendar-dependent, and the
     * only consumer is flush-offset arithmetic that needs a fixed width.
@@ -140,14 +135,16 @@ object StreamingTriples {
     Seq(first, first + 60000L)
   }
 
+  /** The streaming pipeline: `turns` must carry the input_hint columns
+    * (conv_id, turn_idx, role, text, tool, ts). Emits each conversation's
+    * triples once, when the watermark passes its last turn + gapMs.
+    */
   def triplesStream(turns: DataFrame, tagger: SectionTagger.Trained,
       gapMs: Long = 30L * 60 * 1000, lateness: String = "10 minutes",
       extractDates: Boolean = false)(
       implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
-    val cleaned = turns.withColumn("text_clean",
-      graft.functions.CleanFunctions.clean_text(col("text")))
-    val tagged = SectionTagger.predict(tagger, cleaned)
+    val tagged = SectionTagger.predict(tagger, graft.KgPipeline.cleanTurns(turns))
     val extracted = TurnExtract.extract(tagged, extractDates, keepTs = true)
     extracted
       .select("conv_id", "turn_idx", "tool", "text", "emp_groups", "locations",

@@ -1,13 +1,16 @@
 package graft
 
+import java.io.{ByteArrayOutputStream, File}
 import java.nio.file.Files
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 
 import graft.model.{Triple, Turn}
 
 /** The checkpointing driver on the shared session: a full s0→s6 run, a
-  * resume from s4 and the salted S4 path all land the triples the fused
+  * resume from s4 and a resume whose s3 table breaks the clustered layout
+  * (so s4 falls back to the salted path) all land the triples the fused
   * KgPipeline.computeTriples derives from the same s0 table and tagger.
   */
 class PipelineMainSpec extends SparkSpec {
@@ -25,9 +28,9 @@ class PipelineMainSpec extends SparkSpec {
       .collect().toSet
   }
 
-  private def landed(): Set[Triple] = {
+  private def landed(dir: String = out): Set[Triple] = {
     import spark.implicits._
-    spark.read.parquet(s"$out/s6_triples").as[Triple].collect().toSet
+    spark.read.parquet(s"$dir/s6_triples").as[Triple].collect().toSet
   }
 
   private def assertSameTriples(got: Set[Triple], what: String): Unit = {
@@ -53,12 +56,23 @@ class PipelineMainSpec extends SparkSpec {
     }
   }
 
-  test("a resume from s4 and the salted S4 path land the same s6 set") {
+  test("a resume from s4 lands the same s6 set") {
     PipelineMain.run(Array("--out", out, "--from-stage", "s4", "--to-stage", "s6",
       "--run-id", "resume"))
     assertSameTriples(landed(), "resume from s4")
-    PipelineMain.run(Array("--out", out, "--from-stage", "s4", "--salted-conv", "true",
-      "--run-id", "salted"))
-    assertSameTriples(landed(), "salted s4")
+  }
+
+  test("s3 rows in random order: s4 falls back to the salted path, same s6 set") {
+    val shuffled = Files.createTempDirectory("graft-pipeline-salted").resolve("kg").toString
+    spark.read.parquet(s"$out/s3_extract").orderBy(rand(7))
+      .write.parquet(s"$shuffled/s3_extract")
+    FileUtils.copyDirectory(new File(s"$out/s2_model"), new File(s"$shuffled/s2_model"))
+    val stdout = new ByteArrayOutputStream()
+    Console.withOut(stdout) {
+      PipelineMain.run(Array("--out", shuffled, "--from-stage", "s4", "--run-id", "salted"))
+    }
+    assert(stdout.toString("UTF-8").contains("falling back to the salted path"),
+      "the clustered s4 path accepted a shuffled s3 table")
+    assertSameTriples(landed(shuffled), "salted s4")
   }
 }

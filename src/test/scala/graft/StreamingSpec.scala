@@ -1,78 +1,10 @@
 package graft
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions._
 
-import graft.model.{Triple, Turn}
 import graft.sources.TranscriptGen
-import graft.streaming.StreamingIngest
 
 class StreamingSpec extends SparkSpec {
-
-  test("incremental resume: only unprocessed conversations pass the anti-join") {
-    import spark.implicits._
-    val turns = TranscriptGen.dataset(spark, 10).toDF()
-    val existing = Seq(Triple("conv-00000000", "job_title", "x"),
-      Triple("conv-00000003", "skill", "y")).toDS().toDF()
-    val fresh = StreamingIngest.incrementalNewConvs(turns, existing)
-    val convs = fresh.select("conv_id").distinct().as[String].collect().toSet
-    assert(!convs.contains("conv-00000000") && !convs.contains("conv-00000003"))
-    assert(convs.size == 8)
-  }
-
-  test("structured streaming ingest: stateless extraction over a MemoryStream") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val stream = MemoryStream[Turn]
-    val extracted = StreamingIngest.extractStream(stream.toDF())
-    val query = extracted
-      .select(col("conv_id"), col("turn_idx"), col("emp_groups"), col("locations"))
-      .writeStream.format("memory").queryName("stream_extract").outputMode("append").start()
-    try {
-      stream.addData(TranscriptGen.turnsFor(0L, 42L, 0, 0))
-      query.processAllAvailable()
-      val rows = spark.table("stream_extract").collect()
-      assert(rows.nonEmpty)
-      val emp = spark.table("stream_extract")
-        .select(explode(col("emp_groups"))).as[String].collect()
-      // conv 0 plants at least one employment surface when hasEmployment
-      val f = TranscriptGen.factsFor(0L, 42L, 0, 0)
-      if (f.hasEmployment) assert(emp.nonEmpty)
-    } finally query.stop()
-  }
-
-  test("watermarked windowed aggregation: windows finalize, late events drop") {
-    import java.sql.Timestamp
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    def turn(cid: String, idx: Int, role: String, minute: Int): graft.model.Turn =
-      graft.model.Turn(cid, idx, role, "text here", null,
-        new Timestamp(minute * 60000L))
-    val stream = MemoryStream[graft.model.Turn]
-    val rates = StreamingIngest.windowedTurnRates(stream.toDF())
-    val query = rates.writeStream.format("memory").queryName("turn_rates")
-      .outputMode("append").start()
-    try {
-      // window [0,5): 2 user + 1 assistant; window [5,10): 1 user
-      stream.addData(turn("c1", 0, "user", 1), turn("c1", 1, "user", 3),
-        turn("c1", 2, "assistant", 4), turn("c2", 0, "user", 6))
-      query.processAllAvailable()
-      // advance the watermark far past [0,5)+10min lateness → it finalizes
-      stream.addData(turn("c3", 0, "user", 40))
-      query.processAllAvailable()
-      // a LATE user turn into the finalized [0,5) window must be dropped
-      stream.addData(turn("c9", 0, "user", 2))
-      query.processAllAvailable()
-      stream.addData(turn("c3", 1, "user", 70)) // flush remaining windows
-      query.processAllAvailable()
-      val got = spark.table("turn_rates")
-        .select(col("window_start").cast("long"), col("role"), col("turns"))
-        .as[(Long, String, Long)].collect().toSet
-      assert(got.contains((0L, "user", 2L)), s"late event not dropped or window wrong: $got")
-      assert(got.contains((0L, "assistant", 1L)))
-      assert(got.contains((300L, "user", 1L)))
-    } finally query.stop()
-  }
 
   test("exactly-once sink: restart resumes, crash-replay deduplicates") {
     import spark.implicits._
@@ -139,22 +71,5 @@ class StreamingSpec extends SparkSpec {
       "checkpoint reset must mint a fresh txn namespace")
     assert(VersionedTable.read(table)
       .select("conv_id").distinct().count() == 3)
-  }
-
-  test("stateful running employment resolution emits priority winners") {
-    import spark.implicits._
-    val turns = TranscriptGen.dataset(spark, 6, 42L, 0, 0).toDF()
-    val extracted = StreamingIngest.extractStream(turns)
-    val updates = StreamingIngest.runningEmployment(extracted).collect()
-    val want = (0 until 6).flatMap { i =>
-      val f = TranscriptGen.factsFor(i.toLong, 42L, 0, 0)
-      if (f.hasEmployment)
-        graft.rules.Rules.priorityEmployment(
-          graft.rules.Rules.employmentGroupsOf(f.empSurfaces.flatMap(s =>
-            graft.rules.Rules.employmentSurfaces(s)))).map(f.convId -> _)
-      else None
-    }.toMap
-    val got = updates.map(u => u.conv_id -> u.employment).toMap
-    want.foreach { case (c, g) => assert(got.get(c).contains(g), s"conv $c") }
   }
 }
