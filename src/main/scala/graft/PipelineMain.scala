@@ -24,9 +24,8 @@ import graft.sources.TranscriptGen
   *     [--extract-dates true] [--merge-append true]
   *     [--jdbc-url jdbc:derby:memory:kg;create=true] [--jdbc-table kg_wide]
   *     [--jdbc-batchsize 1000]
-  *     [--stream true [--stream-in DIR] [--stream-gap-ms 60000]
-  *      [--stream-lateness "1 minute"] [--stream-sink merge|versioned]
-  *      [--stream-source file|versioned]
+  *     [--stream true [--stream-in TABLE] [--stream-gap-ms 60000]
+  *      [--stream-lateness "1 minute"]
   *      [--bloom-cols subj[,col...] [--bloom-fpp 0.01]]]
   *     [--maintain TABLE [--maintain-sort-by COL | --maintain-zorder-by C1,C2]
   *      [--maintain-sort-groups 8]
@@ -37,31 +36,24 @@ import graft.sources.TranscriptGen
   *     [--history TABLE]
   *
   * `--stream true` replaces the s3-s6 batch stages with the STREAMING
-  * construction path (StreamingTriples): a parquet file-source stream of
-  * turns feeds the event-time-timeout completion operator, and each
-  * micro-batch MERGE-appends its completed conversations' triples into
-  * s6_stream_triples (checkpointed — kill and re-run resumes from the
-  * stream checkpoint without reprocessing). The driver seeds the stream
-  * dir from s0 when absent and appends two far-future sentinel turns at
-  * the end so quiet conversations flush before it exits.
-  *
-  * `--stream-sink versioned` lands the stream in a VersionedTable at
-  * s6_stream_triples_v through the EXACTLY-ONCE batch commit
-  * (VersionedTable.appendOnce keyed `kg_stream#<batchId>`): a replayed
-  * micro-batch after a crash between sink write and checkpoint commit
-  * no-ops through the manifest txn ledger. Per-batch cost is O(batch) —
-  * one appended file group + one manifest line — where the default
-  * merge sink's anti-join reads the existing table's key set every
-  * batch (O(table) at 10^12-turn scale); the accreted micro-batch
-  * groups fold back via VersionedTable.compact.
-  *
-  * `--stream-source versioned` replaces the file-source stream with the
-  * `graft-versioned` streaming source: turns live in a VersionedTable
-  * (seeded from s0 when empty) and the query tails its manifest commits
-  * — offsets are version seqs, each micro-batch reads only the newly
-  * appended file groups. With both flags the pipeline is table-to-table:
-  * resumable from two checkpointed offsets, exactly-once on the sink's
-  * txn ledger, and incremental cost O(new commits) end to end.
+  * construction path (StreamingTriples), table to table. Turns live in a
+  * VersionedTable at `--stream-in` (default `<out>/s0_turns_v`, seeded
+  * from s0 in one manifest commit when it has no version) and the query
+  * tails its commits through the `graft-versioned` source: offsets are
+  * version seqs, each micro-batch reads only the newly appended file
+  * groups, and any Spark producer can add turns with
+  * `write.format("graft-versioned").mode("append")`. Completed
+  * conversations' triples land in the VersionedTable
+  * `<out>/s6_stream_triples_v` through the `graft-versioned` sink, which
+  * commits each micro-batch exactly once (VersionedTable.appendOnce keyed
+  * `<checkpoint query id>#<batchId>`): a batch replayed after a crash
+  * between sink commit and checkpoint commit no-ops through the manifest
+  * txn ledger. The stream checkpoint is `<out>/stream_checkpoint`, so a
+  * re-run resumes from the checkpointed source offset and lands nothing
+  * twice. Per-batch cost is one appended file group + one manifest line;
+  * `--maintain` folds the accreted groups back. The driver appends two
+  * far-future sentinel turns at the end so quiet conversations flush
+  * before it exits.
   */
 object PipelineMain {
 
@@ -294,12 +286,15 @@ object PipelineMain {
       val inputSnaps = inputs.map { in =>
         s"$in:${graft.sources.TableIO.readSnapshotId(path(in)).map(_.toString).getOrElse("-")}"
       }.mkString(",")
-      val rows = df.groupBy(spark_partition_id().as("partition_id"))
-        .agg(count(lit(1)).as("rows_out"))
+      // one scan: the per-partition counts (one row per read partition)
+      // come back to the driver, then are written and summed there
+      val perPartition = df.groupBy(spark_partition_id().as("partition_id"))
+        .agg(count(lit(1)).as("rows_out")).as[(Int, Long)].collect().toSeq
+      perPartition.toDF("partition_id", "rows_out")
         .withColumn("run_id", lit(runId)).withColumn("stage", lit(stage))
         .withColumn("input_snapshots", lit(inputSnaps))
-      rows.write.mode(SaveMode.Append).parquet(s"$out/lineage")
-      val total = rows.agg(sum("rows_out")).as[Long].head()
+        .write.mode(SaveMode.Append).parquet(s"$out/lineage")
+      val total = perPartition.map(_._2).sum
       println(s"[graft] $stage rows_out=$total -> ${path(stage)}")
     }
 
@@ -328,72 +323,27 @@ object PipelineMain {
     }
 
     // ---- streaming mode: the whole construction as one StreamingQuery ----
-    val streaming = a.getOrElse("stream", "false").toBoolean
-    if (streaming) {
-      import java.nio.file.{Files, Paths}
+    if (a.getOrElse("stream", "false").toBoolean) {
+      import graft.sources.VersionedTable
       val tagger = loadTagger(path("s2_model"))
-      // --stream-source versioned: the input side of the table-to-table
-      // story — turns live in a VersionedTable and the query TAILS its
-      // commits (offsets = version seqs, each batch reads only the newly
-      // appended file groups). With --stream-sink versioned both edges of
-      // the pipeline are manifest-committed: resume is two checkpointed
-      // offsets and replay safety is the sink's txn ledger.
-      val srcVersioned = a.getOrElse("stream-source", "file") == "versioned"
-      val streamIn = a.getOrElse("stream-in",
-        if (srcVersioned) s"$out/s0_turns_v" else s"$out/stream_in")
+      val streamIn = a.getOrElse("stream-in", s"$out/s0_turns_v")
+      val outPath = path("s6_stream_triples_v")
       val gapMs = a.getOrElse("stream-gap-ms", "60000").toLong
       val lateness = a.getOrElse("stream-lateness", "1 minute")
-      val turnsStream =
-        if (srcVersioned) {
-          if (graft.sources.VersionedTable.versions(streamIn).isEmpty)
-            graft.sources.VersionedTable.overwrite(
-              spark.read.parquet(path("s0_transcripts")), streamIn)
-          spark.readStream.format("graft-versioned").load(streamIn)
-        } else {
-          if (!Files.exists(Paths.get(streamIn)))
-            spark.read.parquet(path("s0_transcripts")).write.parquet(streamIn)
-          val schema = org.apache.spark.sql.Encoders.product[Turn].schema
-          spark.readStream.schema(schema).parquet(streamIn)
-        }
-      val versionedSink = a.getOrElse("stream-sink", "merge") == "versioned"
-      val outPath =
-        if (versionedSink) path("s6_stream_triples_v") else path("s6_stream_triples")
+      // the seed is one manifest commit: a crash mid-write leaves no
+      // version, so the next run seeds again instead of streaming a
+      // partial s0
+      if (VersionedTable.versions(streamIn).isEmpty)
+        VersionedTable.overwrite(spark.read.parquet(path("s0_transcripts")), streamIn)
       // --bloom-cols subj[,pred,...]: declare bloom-sidecar columns on the
-      // landed triple table — every appendOnce batch then carries blooms,
-      // so "fetch one conversation's triples" opens only the bloom-positive
+      // landed triple table — every batch commit then carries blooms, so
+      // "fetch one conversation's triples" opens only the bloom-positive
       // file groups (equality pruning where min/max stats never can; see
       // VersionedTable.setBloomColumns / q59)
       a.get("bloom-cols").foreach { cs =>
-        // silently dropping the flag would leave the user believing point
-        // lookups are bloom-indexed while every scan opens all groups
-        require(versionedSink,
-          "--bloom-cols needs --stream-sink versioned (blooms live in the " +
-            "versioned table's sidecars)")
-        graft.sources.VersionedTable.setBloomColumns(outPath,
+        VersionedTable.setBloomColumns(outPath,
           cs.split(',').toSeq.map(_.trim).filter(_.nonEmpty),
           a.getOrElse("bloom-fpp", "0.01").toDouble)
-      }
-      val sink: (DataFrame, Long) => Unit = (batch, batchId) => {
-        val rows = batch.filter(col("subj") =!= "graft-sentinel")
-        if (versionedSink) {
-          // exactly-once: the txn ledger absorbs a crash-replayed batch;
-          // empty batches skip (replaying an empty batch appends nothing
-          // either way, and skipping avoids one empty group per idle tick)
-          if (!rows.isEmpty) {
-            // txn namespace = the checkpoint's persisted query id:
-            // batchIds are only meaningful relative to the checkpoint —
-            // wiping it to reprocess must NOT replay-swallow batch 0
-            val committed = graft.streaming.VersionedSink.commitBatch(
-              rows, outPath, graft.streaming.VersionedSink
-                .checkpointTxnNamespace(spark, s"$out/stream_checkpoint"), batchId)
-            println(s"[graft] stream batch=$batchId " +
-              s"${if (committed) "appended exactly-once" else "replay no-op"} -> $outPath")
-          }
-        } else if (!rows.isEmpty) {
-          graft.sources.TableIO.mergeNewKeys(rows, outPath, Seq("subj"),
-            "s6_stream_triples", partitionBy = Seq("pred"))
-          println(s"[graft] stream batch=$batchId merged -> $outPath")
-        }
       }
       // sentinel rows persist their event times into the checkpoint's
       // watermark (by design: that is what fires the timeouts), so a
@@ -402,20 +352,18 @@ object PipelineMain {
       // watermark semantics, widened by the flush offsets; backfills of
       // older event times belong on the batch path (--merge-append)
       val q = graft.streaming.StreamingTriples
-        .triplesStream(turnsStream, tagger, gapMs, lateness,
+        .triplesStream(spark.readStream.format("graft-versioned").load(streamIn),
+          tagger, gapMs, lateness,
           extractDates = a.getOrElse("extract-dates", "false").toBoolean)
-        .toDF()
+        .filter(col("subj") =!= "graft-sentinel")
         .writeStream
+        .format("graft-versioned")
         .option("checkpointLocation", s"$out/stream_checkpoint")
-        .foreachBatch(sink)
-        .start()
+        .start(outPath)
       q.processAllAvailable()
       // sentinel nudges: advance the event-time watermark past every
       // conversation's timeout, then let the timeouts fire
-      val inputNow: () => DataFrame =
-        if (srcVersioned) () => graft.sources.VersionedTable.read(streamIn)
-        else () => spark.read.parquet(streamIn)
-      val maxTs = inputNow()
+      val maxTs = VersionedTable.read(streamIn)
         .filter(col("conv_id") =!= "graft-sentinel")
         .agg(max(col("ts"))).head().getTimestamp(0)
       // max(ts) over an empty input is null; the sentinel arithmetic below
@@ -429,20 +377,14 @@ object PipelineMain {
       graft.streaming.StreamingTriples.flushOffsetsMs(gapMs, lateness)
           .zipWithIndex.foreach { case (off, i) =>
         val sentinel = Seq(Turn("graft-sentinel", i, "user", "flush", null,
-          new java.sql.Timestamp(maxTs.getTime + off))).toDS()
-        if (srcVersioned)
-          graft.sources.VersionedTable.append(sentinel.toDF(), streamIn)
-        else sentinel.write.mode(SaveMode.Append).parquet(streamIn)
+          new java.sql.Timestamp(maxTs.getTime + off))).toDF()
+        VersionedTable.append(sentinel, streamIn)
         q.processAllAvailable()
       }
       q.stop()
-      val streamed =
-        if (versionedSink) graft.sources.VersionedTable.read(outPath)
-        else spark.read.parquet(outPath)
-      val n = streamed.count()
-      val nConvsDone = streamed.select("subj").distinct().count()
-      println(s"[graft] ${if (versionedSink) "s6_stream_triples_v" else "s6_stream_triples"} " +
-        s"rows=$n convs=$nConvsDone -> $outPath")
+      val streamed = VersionedTable.read(outPath)
+      println(s"[graft] s6_stream_triples_v rows=${streamed.count()} " +
+        s"convs=${streamed.select("subj").distinct().count()} -> $outPath")
       return
     }
 
@@ -593,7 +535,7 @@ object PipelineMain {
     "maintain-zorder-by", "merge-append", "mor-delete", "mor-col",
     "mor-values", "negatives", "out", "rollback", "rollback-to",
     "run-id", "seed", "skip", "stream", "stream-gap-ms",
-    "stream-in", "stream-lateness", "stream-sink", "stream-source",
+    "stream-in", "stream-lateness",
     "history", "tag", "tag-table", "tag-version", "to-stage",
     "alter", "alter-rename", "alter-drop")
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** Session factory with the scale-aware defaults this engine assumes.
   *
   * Local mode is a stand-in for a multi-executor cluster: `cores` models the
-  * executor count, `shufflePartitions` is tuned to it (never the 200
+  * executor count, and shuffle partitions equal it (never the 200
   * default). AQE is on so skew joins / partition coalescing re-plan at
   * runtime the same way they would on a 1000-executor cluster.
   */
@@ -17,9 +17,8 @@ object Sessions {
     */
   private def localDir: Option[String] = sys.env.get("SPARK_GRAFT_LOCAL_DIR")
 
-  def local(cores: Int = 32, shufflePartitions: Int = -1, appName: String = "graft"): SparkSession = {
-    val sp = if (shufflePartitions > 0) shufflePartitions else cores
-    withDefaults(SparkSession.builder().master(s"local[$cores]").appName(appName), sp)
+  def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
+    withDefaults(SparkSession.builder().master(s"local[$cores]").appName(appName), cores)
       // bypass-merge shuffle writes ONE FILE PER REDUCE PARTITION per map
       // task and then NIO-merges them (mmap/unmap per file): thread-dump
       // sampling showed that merge at 13% of active executor samples at

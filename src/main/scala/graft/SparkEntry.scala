@@ -68,17 +68,16 @@ object SparkEntry {
     * Scale-adaptive, not a local[32] constant: partition count comes from
     * AQE (repartition-by-column with no explicit N), the guard is a no-op
     * on a properly laid-out table (row groups >= half the session cores),
-    * and tables above SPARK_GRAFT_FANOUT_MAX_MB (default 2048) never pay
-    * the extra exchange — at warehouse scale the fix belongs at the
-    * writer, exactly as the guide says.
+    * and tables above 2048 MB never pay the extra exchange — at
+    * warehouse scale the fix belongs at the writer, exactly as the guide
+    * says.
     */
   private def tf(s: SparkSession, dir: String, name: String, key: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val df = s.read.parquet(path)
     val cores = s.sparkContext.defaultParallelism
     val (bytes, rgs) = parquetLayout(s, path)
-    val maxBytes = sys.env.getOrElse("SPARK_GRAFT_FANOUT_MAX_MB", "2048").toLong << 20
-    if (cores > 1 && rgs < cores / 2 && bytes <= maxBytes) df.repartition(col(key))
+    if (cores > 1 && rgs < cores / 2 && bytes <= (2048L << 20)) df.repartition(col(key))
     else df
   }
 

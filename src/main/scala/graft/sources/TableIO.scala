@@ -107,12 +107,6 @@ object TableIO {
     sid
   }
 
-  /** S6 JDBC sink (SURVEY §7.5 "a JDBC writer flag can exist for demo"):
-    * the reference exports its wide table to MySQL in 1,000-row
-    * executemany batches (MergeAndExportInfo.py:85-111, batch size :102);
-    * `batchSize` is the parity knob. Any JDBC url on the session classpath
-    * works — the spec exercises embedded Derby.
-    */
   /** Bucketed catalog table (SURVEY J1 / §5's `bucket(conv_id)` layout):
     * `bucketBy(n, keys) + sortBy(keys)` into an external parquet table, so
     * TWO tables bucketed the same way join WITHOUT ANY EXCHANGE — each
@@ -143,6 +137,12 @@ object TableIO {
       .saveAsTable(tableName)
   }
 
+  /** S6 JDBC sink (SURVEY §7.5 "a JDBC writer flag can exist for demo"):
+    * the reference exports its wide table to MySQL in 1,000-row
+    * executemany batches (MergeAndExportInfo.py:85-111, batch size :102);
+    * `batchSize` is the parity knob. Any JDBC url on the session classpath
+    * works — the spec exercises embedded Derby.
+    */
   def writeJdbc(df: DataFrame, url: String, table: String,
       driver: Option[String] = None, batchSize: Int = 1000): Unit = {
     val w = df.write.mode(SaveMode.Overwrite)

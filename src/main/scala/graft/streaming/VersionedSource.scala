@@ -11,10 +11,10 @@ import graft.sources.{GraftFileIndex, VersionedTable}
 
 /** `spark.readStream.format("graft-versioned").load(table)` — subscribe
   * to a VersionedTable's commits (the Delta-source pattern, and the other
-  * half of [[VersionedSink]]'s exactly-once story): offsets are manifest
-  * version seqs, so the streaming checkpoint records "I have delivered
-  * through v<N>" and a restart resumes from exactly there with no
-  * re-listing, no dedup state, and no missed commit. Each micro-batch
+  * half of the `graft-versioned` sink's exactly-once story): offsets are
+  * manifest version seqs, so the streaming checkpoint records "I have
+  * delivered through v<N>" and a restart resumes from exactly there with
+  * no re-listing, no dedup state, and no missed commit. Each micro-batch
   * reads ONLY the file groups appended in (start, end] — incremental
   * processing whose per-batch cost is O(new data), which at 100 TB is the
   * difference between re-scanning a petabyte table per cycle and reading
@@ -205,8 +205,14 @@ final class VersionedTableSource(spark: SparkSession, table: String,
   *  - `ds.writeStream` lands micro-batches through the exactly-once
   *    txn-keyed append ([[graft.sources.VersionedTable.appendOnce]] keyed
   *    `<txnAppId>#<batchId>`) — a crash-replayed batch no-ops through the
-  *    manifest ledger, the same guarantee as [[VersionedSink]] without
-  *    writing a foreachBatch by hand.
+  *    manifest ledger. Structured Streaming's sinks are at-least-once:
+  *    after a crash between the sink write and the checkpoint commit, the
+  *    restarted query re-delivers the last batch with the same batchId, so
+  *    exactness lives here (Iceberg/Delta's idempotent-writes pattern: the
+  *    commit log is the dedup ledger). With a replayable source's
+  *    checkpointed offsets this is end-to-end exactly-once. Each batch is
+  *    one appended file group + one manifest line, O(1) in table size; the
+  *    accreted groups fold back via [[graft.sources.VersionedTable.compact]].
   */
 final class VersionedTableProvider extends StreamSourceProvider
     with org.apache.spark.sql.sources.RelationProvider
@@ -286,9 +292,9 @@ final class VersionedTableProvider extends StreamSourceProvider
     // sharing a namespace would silently swallow each other's batches as
     // txn replays, and a namespace that survives a checkpoint wipe would
     // swallow the restarted batch 0. The query id Spark persists in the
-    // checkpoint has exactly that lifetime (VersionedSink
-    // .checkpointTxnNamespace, resolved lazily per batch — the metadata
-    // file exists once the query starts); an explicit txnAppId overrides
+    // checkpoint has exactly that lifetime (checkpointTxnNamespace,
+    // resolved lazily per batch — the metadata file exists once the
+    // query starts); an explicit txnAppId overrides
     // it for callers managing their own namespace lifetime.
     val explicitAppId = parameters.get("txnAppId")
     val checkpoint = parameters.get("checkpointLocation")
@@ -309,12 +315,13 @@ final class VersionedTableProvider extends StreamSourceProvider
       override def addBatch(batchId: Long, data: DataFrame): Unit = {
         implicit val s: SparkSession = sqlContext.sparkSession
         val appId = explicitAppId.getOrElse(
-          VersionedSink.checkpointTxnNamespace(s, checkpoint.get))
+          VersionedTableProvider.checkpointTxnNamespace(s, checkpoint.get))
         // the engine hands an IncrementalExecution-backed frame; re-wrap
         // its planned rows as a batch plan (ForeachBatchSink's trick).
         // Empty batches skip: stateful queries run no-data batches every
         // idle tick, and committing each would accrete one empty file
-        // group + manifest line per tick (see VersionedSink)
+        // group + manifest line per tick (an unrecorded empty batch
+        // replays as another empty no-op, so exactness holds)
         val batch = StreamRelation.asBatch(data)
         if (!batch.isEmpty)
           VersionedTable.appendOnce(batch, table, s"$appId#$batchId")
@@ -322,5 +329,46 @@ final class VersionedTableProvider extends StreamSourceProvider
       override def name(): String = s"graft-versioned[$table]"
       override def toString: String = name()
     }
+  }
+}
+
+object VersionedTableProvider {
+
+  /** The txn namespace for a checkpointed query: the query id Spark
+    * persists at `<checkpoint>/metadata` on first start. That id has
+    * EXACTLY the lifetime batchIds have — unique per logical query,
+    * stable across restarts from the checkpoint, and regenerated when the
+    * checkpoint is wiped — so keying txns on it can neither collide
+    * across queries nor replay-swallow the restarted batch 0 after a
+    * checkpoint reset (a name- or path-based key survives the reset and
+    * does both). Resolved through the checkpoint's Hadoop filesystem
+    * (the checkpoint may be a qualified URI on a real cluster); read
+    * per batch, uncached — a tiny driver-side read, and a cache could
+    * serve a stale id to a post-reset run in the same JVM. An unreadable
+    * metadata file THROWS (failing the batch, which Spark retries): every
+    * caller runs after query start, when the file exists, so a read
+    * failure is a transient IO error — and falling back to any stable
+    * string would key this batch in a namespace no other run uses,
+    * silently breaking exactly-once in both directions (a replay of this
+    * batch wouldn't be recognized; a fallback-keyed ledger entry would
+    * swallow a future reset's batch of the same id).
+    */
+  private[graft] def checkpointTxnNamespace(spark: SparkSession, checkpoint: String): String = {
+    val p = new org.apache.hadoop.fs.Path(checkpoint, "metadata")
+    val json =
+      try {
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val in = fs.open(p)
+        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+        finally in.close()
+      } catch {
+        case e: java.io.IOException => throw new IllegalStateException(
+          s"cannot read the query id from $p — refusing to guess a txn " +
+            "namespace (exactly-once would silently break); the batch will " +
+            "be retried", e)
+      }
+    """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(json).map(_.group(1))
+      .getOrElse(throw new IllegalStateException(
+        s"no query id in $p — malformed checkpoint metadata"))
   }
 }

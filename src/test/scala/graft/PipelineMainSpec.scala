@@ -11,7 +11,9 @@ import graft.model.{Triple, Turn}
 /** The checkpointing driver on the shared session: a full s0→s6 run, a
   * resume from s4 and a resume whose s3 table breaks the clustered layout
   * (so s4 falls back to the salted path) all land the triples the fused
-  * KgPipeline.computeTriples derives from the same s0 table and tagger.
+  * KgPipeline.computeTriples derives from the same s0 table and tagger;
+  * `--stream true` lands the same set (orgs through the s5 canonical map)
+  * and a re-run against its checkpoint lands nothing.
   */
 class PipelineMainSpec extends SparkSpec {
 
@@ -74,5 +76,38 @@ class PipelineMainSpec extends SparkSpec {
     assert(stdout.toString("UTF-8").contains("falling back to the salted path"),
       "the clustered s4 path accepted a shuffled s3 table")
     assertSameTriples(landed(shuffled), "salted s4")
+  }
+
+  test("--stream true lands the fused set table to table; a re-run lands nothing") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val dir = Files.createTempDirectory("graft-pipeline-stream").resolve("kg").toString
+    Seq("s0_transcripts", "s2_model").foreach { s =>
+      FileUtils.copyDirectory(new File(s"$out/$s"), new File(s"$dir/$s"))
+    }
+    val args = Array("--out", dir, "--from-stage", "s3", "--stream", "true",
+      "--run-id", "stream")
+    PipelineMain.run(args)
+    val table = s"$dir/s6_stream_triples_v"
+    val streamed = VersionedTable.read(table).as[Triple].collect().toSet
+
+    // orgs stream surface-level: cross-conversation canonicalization is
+    // s5's, so they equal the fused org triples through its canonical map
+    def isOrg(t: Triple) = t.pred == "hiring_organization"
+    val (streamedNonOrg, fusedNonOrg) = (streamed.filterNot(isOrg), fused.filterNot(isOrg))
+    assert(streamedNonOrg == fusedNonOrg,
+      s"non-org triples: only-stream=${(streamedNonOrg diff fusedNonOrg).take(5)} " +
+        s"only-fused=${(fusedNonOrg diff streamedNonOrg).take(5)}")
+    val canon = spark.read.parquet(s"$out/s5_entities")
+      .select("surface", "canonical").as[(String, String)].collect().toMap
+    assert(streamed.filter(isOrg).map(t => t.copy(obj = canon.getOrElse(t.obj, t.obj))) ==
+      fused.filter(isOrg), "org triples differ after the s5 canonical map")
+
+    // the re-run resumes from the stream checkpoint: nothing lands twice
+    val tip = VersionedTable.versions(table).last.snapshotId
+    val rows = VersionedTable.read(table).count()
+    PipelineMain.run(args)
+    assert(VersionedTable.versions(table).last.snapshotId == tip)
+    assert(VersionedTable.read(table).count() == rows)
   }
 }

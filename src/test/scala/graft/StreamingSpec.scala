@@ -9,13 +9,15 @@ class StreamingSpec extends SparkSpec {
   test("exactly-once sink: restart resumes, crash-replay deduplicates") {
     import spark.implicits._
     import graft.sources.VersionedTable
-    import graft.streaming.VersionedSink
+    import graft.streaming.VersionedTableProvider
     implicit val sq = spark.sqlContext
     val root = java.nio.file.Files.createTempDirectory("graft-vsink")
     val table = root.resolve("t").toString
     val ckpt = root.resolve("ckpt").toString
     val stream = MemoryStream[graft.model.Turn]
-    val q1 = VersionedSink.exactlyOnce(stream.toDS(), table, ckpt, "kg_sink")
+    def start() = stream.toDS().writeStream.format("graft-versioned")
+      .option("checkpointLocation", ckpt).start(table)
+    val q1 = start()
     try {
       stream.addData(TranscriptGen.turnsFor(0L, 42L, 0, 0))
       q1.processAllAvailable()
@@ -27,15 +29,15 @@ class StreamingSpec extends SparkSpec {
     // restart Spark re-delivers batch 0 verbatim; the txn ledger absorbs
     // it (the replay carries the same namespace: the checkpoint-persisted
     // query id, which a restart from the same checkpoint preserves)
-    val ns = VersionedSink.checkpointTxnNamespace(spark, ckpt)
+    val ns = VersionedTableProvider.checkpointTxnNamespace(spark, ckpt)
     assert(ns != ckpt, "query id not resolved from the checkpoint metadata")
-    val replayed = VersionedSink.commitBatch(
-      TranscriptGen.turnsFor(0L, 42L, 0, 0).toDF(), table, ns, 0L)
+    val replayed = VersionedTable.appendOnce(
+      TranscriptGen.turnsFor(0L, 42L, 0, 0).toDF(), table, s"$ns#0")._2
     assert(!replayed, "replayed batch 0 was committed twice")
     assert(VersionedTable.read(table).count() == n0)
 
     // restart from the same checkpoint: only NEW data lands, exactly once
-    val q2 = VersionedSink.exactlyOnce(stream.toDS(), table, ckpt, "kg_sink")
+    val q2 = start()
     try {
       stream.addData(TranscriptGen.turnsFor(1L, 42L, 0, 0))
       q2.processAllAvailable()
@@ -62,12 +64,12 @@ class StreamingSpec extends SparkSpec {
         .forEach(p => java.nio.file.Files.delete(p))
       finally walk.close()
     }
-    val q3 = VersionedSink.exactlyOnce(stream.toDS(), table, ckpt, "kg_sink")
+    val q3 = start()
     try {
       stream.addData(TranscriptGen.turnsFor(2L, 42L, 0, 0))
       q3.processAllAvailable()
     } finally q3.stop()
-    assert(VersionedSink.checkpointTxnNamespace(spark, ckpt) != ns,
+    assert(VersionedTableProvider.checkpointTxnNamespace(spark, ckpt) != ns,
       "checkpoint reset must mint a fresh txn namespace")
     assert(VersionedTable.read(table)
       .select("conv_id").distinct().count() == 3)

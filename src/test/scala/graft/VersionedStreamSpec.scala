@@ -9,7 +9,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQueryException, Trigger}
 
 import graft.sources.VersionedTable
-import graft.streaming.VersionedSink
 
 /** The versioned streaming SOURCE: offsets are manifest version seqs,
   * micro-batches deliver exactly the appended file groups, compaction
@@ -242,7 +241,8 @@ class VersionedStreamSpec extends SparkSpec {
     def run(): Unit = {
       val stream = spark.readStream.format("graft-versioned").load(p)
         .withColumn("doubled", col("id") * 2)
-      val q = VersionedSink.exactlyOnce(stream, out, ckpt, "vst_e2e")
+      val q = stream.writeStream.format("graft-versioned")
+        .option("checkpointLocation", ckpt).start(out)
       try q.processAllAvailable() finally q.stop()
     }
     run()
