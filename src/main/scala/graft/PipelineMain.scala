@@ -53,7 +53,8 @@ import graft.sources.TranscriptGen
   * twice. Per-batch cost is one appended file group + one manifest line;
   * `--maintain` folds the accreted groups back. The driver appends two
   * far-future sentinel turns at the end so quiet conversations flush
-  * before it exits.
+  * before it exits — once per input maximum: a re-run with no new turns
+  * finds them in the table and appends none.
   */
 object PipelineMain {
 
@@ -373,14 +374,21 @@ object PipelineMain {
           "is empty) — run s0 first or pass --convs > 0")
       // offsets derived from gap + lateness: hardcoded constants would
       // silently leave the newest conversations unflushed (exit 0, rows
-      // missing) as soon as gap + lateness exceeded them
-      graft.streaming.StreamingTriples.flushOffsetsMs(gapMs, lateness)
-          .zipWithIndex.foreach { case (off, i) =>
-        val sentinel = Seq(Turn("graft-sentinel", i, "user", "flush", null,
-          new java.sql.Timestamp(maxTs.getTime + off))).toDF()
-        VersionedTable.append(sentinel, streamIn)
-        q.processAllAvailable()
-      }
+      // missing) as soon as gap + lateness exceeded them. A sentinel an
+      // earlier run already appended for this maxTs is in the stream's
+      // watermark; appending it again would only grow the input table
+      // (the scan's stats pruning opens only the sentinel groups).
+      val landedSentinels = VersionedTable.scan(streamIn)
+        .where(col("conv_id") === "graft-sentinel")
+        .select("ts").as[java.sql.Timestamp].collect().map(_.getTime).toSet
+      graft.streaming.StreamingTriples.flushOffsetsMs(gapMs, lateness).zipWithIndex
+        .filterNot { case (off, _) => landedSentinels(maxTs.getTime + off) }
+        .foreach { case (off, i) =>
+          val sentinel = Seq(Turn("graft-sentinel", i, "user", "flush", null,
+            new java.sql.Timestamp(maxTs.getTime + off))).toDF()
+          VersionedTable.append(sentinel, streamIn)
+          q.processAllAvailable()
+        }
       q.stop()
       val streamed = VersionedTable.read(outPath)
       println(s"[graft] s6_stream_triples_v rows=${streamed.count()} " +

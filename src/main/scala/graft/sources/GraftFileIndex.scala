@@ -25,16 +25,14 @@ final case class FileGroup(dir: String, stats: Option[GroupStats], files: Seq[Fi
   * no bespoke read API, and everything Catalyst does above (column
   * pruning, filter pushdown into parquet, AQE) composes unchanged.
   *
-  * Pruning is evidence-based and conservative, mirroring
-  * [[VersionedTable.pruneDirs]]: a group is skipped only when its stats
-  * PROVE no row can match — zero rows, an all-null column under a
-  * comparison/IsNotNull, a column absent from the group's schema (schema
-  * evolution: merged reads surface it as null), or a [min,max] disjoint
-  * from the predicate's range. Unknown columns, missing sidecars, and
-  * unsupported expression shapes always keep the group. Strings compare
-  * in unsigned UTF-8 byte order (UTF8String's ordering — the ordering the
-  * stats were computed under); numerics as BigDecimal with NaN/Infinity
-  * falling back to keep.
+  * Pruning is evidence-based and conservative — [[GraftFileIndex.mayMatch]],
+  * the same evaluator the table's write path scopes its rewrites and
+  * delete keys with: a group is skipped only when its stats PROVE no row
+  * can match — zero rows, an all-null column under a comparison/IsNotNull,
+  * a column absent from the group's schema (schema evolution: merged reads
+  * surface it as null), a [min,max] disjoint from the predicate's range,
+  * or a bloom that excludes every equality value. Unknown columns, missing
+  * sidecars, and unsupported expression shapes always keep the group.
   *
   * At 100 TB the difference is planner-side: thousands of accreted
   * commits mean thousands of file groups, and a scan that names only the
@@ -59,9 +57,8 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
     // pushed filters are conjunctive: a group survives only if EVERY
     // filter can match it; a 0-row group never survives (safe even with
     // no filters — there is nothing to read)
-    val kept = groups.filter { g =>
-      !g.stats.exists(_.rows == 0L) && dataFilters.forall(f => mayMatch(f, g))
-    }
+    val pred = dataFilters.reduceOption(And(_, _)).getOrElse(Literal.TrueLiteral)
+    val kept = groups.filter(GraftFileIndex.mayMatch(tablePath, _, pred))
     lastKeptDirs = kept.map(_.dir)
     Seq(PartitionDirectory(InternalRow.empty, kept.flatMap(_.files).toArray))
   }
@@ -95,8 +92,26 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
     * the evidence plans.ManifestAggRule folds min/max over.
     */
   def groupStatsSeq: Seq[Option[GroupStats]] = groups.map(_.stats)
+}
 
-  // ---- stats-vs-filter evaluation -----------------------------------------
+/** The one stats-vs-predicate evaluator of the versioned table format:
+  * the scan's `listFiles`, the copy-on-write scoping of
+  * [[VersionedTable.deleteRange]]/[[VersionedTable.merge]] (through
+  * [[VersionedTable.pruneDirs]]) and the delete-key scoping of
+  * [[VersionedTable.morDelete]]/[[VersionedTable.applyDeletes]] all ask
+  * it, so a file group is provably matchless under one rule set.
+  */
+object GraftFileIndex {
+
+  /** Can ANY row of file group `g` of `table` satisfy `pred`? False only
+    * on evidence: a 0-row group, or stats/bloom sidecars that exclude
+    * every value the predicate admits. Conservative: unsupported shapes
+    * answer true. Literals arrive as Catalyst builds them (`lit(v)`:
+    * strings as UTF8String, timestamps as epoch micros, dates as epoch
+    * days — the domain the stats and blooms are written in).
+    */
+  def mayMatch(table: String, g: FileGroup, pred: Expression): Boolean =
+    !g.stats.exists(_.rows == 0L) && matches(table, g, pred)
 
   /** What the stats know about one column in one group. */
   private sealed trait ColKnowledge
@@ -129,7 +144,12 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
     case _ => None
   }
 
-  /** compare(bound, v) in the stats' ordering; None = incomparable (keep). */
+  /** compare(bound, v) in the stats' ordering; None = incomparable (keep).
+    * Strings compare in unsigned UTF-8 byte order (UTF8String's — the
+    * ordering Spark's min/max produced the stats under; Java's UTF-16
+    * compareTo disagrees above the BMP); numerics as BigDecimal, with
+    * NaN/Infinity extremes failing the parse and so keeping the group.
+    */
   private def cmp(bound: String, v: String, isString: Boolean): Option[Int] =
     if (isString) Some(UTF8String.fromString(bound).compareTo(UTF8String.fromString(v)))
     else scala.util.Try(BigDecimal(bound).compare(BigDecimal(v))).toOption
@@ -144,13 +164,14 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
 
   /** Does the group's bloom sidecar PROVE `v` absent from `colName`? The
     * probe hashes in the exact domain [[VersionedTable.writeBlooms]] put
-    * values under: strings as UTF-8 bytes, integrals widened to Long. A
-    * value outside that domain (null, fractional, exotic) is no evidence.
-    * False = keep is the bloom's one-sided contract — `mightContain` can
-    * false-positive (keep a matchless group) but never false-negative.
+    * values under: strings as UTF-8 bytes, integrals (and the micros/days
+    * of timestamps/dates) widened to Long. A value outside that domain
+    * (null, fractional, exotic) is no evidence. False = keep is the
+    * bloom's one-sided contract — `mightContain` can false-positive (keep
+    * a matchless group) but never false-negative.
     */
-  private def bloomExcludes(g: FileGroup, colName: String, v: Any): Boolean =
-    VersionedTable.groupBloom(tablePath, g.dir, colName).exists { bf =>
+  private def bloomExcludes(table: String, g: FileGroup, colName: String, v: Any): Boolean =
+    VersionedTable.groupBloom(table, g.dir, colName).exists { bf =>
       v match {
         case u: UTF8String => !bf.mightContainBinary(u.getBytes)
         case b: Byte => !bf.mightContainLong(b.toLong)
@@ -166,22 +187,21 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
     * not prove it absent. The two are independent — a pre-stats group with
     * a bloom still prunes, a pre-bloom group still range-prunes.
     */
-  private def mayEqOn(g: FileGroup, name: String, v: Any): Boolean =
+  private def mayEqOn(table: String, g: FileGroup, name: String, v: Any): Boolean =
     (knowledge(g.stats, name) match {
       case AllNull => false
       case Bounds(b) => litValue(v).forall(mayEq(b, _))
       case Unknown => true
-    }) && !bloomExcludes(g, name, v)
+    }) && !bloomExcludes(table, g, name, v)
 
-  /** Can ANY row of file group `g` satisfy `e`? Conservative:
-    * unsupported shapes answer true. Comparison cases cover both operand
-    * orders (Catalyst does not normalize literal position).
+  /** Comparison cases cover both operand orders (Catalyst does not
+    * normalize literal position).
     */
-  private def mayMatch(e: Expression, g: FileGroup): Boolean = {
+  private def matches(table: String, g: FileGroup, e: Expression): Boolean = {
     val st = g.stats
     e match {
-      case And(l, r) => mayMatch(l, g) && mayMatch(r, g)
-      case Or(l, r) => mayMatch(l, g) || mayMatch(r, g)
+      case And(l, r) => matches(table, g, l) && matches(table, g, r)
+      case Or(l, r) => matches(table, g, l) || matches(table, g, r)
 
       case IsNotNull(a: AttributeReference) => knowledge(st, a.name) match {
         case AllNull => false
@@ -189,12 +209,12 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
       }
       case IsNull(_) => true // min/max stats carry no null counts
 
-      case EqualTo(a: AttributeReference, Literal(v, _)) => mayEqOn(g, a.name, v)
-      case EqualTo(Literal(v, _), a: AttributeReference) => mayEqOn(g, a.name, v)
+      case EqualTo(a: AttributeReference, Literal(v, _)) => mayEqOn(table, g, a.name, v)
+      case EqualTo(Literal(v, _), a: AttributeReference) => mayEqOn(table, g, a.name, v)
       case EqualNullSafe(a: AttributeReference, Literal(v, _)) if v != null =>
-        mayEqOn(g, a.name, v)
+        mayEqOn(table, g, a.name, v)
       case EqualNullSafe(Literal(v, _), a: AttributeReference) if v != null =>
-        mayEqOn(g, a.name, v)
+        mayEqOn(table, g, a.name, v)
 
       case GreaterThan(a: AttributeReference, Literal(v, _)) =>
         withBounds(st, a, v)(mayGe(_, _, strict = true))
@@ -217,13 +237,13 @@ final class GraftFileIndex(spark: SparkSession, tablePath: String,
         knowledge(st, a.name) match {
           case AllNull => false
           case _ => vs.exists {
-            case Literal(v, _) => mayEqOn(g, a.name, v)
+            case Literal(v, _) => mayEqOn(table, g, a.name, v)
             case _ => true
           }
         }
       case InSet(a: AttributeReference, hset) => knowledge(st, a.name) match {
         case AllNull => false
-        case _ => hset.exists(v => mayEqOn(g, a.name, v))
+        case _ => hset.exists(v => mayEqOn(table, g, a.name, v))
       }
 
       // s startsWith p  <=>  p <= s < succ(p); overlap with [min,max] iff

@@ -4,8 +4,9 @@ import java.nio.file.Files
 import java.util.Base64
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Expression, GreaterThanOrEqual, In, LessThanOrEqual, Literal}
 import org.apache.spark.sql.functions.{col, count, lit, max, min, sum, xxhash64}
-import org.apache.spark.sql.types.{NumericType, StringType, StructType}
+import org.apache.spark.sql.types.{NullType, NumericType, StringType, StructType}
 
 /** Iceberg snapshot/time-travel semantics modeled on parquet (the second
   * half of the S1 story beside TableIO's partition-scoped replace): data
@@ -363,23 +364,6 @@ object VersionedTable {
     }
   }
 
-  /** Serialized commit: the new version's (dirs, snapshot id) are derived
-    * FROM THE LATEST BASE INSIDE the critical section, so a concurrent
-    * committer that landed first is folded in, never overwritten (the
-    * classic lost-update append race). `f` must be cheap — no Spark jobs
-    * under the lock; appenders use the snapshot id's additivity (sum of
-    * per-row hashes mod 2^64 = Long wraparound addition) to combine a
-    * pre-computed per-dir id with the base's instead of re-scanning.
-    */
-  private def commitTransform(table: String,
-      colMapF: Option[ColMapping] => Option[ColMapping] = identity,
-      delsF: (Option[Version], Seq[String]) => Seq[DeleteFile] = carryDels,
-      changes: Option[String] = None)(
-      f: Option[Version] => (Seq[String], Long)): Version =
-    commitWith(table, colMapF = colMapF, delsF = delsF, changes = changes)(
-      base => Some(f(base)))
-      .getOrElse(throw new IllegalStateException("unreachable: unconditional commit aborted"))
-
   /** Default delete-file inheritance: the base version's delete files,
     * dropped once no retained data dir is old enough for them to apply —
     * so an append carries them verbatim (its new dir is younger), while a
@@ -397,10 +381,17 @@ object VersionedTable {
         // recorded birth)
         base.map(_.birthOf(d)).getOrElse(dirSeq(d)) < df.seq))
 
-  /** Like [[commitTransform]] but `f` may ABORT by returning None (the
-    * committer saw, inside the critical section, that its work is already
-    * represented — e.g. a replayed txn), and may attach a txn idempotence
-    * key to the manifest line. Returns None on abort.
+  /** Serialized commit: the new version's (dirs, snapshot id) are derived
+    * FROM THE LATEST BASE INSIDE the critical section, so a concurrent
+    * committer that landed first is folded in, never overwritten (the
+    * classic lost-update append race). `f` must be cheap — no Spark jobs
+    * under the lock; appenders use the snapshot id's additivity (sum of
+    * per-row hashes mod 2^64 = Long wraparound addition) to combine a
+    * pre-computed per-dir id with the base's instead of re-scanning.
+    * `f` may ABORT by returning None (the committer saw, inside the
+    * critical section, that its work is already represented — e.g. a
+    * replayed txn), and `txn` attaches an idempotence key to the manifest
+    * line. Returns None on abort.
     */
   private def commitWith(table: String, txn: Option[String] = None,
       colMapF: Option[ColMapping] => Option[ColMapping] = identity,
@@ -454,6 +445,24 @@ object VersionedTable {
       }
     }
 
+  /** Commit the result of an op that read version `read` and derived its
+    * whole file-group set from it (rewrite, row-level op, delete-file
+    * commit). Iceberg's rewrite conflict rule: if anyone committed after
+    * `read`, committing would erase their rows (or leave their keys
+    * undeleted), so the commit fails loudly, names `op`, and the caller
+    * retries against the new tip.
+    */
+  private[graft] def commitRewrite(table: String, read: Version, op: String,
+      delsF: (Option[Version], Seq[String]) => Seq[DeleteFile] = carryDels,
+      colMapF: Option[ColMapping] => Option[ColMapping] = identity,
+      changes: Option[String] = None)(dirs: Seq[String], sid: Long): Version =
+    commitWith(table, colMapF = colMapF, delsF = delsF, changes = changes) { base =>
+      if (!base.exists(_.seq == read.seq)) throw new IllegalStateException(
+        s"concurrent commit during $op of v${read.seq} " +
+          s"(tip is now v${base.map(_.seq).getOrElse(0)}) — retry")
+      Some((dirs, sid))
+    }.get
+
   private def newDataDir(seq: Int): String =
     s"data/v$seq-${java.util.UUID.randomUUID().toString.take(8)}"
 
@@ -467,7 +476,7 @@ object VersionedTable {
     // a full overwrite replaces the table's CONTENT, and with it the
     // schema lineage: the incoming names become the physical names and
     // the mapping resets (earlier versions keep theirs for time travel)
-    commitTransform(table, colMapF = _ => None)(_ => (Seq(dir), sid))
+    commitWith(table, colMapF = _ => None)(_ => Some((Seq(dir), sid))).get
   }
 
   /** Append commit: the base version's dirs + one new dir. The base is
@@ -476,19 +485,8 @@ object VersionedTable {
     * with BOTH dirs present — no lost update, and no Spark work while
     * holding the lock.
     */
-  def append(df: DataFrame, table: String)(implicit spark: SparkSession): Version = {
-    val vs = versions(table)
-    // incoming batches speak LOGICAL names; data files store physical
-    val (pdf, minted) = toPhysical(df,
-      vs.lastOption.flatMap(_.colMap).getOrElse(ColMapping.identity))
-    val dir = newDataDir(vs.lastOption.map(_.seq + 1).getOrElse(1))
-    pdf.write.parquet(s"$table/$dir")
-    val dirSid = writeStats(table, dir)
-    commitTransform(table, colMapF = extendMapping(minted)) { base =>
-      (base.map(_.dirs).getOrElse(Seq.empty) :+ dir,
-        base.map(_.snapshotId + dirSid).getOrElse(dirSid)) // mod-2^64 sum
-    }
-  }
+  def append(df: DataFrame, table: String)(implicit spark: SparkSession): Version =
+    appendWith(df, table, None)._1
 
   /** Exactly-once append: `txn` is the caller's idempotence key (for a
     * streaming sink, `<queryName>#<batchId>`). If a version carrying this
@@ -502,20 +500,27 @@ object VersionedTable {
     * orphan for [[vacuum]]. Returns (version, committedNow).
     */
   def appendOnce(df: DataFrame, table: String, txn: String)(
+      implicit spark: SparkSession): (Version, Boolean) =
+    appendWith(df, table, Some(txn))
+
+  /** The one append body behind [[append]] (`txn = None`) and
+    * [[appendOnce]]. Returns (version, committedNow).
+    */
+  private def appendWith(df: DataFrame, table: String, txn: Option[String])(
       implicit spark: SparkSession): (Version, Boolean) = {
     hmkdirs(new HPath(table))
     val st = manifestState(table) // ONE pre-lock read: replay check + seq
-    if (st.txns.contains(txn))
-      return (st.versions.lastOption.getOrElse(Version(0, 0L, Seq.empty)), false)
-    val (pdf, minted) = toPhysical(df,
-      st.versions.lastOption.flatMap(_.colMap).getOrElse(ColMapping.identity))
-    val dir = newDataDir(st.versions.lastOption.map(_.seq + 1).getOrElse(1))
+    val tip = st.versions.lastOption.getOrElse(Version(0, 0L, Seq.empty))
+    if (txn.exists(st.txns.contains)) return (tip, false)
+    // incoming batches speak LOGICAL names; data files store physical
+    val (pdf, minted) = toPhysical(df, tip.colMap.getOrElse(ColMapping.identity))
+    val dir = newDataDir(tip.seq + 1)
     pdf.write.parquet(s"$table/$dir")
     val dirSid = writeStats(table, dir)
     // commitWith itself re-checks the txn inside the lock and aborts
-    commitWith(table, txn = Some(txn), colMapF = extendMapping(minted)) { base =>
+    commitWith(table, txn = txn, colMapF = extendMapping(minted)) { base =>
       Some((base.map(_.dirs).getOrElse(Seq.empty) :+ dir,
-        base.map(_.snapshotId + dirSid).getOrElse(dirSid)))
+        base.map(_.snapshotId + dirSid).getOrElse(dirSid))) // mod-2^64 sum
     } match {
       case Some(v) => (v, true)
       case None => // lost the same-txn race; our dir is unreachable debris
@@ -686,7 +691,8 @@ object VersionedTable {
     * sidecars without touching parquet footers. Strings are Base64'd so
     * the sidecar stays valid JSON for any payload bytes. Returns the
     * dir's snapshot id. This is the write-side half of manifest-level
-    * file skipping; [[pruneDirs]] is the read-side half.
+    * file skipping; [[GraftFileIndex.mayMatch]] is the half that reads
+    * it, for scans and for the scoping of row-level ops alike.
     */
   private def writeStats(table: String, dir: String)(
       implicit spark: SparkSession): Long = {
@@ -1060,58 +1066,31 @@ object VersionedTable {
   def pendingDeletes(table: String): Seq[DeleteFile] =
     versions(table).lastOption.map(_.dels).getOrElse(Seq.empty)
 
-  /** Per-column (min, max) of a small key frame, or None when it has no
-    * non-null keys at all — the pruning evidence for delete scoping.
+  /** The pruning predicate of a delete-key frame, for
+    * [[GraftFileIndex.mayMatch]]: per key column `c BETWEEN min AND max`
+    * and, when the column's distinct keys are few enough to collect (it
+    * is a DELETE BATCH, not a table), `c IN (keys)`, which brings the
+    * bloom sidecars in. None when the frame has no non-null key at all.
+    * A group whose schema lacks a key column fails its BETWEEN (all-null
+    * never equality-matches).
     */
-  private def keyBounds(keys: DataFrame, cols: Seq[String]): Option[Seq[(String, Any, Any)]] = {
+  private def keyScope(keys: DataFrame, cols: Seq[String]): Option[Expression] = {
     val row = keys.agg(min(col(cols.head)), (cols.tail.flatMap(c =>
       Seq(min(col(c)), max(col(c)))) :+ max(col(cols.head))): _*).collect()(0)
-    if (row.isNullAt(0)) None
-    else Some(cols.zipWithIndex.map { case (c, i) =>
+    if (row.isNullAt(0)) return None
+    val ranges = cols.zipWithIndex.map { case (c, i) =>
       // head's (min at 0, max at last); tail packed pairwise after 0
-      if (i == 0) (c, row.get(0), row.get(row.length - 1))
-      else (c, row.get(2 * i - 1), row.get(2 * i))
-    })
-  }
-
-  /** True when the group's sidecars PROVE none of the delete keys can be
-    * present: a key column absent from the group's schema (all-null never
-    * equality-matches), every key outside the column's [min,max], or —
-    * for small collected key sets — every key bloom-excluded.
-    */
-  private def groupProvablyKeyFree(table: String, d: String,
-      bounds: Seq[(String, Any, Any)], collected: Map[String, Seq[Any]]): Boolean = {
-    val st = groupStats(table, d)
-    if (st.exists(_.rows == 0L)) return true
-    val schemaLacks = st.flatMap(_.schema).exists(s =>
-      bounds.exists { case (c, _, _) => !s.fieldNames.contains(c) })
-    if (schemaLacks) return true
-    val rangeExcludes = bounds.exists { case (c, lo, hi) =>
-      pruneDirs(table, Version(0, 0L, Seq(d)), c, lo, hi)._1.isEmpty
+      if (i == 0) betweenPred(c, row.get(0), row.get(row.length - 1))
+      else betweenPred(c, row.get(2 * i - 1), row.get(2 * i))
     }
-    if (rangeExcludes) return true
-    collected.exists { case (c, vals) =>
-      groupBloom(table, d, c).exists(bf => vals.nonEmpty && vals.forall {
-        case s: String => !bf.mightContainBinary(s.getBytes("UTF-8"))
-        case b: java.lang.Byte => !bf.mightContainLong(b.longValue)
-        case sh: java.lang.Short => !bf.mightContainLong(sh.longValue)
-        case i: java.lang.Integer => !bf.mightContainLong(i.longValue)
-        case l: java.lang.Long => !bf.mightContainLong(l.longValue)
-        case _ => false // outside the bloom hashing domain: no evidence
-      })
-    }
-  }
-
-  /** Distinct key values per column for bloom probing, only when the key
-    * set is small enough to collect (it is a DELETE BATCH, not a table) —
-    * above the cap, range evidence alone scopes the delete.
-    */
-  private def collectSmallKeys(keys: DataFrame, cols: Seq[String]): Map[String, Seq[Any]] =
-    cols.flatMap { c =>
+    val sets = cols.flatMap { c =>
       val vs = keys.select(col(c)).where(col(c).isNotNull)
         .distinct().limit(4097).collect().map(_.get(0)).toSeq
-      if (vs.size > 4096) None else Some(c -> vs)
-    }.toMap
+      if (vs.isEmpty || vs.size > 4096) None
+      else scala.util.Try(In(AttributeReference(c, NullType)(), vs.map(Literal(_)))).toOption
+    }
+    Some((ranges ++ sets).reduce(And(_, _)))
+  }
 
   /** MERGE-ON-READ equality delete: every table row whose key tuple
     * appears in `keys` (logical column names; null keys never match) is
@@ -1145,11 +1124,9 @@ object VersionedTable {
       .write.parquet(s"$table/$delDir")
     val keyDf = spark.read.parquet(s"$table/$delDir")
     def abandon(): Version = { deleteRecursively(hpath(table, delDir)); cur }
-    val bounds = keyBounds(keyDf, pCols).getOrElse(return abandon())
-    val collected = collectSmallKeys(keyDf, pCols)
+    val scope = keyScope(keyDf, pCols).getOrElse(return abandon())
     // every current dir predates seq, so scope = dirs the evidence keeps
-    val surviving = cur.dirs.filterNot(d =>
-      groupProvablyKeyFree(table, d, bounds, collected))
+    val surviving = cur.dirs.filter(groupMayMatch(table, _, scope))
     if (surviving.isEmpty) return abandon()
     // matched-row hash adjustment: per dir IN ITS OWN column order (the
     // order its stats sidecar hashed under), semi-joined with the keys —
@@ -1184,13 +1161,9 @@ object VersionedTable {
           Seq((touchedDf.join(bcast, pCols, "left_semi"), "delete"))))
       }
     val entry = DeleteFile(delDir, seq, pCols, matched)
-    commitWith(table, delsF = (base, nd) => carryDels(base, nd) :+ entry,
-        changes = chDir) { base =>
-      if (!base.exists(_.seq == cur.seq)) throw new IllegalStateException(
-        s"concurrent commit during equality delete against v${cur.seq} " +
-          s"(tip is now v${base.map(_.seq).getOrElse(0)}) — retry")
-      Some((cur.dirs, cur.snapshotId - adj)) // Long wraparound = mod 2^64
-    }.get
+    commitRewrite(table, cur, "equality delete",
+      delsF = (base, nd) => carryDels(base, nd) :+ entry, changes = chDir)(
+      cur.dirs, cur.snapshotId - adj) // Long wraparound = mod 2^64
   }
 
   /** MOR read resolution: the version's data dirs grouped into STRATA by
@@ -1236,24 +1209,16 @@ object VersionedTable {
     val sfx = java.util.UUID.randomUUID().toString.take(8)
     val delKeys: Map[String, DataFrame] = cur.dels.map(df =>
       df.dir -> spark.read.parquet(s"$table/${df.dir}")).toMap
-    val delEvidence: Map[String, Option[(Seq[(String, Any, Any)], Map[String, Seq[Any]])]] =
-      cur.dels.map { del =>
-        val k = delKeys(del.dir)
-        del.dir -> keyBounds(k, del.cols).map(b => (b, collectSmallKeys(k, del.cols)))
-      }.toMap
-    def mayTouch(d: String, del: DeleteFile): Boolean = delEvidence(del.dir) match {
-      case None => false // empty delete file: matches nothing
-      case Some((bounds, collected)) =>
-        !groupProvablyKeyFree(table, d, bounds, collected)
-    }
+    val delScope: Map[String, Option[Expression]] = cur.dels.map(del =>
+      del.dir -> keyScope(delKeys(del.dir), del.cols)).toMap
+    // an empty delete file (no scope) matches nothing
+    def mayTouch(d: String, del: DeleteFile): Boolean =
+      delScope(del.dir).exists(groupMayMatch(table, d, _))
     val (affected, untouched) = cur.dirs.partition(d =>
       applicableDels(cur, d).exists(del => mayTouch(d, del)))
     if (affected.isEmpty) // every group provably key-free: drop the debt
-      return commitWith(table, delsF = (_, _) => Seq.empty) { base =>
-        if (!base.exists(_.seq == cur.seq)) throw new IllegalStateException(
-          s"concurrent commit during applyDeletes of v${cur.seq} — retry")
-        Some((cur.dirs, cur.snapshotId))
-      }.get
+      return commitRewrite(table, cur, "applyDeletes", delsF = (_, _) => Seq.empty)(
+        cur.dirs, cur.snapshotId)
     val rewritten = affected.zipWithIndex.map { case (d, i) =>
       val nd = s"data/v$seq-applydel$i-$sfx"
       val src = spark.read.parquet(s"$table/$d")
@@ -1281,12 +1246,8 @@ object VersionedTable {
         s"applyDeletes accounting drift: resolved content id $sid != " +
           s"tip ${cur.snapshotId} — refusing to commit")
     }
-    commitWith(table, delsF = (_, _) => Seq.empty) { base =>
-      if (!base.exists(_.seq == cur.seq)) throw new IllegalStateException(
-        s"concurrent commit during applyDeletes of v${cur.seq} " +
-          s"(tip is now v${base.map(_.seq).getOrElse(0)}) — retry")
-      Some((untouched ++ kept.map(_._1), cur.snapshotId))
-    }.get
+    commitRewrite(table, cur, "applyDeletes", delsF = (_, _) => Seq.empty)(
+      untouched ++ kept.map(_._1), cur.snapshotId)
   }
 
   /** A file group's content snapshot id, from its stats sidecar when
@@ -1361,47 +1322,36 @@ object VersionedTable {
   }
 
   /** Manifest-level file skipping: split a version's file groups into
-    * (mustRead, skippable) for the predicate `column BETWEEN lo AND hi`.
-    * A dir is skippable only on positive evidence — stats present AND
-    * (no rows, all-null column, or [min,max] disjoint from [lo,hi]); a
-    * missing sidecar or unstated column keeps the dir (conservative).
-    * Numeric stats compare as BigDecimal; string stats compare in
-    * UNSIGNED UTF-8 BYTE order — the ordering Spark's UTF8String min/max
-    * actually produced the stats under (Java's UTF-16 compareTo disagrees
-    * above the BMP, where a surrogate pair sorts below \\uffff, and a
-    * wrong-order comparison here would silently skip matching groups).
+    * (mustRead, skippable) for the predicate `column BETWEEN lo AND hi`,
+    * decided by [[GraftFileIndex.mayMatch]] — the evaluator scans plan
+    * with. A dir is skippable only on positive evidence: no rows, an
+    * all-null column, a column absent from the group's schema, or a
+    * [min,max] disjoint from [lo,hi]; a missing sidecar or unstated
+    * column keeps the dir (conservative). The bounds become literals the
+    * way a pushed-down filter's do (`lit(v)`), so timestamps and
+    * dates compare in the epoch micros/days the stats record, and
+    * strings in unsigned UTF-8 byte order.
     */
   def pruneDirs(table: String, v: Version, column: String,
-                lo: Any, hi: Any): (Seq[String], Seq[String]) =
-    v.dirs.partition { d =>
-      dirStats(table, d) match {
-        case None => true
-        case Some(st) if st.rows == 0 => false
-        case Some(st) => st.cols.get(column) match {
-          case None => true
-          case Some(cs) if cs.min.isEmpty || cs.max.isEmpty => false // all null
-          case Some(cs) if cs.typ == "n" =>
-            // NaN/Infinity extremes (possible on double columns) don't
-            // parse as BigDecimal — fail CONSERVATIVE: read the dir
-            scala.util.Try {
-              val (mn, mx) = (BigDecimal(cs.min.get), BigDecimal(cs.max.get))
-              mx >= BigDecimal(lo.toString) && mn <= BigDecimal(hi.toString)
-            }.getOrElse(true)
-          case Some(cs) =>
-            val (mn, mx) = (unb64(cs.min.get), unb64(cs.max.get))
-            utf8Compare(mx, lo.toString) >= 0 && utf8Compare(mn, hi.toString) <= 0
-        }
-      }
-    }
+                lo: Any, hi: Any): (Seq[String], Seq[String]) = {
+    val pred = betweenPred(column, lo, hi)
+    v.dirs.partition(groupMayMatch(table, _, pred))
+  }
 
-  /** Unsigned UTF-8 byte comparison — delegated to UTF8String so the
-    * write-side pruning (here) and the read-side FileIndex pruning
-    * (GraftFileIndex.cmp) share ONE ordering implementation and can never
-    * silently diverge on string bounds.
+  /** `column BETWEEN lo AND hi` as Catalyst hands it to a scan (the
+    * bounds become literals the way `lit(v)` builds them), or TRUE (no
+    * evidence, keep) when a bound has no literal form.
     */
-  private def utf8Compare(a: String, b: String): Int =
-    org.apache.spark.unsafe.types.UTF8String.fromString(a)
-      .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
+  private def betweenPred(column: String, lo: Any, hi: Any): Expression = {
+    val a = AttributeReference(column, NullType)()
+    scala.util.Try[Expression](
+      And(GreaterThanOrEqual(a, Literal(lo)), LessThanOrEqual(a, Literal(hi))))
+      .getOrElse(Literal.TrueLiteral)
+  }
+
+  /** Can file group `d` of `table` hold a row satisfying `pred`? */
+  private def groupMayMatch(table: String, d: String, pred: Expression): Boolean =
+    GraftFileIndex.mayMatch(table, FileGroup(d, groupStats(table, d), Seq.empty), pred)
 
   /** Range read through the manifest stats: opens ONLY the file groups
     * whose [min,max] can intersect `column BETWEEN lo AND hi`, then
@@ -1413,10 +1363,10 @@ object VersionedTable {
   def readRange(table: String, column: String, lo: Any, hi: Any)(
       implicit spark: SparkSession): DataFrame =
     // one declarative filter over the FileIndex-planned scan: Catalyst
-    // pushes the BETWEEN into GraftFileIndex.listFiles, which applies the
-    // same stats evidence as [[pruneDirs]] (plus schema widening and the
-    // nothing-matches empty case, with zero directory listings) — this
-    // method survives as the named convenience for the planner seam
+    // pushes the BETWEEN into GraftFileIndex.listFiles, which asks the
+    // same evaluator as [[pruneDirs]] (with zero directory listings and
+    // the nothing-matches empty case) — this method survives as the
+    // named convenience for the planner seam
     scan(table).where(col(column).between(lit(lo), lit(hi)))
 
   /** remove_orphan_files: delete data dirs referenced by NO committed
@@ -1523,15 +1473,7 @@ object VersionedTable {
       throw new IllegalStateException(
         s"compaction changed content: $sid != ${cur.snapshotId} — refusing to commit")
     }
-    commitTransform(table) { base =>
-      // Iceberg rewrite_data_files conflict rule: if anyone committed
-      // after the version we rewrote, committing the rewrite would erase
-      // their rows — fail loudly, caller retries against the new tip.
-      if (!base.exists(_.seq == cur.seq)) throw new IllegalStateException(
-        s"concurrent commit during compaction of v${cur.seq} " +
-          s"(tip is now v${base.map(_.seq).getOrElse(0)}) — retry")
-      (Seq(dir), sid)
-    }
+    commitRewrite(table, cur, "compaction")(Seq(dir), sid)
   }
 
   /** rewrite_data_files (SORT strategy): re-cluster the latest version by
@@ -1543,7 +1485,8 @@ object VersionedTable {
     * [[compact]]. This is what turns the manifest stats from "sometimes
     * skips" into "names only the matching file groups": append/streaming
     * accretion interleaves key ranges so every group overlaps every
-    * predicate and [[pruneDirs]] can skip nothing — after the sorted
+    * predicate and the manifest evaluator ([[GraftFileIndex.mayMatch]])
+    * can skip nothing — after the sorted
     * rewrite a range predicate opens O(range/groupWidth) groups. At
     * 100 TB this is the standing maintenance op behind fast scans (run it
     * per partition/day as data settles), and a delete/merge keyed on
@@ -1721,14 +1664,7 @@ object VersionedTable {
       throw new IllegalStateException(
         s"$tag rewrite changed content: $sid != ${cur.snapshotId} — refusing to commit")
     }
-    commitTransform(table) { base =>
-      // same conflict rule as [[compact]]: a commit that landed after the
-      // version we rewrote would be erased by committing the rewrite
-      if (!base.exists(_.seq == cur.seq)) throw new IllegalStateException(
-        s"concurrent commit during $tag rewrite of v${cur.seq} " +
-          s"(tip is now v${base.map(_.seq).getOrElse(0)}) — retry")
-      (dirs, sid)
-    }
+    commitRewrite(table, cur, s"$tag rewrite")(dirs, sid)
   }
 
   /** Write a file group and return (content snapshot id, row count). An
@@ -1788,12 +1724,7 @@ object VersionedTable {
     if (!keepRem) deleteRecursively(hpath(table, dir))
     val newDirs = untouched ++ (if (keepRem) Seq(dir) else Seq.empty)
     val sid = untouched.map(d => dirSid(table, d)).sum + (if (keepRem) remSid else 0L)
-    commitWith(table, changes = chDir) { base =>
-      if (!base.exists(_.seq == cur.seq)) throw new IllegalStateException(
-        s"concurrent commit during delete against v${cur.seq} " +
-          s"(tip is now v${base.map(_.seq).getOrElse(0)}) — retry")
-      Some((newDirs, sid))
-    }.get
+    commitRewrite(table, cur, "delete", changes = chDir)(newDirs, sid)
   }
 
   /** MERGE (upsert) keyed on `key`: rows of `batch` replace same-key rows
@@ -1828,9 +1759,11 @@ object VersionedTable {
     val (batchSid, batchRows) = writeGroup(table, batchDir, pBatch)
     if (batchRows == 0) { deleteRecursively(hpath(table, batchDir)); return cur }
     // the batch's key bounds come from the stats sidecar writeGroup just
-    // produced — no second scan of data already aggregated once (pruneDirs
-    // compares via toString/BigDecimal, so the sidecar's string forms are
-    // exactly what it needs)
+    // produced — no second scan of data already aggregated once. Both
+    // forms pass as strings: a string literal compares as a string
+    // against string stats and as a BigDecimal against numeric ones, so
+    // numeric bounds (timestamps/dates included, recorded as epoch
+    // micros/days like the table's stats) compare exactly as recorded
     val (touched, untouched) = dirStats(table, batchDir).flatMap(_.cols.get(pKey)) match {
       case Some(cs) if cs.min.isEmpty =>
         (Seq.empty[String], cur.dirs) // all-null keys: pure insert
@@ -1885,12 +1818,8 @@ object VersionedTable {
     val newDirs = untouched ++ remDirKeptSid.map(_._1).toSeq :+ batchDir
     val sid = untouched.map(d => dirSid(table, d)).sum +
       remDirKeptSid.map(_._2).getOrElse(0L) + batchSid
-    commitWith(table, colMapF = extendMapping(minted), changes = chDir) { base =>
-      if (!base.exists(_.seq == cur.seq)) throw new IllegalStateException(
-        s"concurrent commit during merge against v${cur.seq} " +
-          s"(tip is now v${base.map(_.seq).getOrElse(0)}) — retry")
-      Some((newDirs, sid))
-    }.get
+    commitRewrite(table, cur, "merge", colMapF = extendMapping(minted),
+      changes = chDir)(newDirs, sid)
   }
 
   /** Latest committed version. */

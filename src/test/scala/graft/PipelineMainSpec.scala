@@ -13,7 +13,9 @@ import graft.model.{Triple, Turn}
   * (so s4 falls back to the salted path) all land the triples the fused
   * KgPipeline.computeTriples derives from the same s0 table and tagger;
   * `--stream true` lands the same set (orgs through the s5 canonical map)
-  * and a re-run against its checkpoint lands nothing.
+  * and a re-run against its checkpoint lands nothing; the table-ops modes
+  * (`--mor-delete`, `--rollback`, `--maintain`, `--history`) act on the
+  * streamed table.
   */
 class PipelineMainSpec extends SparkSpec {
 
@@ -28,6 +30,20 @@ class PipelineMainSpec extends SparkSpec {
     val turns = spark.read.parquet(s"$out/s0_transcripts").as[Turn]
     KgPipeline.computeTriples(turns, PipelineMain.loadTagger(s"$out/s2_model"))
       .collect().toSet
+  }
+
+  /** A fresh `--out` holding the shared run's s0 and tagger, streamed once
+    * with `--from-stage s3 --stream true`.
+    */
+  private val streamArgs = Array("--from-stage", "s3", "--stream", "true",
+    "--run-id", "stream")
+  private lazy val streamDir: String = {
+    val dir = Files.createTempDirectory("graft-pipeline-stream").resolve("kg").toString
+    Seq("s0_transcripts", "s2_model").foreach { s =>
+      FileUtils.copyDirectory(new File(s"$out/$s"), new File(s"$dir/$s"))
+    }
+    PipelineMain.run(Array("--out", dir) ++ streamArgs)
+    dir
   }
 
   private def landed(dir: String = out): Set[Triple] = {
@@ -81,14 +97,7 @@ class PipelineMainSpec extends SparkSpec {
   test("--stream true lands the fused set table to table; a re-run lands nothing") {
     import spark.implicits._
     import graft.sources.VersionedTable
-    val dir = Files.createTempDirectory("graft-pipeline-stream").resolve("kg").toString
-    Seq("s0_transcripts", "s2_model").foreach { s =>
-      FileUtils.copyDirectory(new File(s"$out/$s"), new File(s"$dir/$s"))
-    }
-    val args = Array("--out", dir, "--from-stage", "s3", "--stream", "true",
-      "--run-id", "stream")
-    PipelineMain.run(args)
-    val table = s"$dir/s6_stream_triples_v"
+    val table = s"$streamDir/s6_stream_triples_v"
     val streamed = VersionedTable.read(table).as[Triple].collect().toSet
 
     // orgs stream surface-level: cross-conversation canonicalization is
@@ -103,11 +112,60 @@ class PipelineMainSpec extends SparkSpec {
     assert(streamed.filter(isOrg).map(t => t.copy(obj = canon.getOrElse(t.obj, t.obj))) ==
       fused.filter(isOrg), "org triples differ after the s5 canonical map")
 
-    // the re-run resumes from the stream checkpoint: nothing lands twice
+    // the re-run resumes from the stream checkpoint: nothing lands twice,
+    // and with no new turns it appends no second pair of flush sentinels
     val tip = VersionedTable.versions(table).last.snapshotId
     val rows = VersionedTable.read(table).count()
-    PipelineMain.run(args)
+    val inputVersions = VersionedTable.versions(s"$streamDir/s0_turns_v").size
+    PipelineMain.run(Array("--out", streamDir) ++ streamArgs)
     assert(VersionedTable.versions(table).last.snapshotId == tip)
     assert(VersionedTable.read(table).count() == rows)
+    assert(VersionedTable.versions(s"$streamDir/s0_turns_v").size == inputVersions,
+      "the re-run appended flush sentinels again")
+  }
+
+  test("table-ops modes on the streamed table: mor-delete, rollback, maintain, history") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val table = Files.createTempDirectory("graft-pipeline-ops").resolve("t").toString
+    FileUtils.copyDirectory(new File(s"$streamDir/s6_stream_triples_v"), new File(table))
+    def content(): Seq[Triple] = VersionedTable.read(table).as[Triple].collect()
+      .toSeq.sortBy(t => (t.subj, t.pred, t.obj))
+    val before = content()
+    val pre = VersionedTable.versions(table).last
+    val conv = before.map(_.subj).distinct.sorted.apply(1)
+    val kept = before.filterNot(_.subj == conv)
+    assert(kept.size < before.size && kept.nonEmpty)
+    val deleteArgs = Array("--mor-delete", table, "--mor-col", "subj", "--mor-values", conv)
+
+    // --mor-delete: one delete file, exactly that conversation's rows gone
+    PipelineMain.run(deleteArgs)
+    val deleted = VersionedTable.versions(table).last
+    assert(deleted.seq == pre.seq + 1 && deleted.dels.size == 1 && deleted.dirs == pre.dirs)
+    assert(content() == kept)
+
+    // --rollback to the pre-delete version: its snapshot id and row count
+    PipelineMain.run(Array("--rollback", table, "--rollback-to", pre.seq.toString))
+    val restored = VersionedTable.versions(table).last
+    assert(restored.seq == deleted.seq + 1 && restored.snapshotId == pre.snapshotId)
+    assert(VersionedTable.read(table).count() == before.size)
+
+    // --maintain folds a pending delete into one group, content unchanged
+    PipelineMain.run(deleteArgs)
+    val redeleted = VersionedTable.versions(table).last
+    assert(redeleted.dels.size == 1)
+    PipelineMain.run(Array("--maintain", table, "--maintain-vacuum-hours", "0"))
+    val maintained = VersionedTable.versions(table).last
+    assert(maintained.snapshotId == redeleted.snapshotId)
+    assert(maintained.dirs.size == 1 && maintained.dels.isEmpty)
+    assert(content() == kept)
+
+    // --history: one line per retained version
+    val stdout = new ByteArrayOutputStream()
+    Console.withOut(stdout)(PipelineMain.run(Array("--history", table)))
+    val lines = stdout.toString("UTF-8").linesIterator
+      .filter(_.matches("""\[graft\] v\d+ op=.*""")).toSeq
+    assert(lines.map(_.split(' ')(1)) ==
+      VersionedTable.versions(table).map(v => s"v${v.seq}"), lines.mkString("\n"))
   }
 }

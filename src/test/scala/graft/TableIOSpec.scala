@@ -321,6 +321,79 @@ class TableIOSpec extends SparkSpec {
       .snapshotId == v.snapshotId)
   }
 
+  test("versioned table: deleteRange carries a group whose schema lacks the column") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val table = tmp("versioned_del_schema")
+    // the base group predates the `score` column: merged reads surface it
+    // as null there, and a BETWEEN never matches null
+    VersionedTable.overwrite((1L to 50L).map(i => (i, s"a$i")).toDF("id", "v"), table)
+    VersionedTable.append(
+      (51L to 100L).map(i => (i, s"b$i", i * 10L)).toDF("id", "v", "score"), table)
+    val pre = VersionedTable.versions(table).last
+    val (lo, hi) = (600L, 800L)
+    val expected = VersionedTable.read(table)
+      .where($"score".isNull || !$"score".between(lo, hi))
+      .select("id", "v", "score").as[(Long, String, Option[Long])].collect().sorted.toSeq
+    val v = VersionedTable.deleteRange(table, "score", lo, hi)
+    assert(v.dirs.size == 2 && v.dirs.head == pre.dirs.head,
+      s"the score-less group was rewritten: ${pre.dirs} -> ${v.dirs}")
+    assert(!v.dirs.contains(pre.dirs(1)), "the intersecting group was not rewritten")
+    val after = VersionedTable.read(table)
+    assert(after.select("id", "v", "score").as[(Long, String, Option[Long])]
+      .collect().sorted.toSeq == expected)
+    assert(expected.size == 79) // 100 rows - scores 600..800
+    assert(v.snapshotId == TableIO.snapshotId(after))
+  }
+
+  test("versioned table: deleteRange with timestamp bounds rewrites only the window it covers") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    import java.sql.Timestamp
+    val table = tmp("versioned_del_time")
+    def window(month: Int, tag: String) = (1 to 20).map { d =>
+      (s"$tag$d", Option(Timestamp.valueOf(f"2024-$month%02d-$d%02d 12:00:00")))
+    }
+    // three disjoint monthly windows, plus a null-ts row in the middle one
+    VersionedTable.overwrite(window(1, "jan").toDF("id", "ts"), table)
+    VersionedTable.append(
+      (window(2, "feb") :+ (("feb-null", Option.empty[Timestamp]))).toDF("id", "ts"), table)
+    VersionedTable.append(window(3, "mar").toDF("id", "ts"), table)
+    val pre = VersionedTable.versions(table).last
+    assert(pre.dirs.size == 3)
+    val (lo, hi) = (Timestamp.valueOf("2024-02-05 00:00:00"),
+      Timestamp.valueOf("2024-02-10 23:59:59"))
+    val expected = VersionedTable.read(table)
+      .where($"ts".isNull || !$"ts".between(lo, hi))
+      .select("id", "ts").as[(String, Option[Timestamp])].collect().sortBy(_._1).toSeq
+    val v = VersionedTable.deleteRange(table, "ts", lo, hi)
+    assert(v.dirs.count(pre.dirs.contains) == 2 &&
+      v.dirs.contains(pre.dirs(0)) && v.dirs.contains(pre.dirs(2)),
+      s"a window the bounds miss was rewritten: ${pre.dirs} -> ${v.dirs}")
+    val after = VersionedTable.read(table)
+    assert(after.select("id", "ts").as[(String, Option[Timestamp])]
+      .collect().sortBy(_._1).toSeq == expected)
+    assert(expected.size == 61 - 6)
+    assert(v.snapshotId == TableIO.snapshotId(after))
+  }
+
+  test("versioned table: a rewrite commit against a stale read version refuses") {
+    import spark.implicits._
+    import graft.sources.VersionedTable
+    val table = tmp("versioned_conflict")
+    VersionedTable.overwrite((1L to 10L).map(i => (i, s"r$i")).toDF("id", "v"), table)
+    val cur = VersionedTable.versions(table).last
+    // a commit lands between the op's read of `cur` and its commit
+    VersionedTable.append((11L to 20L).map(i => (i, s"r$i")).toDF("id", "v"), table)
+    val tip = VersionedTable.versions(table).last
+    val e = intercept[IllegalStateException](
+      VersionedTable.commitRewrite(table, cur, "compaction")(cur.dirs, cur.snapshotId))
+    assert(e.getMessage.contains("concurrent commit"), e.getMessage)
+    assert(VersionedTable.versions(table).last == tip)
+    assert(VersionedTable.read(table).as[(Long, String)].collect().sorted.toSeq ==
+      (1L to 20L).map(i => (i, s"r$i")))
+  }
+
   test("versioned table: appendOnce is exactly-once per txn key") {
     import spark.implicits._
     import graft.sources.VersionedTable
