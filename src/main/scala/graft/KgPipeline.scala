@@ -49,9 +49,11 @@ object KgPipeline {
     *
     * S4 resolves conversations via [[ConvFinalize.runClustered]]: every
     * input here is conv-clustered and turn-sorted (transcript tables sorted
-    * by (conv_id, turn_idx), the generator), and the clustered path keeps
-    * the per-turn payload out of the shuffle while throwing (never
-    * corrupting) on contract violations.
+    * by (conv_id, turn_idx), the generator), so each conversation resolves
+    * in the partition that scans it and only the conversations that
+    * straddle a partition boundary are exchanged; contract violations
+    * throw, never corrupt. Its boundary pass is a job run by this call,
+    * over `turns` with S1–S3 pruned to the conv_id column.
     */
   def computeTriples(turns: Dataset[Turn], tagger: SectionTagger.Trained,
       extractDates: Boolean = false)(implicit spark: SparkSession): Dataset[Triple] = {

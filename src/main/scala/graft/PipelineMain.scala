@@ -255,7 +255,8 @@ object PipelineMain {
       // irreversible one-character CLI mistake; Iceberg's
       // expire_snapshots has the same floor (retain_last >= 1)
       require(keep >= 1, s"--maintain-keep must be >= 1 (got $keep)")
-      val expired = VersionedTable.expire(table, keep)
+      val retainedBefore = VersionedTable.versions(table).size
+      val expiredPaths = VersionedTable.expire(table, keep)
       val vacuumHours = a.getOrElse("maintain-vacuum-hours", "24").toDouble
       // a negative horizon puts the cutoff in the future, sweeping dirs
       // that in-flight writers created moments ago
@@ -263,7 +264,8 @@ object PipelineMain {
       val vacuumMs = (vacuumHours * 3600 * 1000).toLong
       val orphans = VersionedTable.vacuum(table, vacuumMs)
       val after = VersionedTable.versions(table)
-      println(s"[graft] maintain expired=${expired.size} orphans=${orphans.size} " +
+      println(s"[graft] maintain expired_versions=${retainedBefore - after.size} " +
+        s"expired_paths=${expiredPaths.size} orphans=${orphans.size} " +
         s"retained=${after.size} tip=v${after.last.seq} " +
         s"snapshot=${after.last.snapshotId} (content unchanged: " +
         s"${after.last.snapshotId == before.last.snapshotId})")

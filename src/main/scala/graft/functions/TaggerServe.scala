@@ -196,10 +196,17 @@ object CompiledTagger {
       size() > foldCacheMax
   }
 
-  private[functions] def foldedFor(t: CompiledTagger): Folded = foldCache.synchronized {
-    val f = foldCache.get(t.uid)
-    if (f != null) f
-    else { val nf = t.buildFolded(); foldCache.put(t.uid, nf); nf }
+  /** The lock guards only the map: a first-touch build runs outside it, so
+    * it never blocks tasks serving another model. Two tasks racing on the
+    * same new model may both build; the first insert wins.
+    */
+  private[functions] def foldedFor(t: CompiledTagger): Folded = {
+    val hit = foldCache.synchronized(foldCache.get(t.uid))
+    if (hit != null) hit
+    else {
+      val built = t.buildFolded()
+      foldCache.synchronized(Option(foldCache.putIfAbsent(t.uid, built)).getOrElse(built))
+    }
   }
 
   import org.apache.spark.ml.PipelineModel

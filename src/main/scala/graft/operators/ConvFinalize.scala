@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, spark_partition_id, struct}
 
 import graft.rules.{DictRules, Rules}
 import graft.sources.Dims
@@ -35,14 +36,21 @@ final case class ConvExtract(
   */
 final class ConvContractViolation(msg: String) extends IllegalStateException(msg)
 
-/** S5 — the single fact-scale shuffle of the pipeline: group turns by
-  * conv_id and resolve per-conv facts (A1-A5 merges + the whole-document
-  * dictionary branch X11-X14). Order-sensitivity is pinned by sorting on
-  * turn_idx inside the group (collect order post-shuffle is otherwise
-  * nondeterministic — SURVEY §7.4).
+/** S4 — per-conversation resolution: gather each conversation's turns and
+  * resolve its facts (A1-A5 merges + the whole-document dictionary branch
+  * X11-X14), like the reference's one merge per posting
+  * (ProcessAndMergeInfo.py). Order-sensitivity is pinned by sorting on
+  * turn_idx inside the conversation (collect order post-shuffle is
+  * otherwise nondeterministic — SURVEY §7.4).
+  *
+  * The pipeline ships [[runClustered]]: on a conv-clustered, turn-sorted
+  * input it resolves each conversation where it is scanned and exchanges
+  * only the conversations that straddle a partition boundary. [[run]] is
+  * the order-insensitive path for arbitrary inputs (and the driver's
+  * fallback when the clustered contract does not hold).
   *
   * Skew (north_star: "salted joins for skew-heavy conversation keys"):
-  * the aggregation is TWO-LEVEL. Phase 1 groups by the salted key
+  * [[run]]'s aggregation is TWO-LEVEL. Phase 1 groups by the salted key
   * `(conv_id, turn_idx / bucketSize)` — every group is bounded by
   * `bucketSize` turns, so a 10^6-turn monster conversation never
   * materializes as one in-memory Seq. Phase 2 merges the ordered bucket
@@ -255,13 +263,13 @@ object ConvFinalize {
       deadline_dates = parts.flatMap(_.deadline_dates).distinct)
   }
 
+  private val slimCols = Seq("conv_id", "turn_idx", "tool", "text", "emp_groups", "locations",
+    "orgs", "edu_phrases", "sal", "start_dates", "deadline_dates")
+
   private def slim(extracted: org.apache.spark.sql.DataFrame)(
       implicit spark: SparkSession): Dataset[SlimTurn] = {
     import spark.implicits._
-    extracted
-      .select("conv_id", "turn_idx", "tool", "text", "emp_groups", "locations",
-        "orgs", "edu_phrases", "sal", "start_dates", "deadline_dates")
-      .as[SlimTurn]
+    extracted.select(slimCols.map(col): _*).as[SlimTurn]
   }
 
   /** Production path: salted two-phase aggregation — no per-conversation
@@ -288,105 +296,81 @@ object ConvFinalize {
   }
 
   // ------------------------------------------------------------------
-  // Clustered-input fast path
+  // Clustered-input path
   // ------------------------------------------------------------------
 
-  /** One-pass scan output: exactly one side set — a fully resolved interior
-    * conversation, or a boundary partial for the cross-partition merge.
+  /** Folds each contiguous run of one conv_id into ordered `bucketSize`
+    * chunk partials (bucket = the chunk's first turn_idx, so partials of
+    * one conversation from different partitions sort correctly). A run
+    * `keep` declines is only walked: its turns are order-checked but no
+    * partial is built. Memory: at most one chunk of RAW turns at a time,
+    * plus the current run's partials — whose conv-level payload
+    * (concatenated text + mention arrays) grows with the conversation, the
+    * same footprint as the salted path's phase-2 merge.
     */
-  final case class ClusteredOut(done: Option[ConvExtract], part: Option[ConvPartial])
-
-  /** Streaming per-partition scan for [[runClustered]]: folds each
-    * contiguous run of one conv_id into ordered [[ConvPartial]] chunks
-    * (bucket = chunk's first turn_idx, so cross-partition partials sort
-    * correctly), resolves interior runs on the spot, and emits the first
-    * and last run of the partition as partials (they may continue in a
-    * neighboring partition). Memory: at most one `bucketSize` chunk of RAW
-    * turns at a time, plus the current run's accumulated partials — whose
-    * conv-level payload (concatenated text + mention arrays) does grow
-    * with the conversation, the same per-conversation footprint as the
-    * salted path's phase-2 merge; `seen` additionally holds one conv_id
-    * string per conversation for the partition's lifetime. What is saved
-    * vs. the salted path is the shuffle, not the merge-side footprint.
-    *
-    * Contract violations do not corrupt: a conv_id recurring after its run
-    * closed, or a turn_idx going backwards inside a run, throws here;
-    * cross-partition duplication is caught by [[runClustered]]'s merge
-    * group (overlap guard in [[mergePartials]] / duplicate-resolution
-    * guard), so the only silent behavior is the correct one.
-    */
-  private[operators] def clusteredScan(
-      rows: Iterator[SlimTurn], bucketSize: Int): Iterator[ClusteredOut] =
-    new scala.collection.AbstractIterator[ClusteredOut] {
-      private val out = scala.collection.mutable.Queue.empty[ClusteredOut]
-      private val seen = new java.util.HashSet[String]()
-      private var firstRun = true
-      private var pending: SlimTurn = if (rows.hasNext) rows.next() else null
-
-      private def consumeRun(): Unit = {
-        val convId = pending.conv_id
-        if (!seen.add(convId))
-          throw new ConvContractViolation(
-            s"ConvFinalize.runClustered: conv_id=$convId appears in non-contiguous runs " +
-              "within one partition - the input is not clustered by conv_id; " +
-              "use ConvFinalize.run (salted path) for unclustered inputs")
+  private def runsOf(rows: Iterator[SlimTurn], bucketSize: Int, keep: String => Boolean)
+      : Iterator[(String, Seq[ConvPartial])] =
+    new scala.collection.AbstractIterator[(String, Seq[ConvPartial])] {
+      private val in = rows.buffered
+      override def hasNext: Boolean = in.hasNext
+      override def next(): (String, Seq[ConvPartial]) = {
+        val convId = in.head.conv_id
+        val folding = keep(convId)
         val partials = scala.collection.mutable.ArrayBuffer.empty[ConvPartial]
         val chunk = scala.collection.mutable.ArrayBuffer.empty[SlimTurn]
         var lastIdx = Int.MinValue
-        var runOpen = true
-        while (runOpen) {
-          val t = pending
+        while (in.hasNext && in.head.conv_id == convId) {
+          val t = in.next()
           if (t.turn_idx <= lastIdx) // == is a duplicated turn: (conv_id, turn_idx) is unique
             throw new ConvContractViolation(
               s"ConvFinalize.runClustered: turn_idx ${t.turn_idx} after $lastIdx inside " +
                 s"conv_id=$convId - the input is not sorted by unique (conv_id, turn_idx); " +
                 "use ConvFinalize.run (salted path) for unsorted inputs")
           lastIdx = t.turn_idx
-          chunk += t
-          if (chunk.length >= bucketSize) {
-            partials += partialOf(convId, chunk.head.turn_idx, chunk.toSeq)
-            chunk.clear()
+          if (folding) {
+            chunk += t
+            if (chunk.length >= bucketSize) {
+              partials += partialOf(convId, chunk.head.turn_idx, chunk.toSeq)
+              chunk.clear()
+            }
           }
-          if (rows.hasNext) {
-            pending = rows.next()
-            if (pending.conv_id != convId) runOpen = false
-          } else { pending = null; runOpen = false }
         }
         if (chunk.nonEmpty) partials += partialOf(convId, chunk.head.turn_idx, chunk.toSeq)
-        val lastRun = pending == null
-        if (firstRun || lastRun) partials.foreach(p => out += ClusteredOut(None, Some(p)))
-        else out += ClusteredOut(Some(mergePartials(convId, partials.toSeq)), None)
-        firstRun = false
-      }
-
-      override def hasNext: Boolean = {
-        while (out.isEmpty && pending != null) consumeRun()
-        out.nonEmpty
-      }
-      override def next(): ClusteredOut = {
-        if (!hasNext) throw new NoSuchElementException("clusteredScan")
-        out.dequeue()
+        (convId, partials.toSeq)
       }
     }
 
-  /** Fast path for inputs clustered by conv_id and sorted by turn_idx
-    * within each conversation — the natural layout of a transcript table
-    * (an Iceberg table written with SORTED BY (conv_id, turn_idx), the
-    * stage checkpoints, the generator). Interior conversations resolve
-    * entirely map-side, so the per-turn payload (text + mention arrays)
-    * never crosses a shuffle: the only exchanged rows are conversation-level
-    * results plus the few partials of conversations straddling a partition
-    * boundary (≤ 2 per partition) — at fact scale that turns the pipeline's
-    * one turn-volume shuffle into a conversation-volume one.
-    *
-    * Safety: the contract is checked, not trusted. In-partition
-    * interleaving or disorder throws in [[clusteredScan]]; a conversation
-    * duplicated across partitions either merges overlapping ranges
-    * (rejected by [[mergePartials]]) or resolves twice (rejected by the
-    * single-resolution guard below). No violation can silently corrupt a
-    * result — callers with arbitrary inputs use [[run]].
+  /** One-pass scan output of the exchange path: exactly one side set — a
+    * fully resolved interior conversation, or a partial for the merge.
     */
-  def runClustered(extracted: org.apache.spark.sql.DataFrame, bucketSize: Int = 256)(
+  final case class ClusteredOut(done: Option[ConvExtract], part: Option[ConvPartial])
+
+  /** Per-partition scan of the exchange path: resolves interior runs on
+    * the spot and emits the first and last run of the partition as
+    * partials (they may continue in a neighboring partition). A conv_id
+    * recurring after its run closed throws; `seen` holds one conv_id per
+    * conversation for the partition's lifetime.
+    */
+  private[operators] def clusteredScan(
+      rows: Iterator[SlimTurn], bucketSize: Int): Iterator[ClusteredOut] = {
+    val seen = new java.util.HashSet[String]()
+    val runs = runsOf(rows, bucketSize, _ => true)
+    runs.zipWithIndex.flatMap { case ((convId, partials), i) =>
+      if (!seen.add(convId))
+        throw new ConvContractViolation(
+          s"ConvFinalize.runClustered: conv_id=$convId appears in non-contiguous runs " +
+            "within one partition - the input is not clustered by conv_id; " +
+            "use ConvFinalize.run (salted path) for unclustered inputs")
+      if (i == 0 || !runs.hasNext) partials.map(p => ClusteredOut(None, Some(p)))
+      else Seq(ClusteredOut(Some(mergePartials(convId, partials)), None))
+    }
+  }
+
+  /** The exchange path: [[clusteredScan]], then one `groupByKey` that
+    * merges each conversation's partials and rejects a conversation
+    * resolved more than once (duplicated across partitions).
+    */
+  private def exchangeMerge(extracted: org.apache.spark.sql.DataFrame, bucketSize: Int)(
       implicit spark: SparkSession): Dataset[ConvExtract] = {
     import spark.implicits._
     slim(extracted)
@@ -404,5 +388,149 @@ object ConvFinalize {
               s"${parts.length} loose partials - the input duplicated a conversation across " +
               "partitions; use ConvFinalize.run (salted path) for such inputs")
       }
+  }
+
+  /** Boundary-pass row of one non-empty partition: its first and last
+    * conv_id, and whether its conv_id runs ascend (no null, each run's id
+    * above the one before).
+    */
+  private final case class PartBounds(first: String, last: String, ascending: Boolean)
+
+  /** The boundary pass: one [[PartBounds]] per non-empty partition, keyed
+    * by partition index. Only `conv_id` is selected, so Catalyst prunes
+    * every S1–S3 column expression; a partition stops being read at its
+    * first non-ascending run. The narrow scan learns its index from
+    * `spark_partition_id()`, so a partition where that column is not its
+    * index counts as not ascending: over a local relation the optimizer
+    * evaluates the column at plan time, every row reads 0, and the scan
+    * could not tell its partitions apart.
+    */
+  private def partitionBounds(extracted: org.apache.spark.sql.DataFrame): Map[Int, PartBounds] =
+    extracted.select(spark_partition_id(), col("conv_id")).queryExecution.toRdd
+      .mapPartitionsWithIndex { (index, rows) =>
+        if (!rows.hasNext) Iterator.empty
+        else {
+          val head = rows.next()
+          // ids decode only where a run starts; the buffer behind a row's
+          // UTF8String is reused, hence the clone
+          var prev = Option(head.getUTF8String(1)).map(_.clone()).orNull
+          val first = Option(prev).map(_.toString).orNull
+          var last = first
+          var ascending = first != null && head.getInt(0) == index
+          while (ascending && rows.hasNext) {
+            val id = rows.next().getUTF8String(1)
+            if (id == null) ascending = false
+            else if (id != prev) {
+              val s = id.toString
+              if (s.compareTo(last) > 0) { prev = id.clone(); last = s }
+              else ascending = false
+            }
+          }
+          Iterator.single(index -> PartBounds(first, last, ascending))
+        }
+      }
+      .collect().toMap
+
+  /** The straddlers of a verified layout: with the partitions' conv_id
+    * ranges in order, the ids that end one range and start the next. None
+    * when the layout is not verified — some partition does not ascend, or
+    * two ranges overlap beyond a shared endpoint. Ranges are ordered by
+    * value, not by partition index: a file scan packs files into
+    * partitions largest first, so a checkpoint's partitions hold disjoint
+    * ranges in no particular index order.
+    */
+  private def straddlers(bounds: Map[Int, PartBounds]): Option[Set[String]] =
+    if (!bounds.values.forall(_.ascending)) None
+    else {
+      val ordered = bounds.values.toSeq.sortBy(b => (b.first, b.last))
+      val pairs = ordered.zip(ordered.drop(1))
+      if (pairs.exists { case (a, b) => a.last.compareTo(b.first) > 0 }) None
+      else Some(pairs.collect { case (a, b) if a.last == b.first => a.last }.toSet)
+    }
+
+  /** Per-partition scan of a verified layout: resolves every run in place
+    * except the straddlers, which it only walks. It re-checks what the
+    * boundary pass saw — each run's conv_id above the previous one, and,
+    * at the end of the partition, the same first and last conv_id — so a
+    * partition whose boundaries moved between the two passes throws
+    * instead of resolving a split conversation twice.
+    */
+  private def narrowScan(rows: Iterator[(Int, SlimTurn)],
+      bounds: Map[Int, PartBounds], cross: Set[String],
+      bucketSize: Int): Iterator[ConvExtract] = {
+    val in = rows.buffered
+    if (!in.hasNext) Iterator.empty
+    else {
+      val part = in.head._1
+      var first: String = null
+      var last: String = null
+      val runs = runsOf(in.map(_._2), bucketSize, cid => !cross(cid))
+      runs.flatMap { case (convId, partials) =>
+        if (convId == null || (last != null && convId.compareTo(last) <= 0))
+          throw new ConvContractViolation(
+            s"ConvFinalize.runClustered: conv_id=$convId after $last in partition $part - " +
+              "the boundary pass saw its runs ascend, so the input changed between passes")
+        if (first == null) first = convId
+        last = convId
+        if (!runs.hasNext) {
+          val saw = bounds.get(part).map(b => (b.first, b.last))
+          if (!saw.contains((first, last)))
+            throw new ConvContractViolation(
+              s"ConvFinalize.runClustered: partition $part scanned conv_ids [$first, $last] " +
+                s"but the boundary pass saw ${saw.fold("it empty")(b => s"[${b._1}, ${b._2}]")} - " +
+                "the input's partition boundaries moved between the two passes")
+        }
+        if (cross(convId)) Nil else Seq(mergePartials(convId, partials))
+      }
+    }
+  }
+
+  /** S4 for inputs clustered by conv_id and sorted by turn_idx within each
+    * conversation — the natural layout of a transcript table (an Iceberg
+    * table written with SORTED BY (conv_id, turn_idx), the stage
+    * checkpoints, the generator).
+    *
+    * Two passes. The boundary pass ([[partitionBounds]]) reads `conv_id`
+    * alone and returns each partition's first and last conv_id. Where
+    * every partition's runs ascend and partition ranges meet only at
+    * endpoints, [[narrowScan]] resolves every conversation where it is
+    * scanned — no exchange — except the straddlers, the conv_ids shared by
+    * the ends of two ranges. Those go through the exchange path
+    * ([[exchangeMerge]]) over `extracted` filtered to them, unioned in
+    * only when there are any. When the layout cannot be verified, the
+    * whole input takes the exchange path.
+    *
+    * Safety: the contract is checked, not trusted. In-partition
+    * interleaving or disorder throws in either scan; a partition whose
+    * boundaries moved between the passes throws at its end in
+    * [[narrowScan]]; every conversation that crosses a partition reaches
+    * the exchange path, whose overlap guard ([[mergePartials]]) and
+    * single-resolution guard reject duplicates. No violation can silently
+    * corrupt a result — callers with arbitrary inputs use [[run]].
+    *
+    * Cost: the boundary pass is a job run when this is called. It scans
+    * `extracted`'s upstream a second time, so a caller whose input is not
+    * a scan (say, a `repartitionByRange` shuffle, as q51 feeds) pays that
+    * upstream twice unless it caches `extracted` first. Such a caller must
+    * cache anyway: a shuffle need not cut its partitions the same way on
+    * two executions (a range shuffle re-samples its bounds, AQE coalesces
+    * by the bytes of the columns read), and boundaries that move between
+    * the passes throw.
+    */
+  def runClustered(extracted: org.apache.spark.sql.DataFrame, bucketSize: Int = 256)(
+      implicit spark: SparkSession): Dataset[ConvExtract] = {
+    import spark.implicits._
+    val bounds = partitionBounds(extracted)
+    straddlers(bounds) match {
+      case None => exchangeMerge(extracted, bucketSize)
+      case Some(cross) =>
+        val narrow = extracted
+          .select(spark_partition_id().as("_1"), struct(slimCols.map(col): _*).as("_2"))
+          .as[(Int, SlimTurn)]
+          .mapPartitions(it => narrowScan(it, bounds, cross, bucketSize))
+        if (cross.isEmpty) narrow
+        else narrow.union(exchangeMerge(
+          extracted.filter(col("conv_id").isin(cross.toSeq: _*)), bucketSize))
+    }
   }
 }

@@ -1,14 +1,25 @@
 package graft
 
-import graft.operators.{ConvFinalize, SalStruct}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
+import graft.operators.{ConvExtract, ConvFinalize, SalStruct}
 import graft.operators.ConvFinalize.SlimTurn
+
+/** Partition computes of the layout-shifting input below: a JVM-wide
+  * counter, so executor-side closures share it in local mode.
+  */
+object ShiftingLayout { val computes = new AtomicInteger() }
 
 /** Differential pin for the salted two-phase conv aggregation: the
   * production `run` (bounded buckets) must equal the single-phase fold on
   * skew-heavy fixtures, including the order-sensitive salary short-circuit
   * crossing bucket boundaries.
   */
-class ConvFinalizeSpec extends SparkSpec {
+class ConvFinalizeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def turn(cid: String, idx: Int, text: String = "plain body text",
       emp: Seq[String] = Nil, loc: Seq[String] = Nil, orgs: Seq[String] = Nil,
@@ -190,5 +201,106 @@ class ConvFinalizeSpec extends SparkSpec {
     val e = intercept[Exception](ConvFinalize.runClustered(df).collect())
     assert(msgChain(e).contains("ConvContractViolation") &&
       msgChain(e).contains("not sorted"), msgChain(e))
+  }
+
+  // ---------------- boundary pass + narrow scan ----------------
+
+  /** One Spark partition per element of `parts`, in order. */
+  private def partitioned(parts: Seq[Seq[SlimTurn]]): DataFrame = {
+    import spark.implicits._
+    spark.createDataset(spark.sparkContext.parallelize(parts, parts.size).flatMap(identity)).toDF()
+  }
+
+  private def shuffleExchanges(ds: Dataset[_]): Int =
+    collect(ds.queryExecution.executedPlan) { case e: ShuffleExchangeExec => e }.size
+
+  /** equal to the single-phase fold, each conversation resolved once */
+  private def assertSinglePhase(df: DataFrame, ds: Dataset[ConvExtract]): Unit = {
+    val clustered = ds.collect()
+    val single = ConvFinalize.runSinglePhase(df).collect().map(c => c.conv_id -> c).toMap
+    assert(clustered.length == single.size)
+    assert(clustered.map(c => c.conv_id -> c).toMap == single)
+  }
+
+  /** the clustered fixture's conversations in ascending conv_id order, one
+    * Seq of turns per conversation ("conv_05_monster" sorts between conv_05
+    * and conv_06)
+    */
+  private def ascendingConvs: Seq[Seq[SlimTurn]] =
+    clusteredFixture.map(t => if (t.conv_id == "conv_x_monster") t.copy(conv_id = "conv_05_monster") else t)
+      .groupBy(_.conv_id).toSeq.sortBy(_._1).map(_._2.sortBy(_.turn_idx))
+
+  test("ascending 4-partition input: no shuffle exchange, result == single-phase fold") {
+    val convs = ascendingConvs
+    val df = partitioned(convs.grouped((convs.size + 3) / 4).map(_.flatten).toSeq)
+    assert(df.rdd.getNumPartitions == 4)
+    val ds = ConvFinalize.runClustered(df, bucketSize = 16)
+    assert(shuffleExchanges(ds) == 0, ds.queryExecution.executedPlan.toString)
+    assertSinglePhase(df, ds)
+  }
+
+  test("a conversation spanning three partitions, the middle one holding only it, merges exactly") {
+    val convs = ascendingConvs
+    val (head, rest) = convs.splitAt(6) // conv_00..conv_05 | conv_05_monster, conv_06..
+    val monster = rest.head
+    assert(monster.head.conv_id == "conv_05_monster" && monster.size == 150)
+    val df = partitioned(Seq(
+      head.flatten ++ monster.take(40),
+      monster.slice(40, 100),
+      monster.drop(100) ++ rest.tail.flatten))
+    val ds = ConvFinalize.runClustered(df, bucketSize = 16)
+    assert(shuffleExchanges(ds) > 0, "the straddler must take the exchange path")
+    assertSinglePhase(df, ds)
+    // the currency short-circuit at turn 97 sits in the middle partition
+    assert(ds.collect().find(_.conv_id == "conv_05_monster").get.sal_values == Seq(52000.0))
+  }
+
+  test("partition boundaries that move between the boundary pass and the scan throw") {
+    import spark.implicits._
+    val a = (0 until 4).map(i => turn("a", i))
+    val b = (0 until 6).map(i => turn("b", i, text = s"b$i"))
+    val c = (0 until 4).map(i => turn("c", i))
+    // the boundary pass sees [a, b] | [c]: no straddler. The scan then sees
+    // b split across the boundary, so without the end-of-partition check
+    // each half would resolve on its own as a complete conversation.
+    val seen = Seq(a ++ b, c)
+    val moved = Seq(a ++ b.take(3), b.drop(3) ++ c)
+    ShiftingLayout.computes.set(0)
+    val rdd = spark.sparkContext.parallelize(Seq(0, 1), 2).flatMap { p =>
+      if (ShiftingLayout.computes.getAndIncrement() < 2) seen(p) else moved(p)
+    }
+    val df = spark.createDataset(rdd).toDF()
+    val e = intercept[Exception](ConvFinalize.runClustered(df).collect())
+    assert(msgChain(e).contains("ConvContractViolation") &&
+      msgChain(e).contains("moved between the two passes"), msgChain(e))
+  }
+
+  test("non-ascending input (monster mid-stream) takes the exchange path, == single-phase fold") {
+    import spark.implicits._
+    val df = spark.createDataset(spark.sparkContext.parallelize(clusteredFixture, 4)).toDF()
+    val ds = ConvFinalize.runClustered(df, bucketSize = 16)
+    assert(shuffleExchanges(ds) > 0, ds.queryExecution.executedPlan.toString)
+    assertSinglePhase(df, ds)
+  }
+
+  test("partitions holding disjoint ranges out of index order: no exchange, exact") {
+    // a checkpoint scan packs files largest first: ranges disjoint, index order arbitrary
+    val convs = ascendingConvs
+    val parts = convs.grouped((convs.size + 3) / 4).map(_.flatten).toSeq
+    val df = partitioned(Seq(parts(2), parts(0), parts(3), parts(1)))
+    val ds = ConvFinalize.runClustered(df, bucketSize = 16)
+    assert(shuffleExchanges(ds) == 0, ds.queryExecution.executedPlan.toString)
+    assertSinglePhase(df, ds)
+  }
+
+  test("a local Seq input (partition id folded at plan time) takes the exchange path, exactly") {
+    import spark.implicits._
+    // a LocalRelation: spark_partition_id() reads 0 in every partition, so
+    // the partitions cannot be told apart and the layout is not verified
+    val df = ascendingConvs.flatten.toDS().toDF()
+    assert(df.rdd.getNumPartitions > 1)
+    val ds = ConvFinalize.runClustered(df, bucketSize = 16)
+    assert(shuffleExchanges(ds) > 0, ds.queryExecution.executedPlan.toString)
+    assertSinglePhase(df, ds)
   }
 }

@@ -154,7 +154,14 @@ class PipelineMainSpec extends SparkSpec {
     PipelineMain.run(deleteArgs)
     val redeleted = VersionedTable.versions(table).last
     assert(redeleted.dels.size == 1)
-    PipelineMain.run(Array("--maintain", table, "--maintain-vacuum-hours", "0"))
+    // six versions (two streamed, delete, rollback, delete, compact), keep 3
+    assert(VersionedTable.versions(table).size == 5)
+    val maintainOut = new ByteArrayOutputStream()
+    Console.withOut(maintainOut) {
+      PipelineMain.run(Array("--maintain", table, "--maintain-vacuum-hours", "0"))
+    }
+    assert(maintainOut.toString("UTF-8").contains("expired_versions=3 expired_paths="),
+      maintainOut.toString("UTF-8"))
     val maintained = VersionedTable.versions(table).last
     assert(maintained.snapshotId == redeleted.snapshotId)
     assert(maintained.dirs.size == 1 && maintained.dels.isEmpty)
