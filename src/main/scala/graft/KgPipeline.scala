@@ -53,7 +53,8 @@ object KgPipeline {
     * in the partition that scans it and only the conversations that
     * straddle a partition boundary are exchanged; contract violations
     * throw, never corrupt. Its boundary pass is a job run by this call,
-    * over `turns` with S1–S3 pruned to the conv_id column.
+    * over `turns` with S1–S3 pruned to the conv_id column; `turns` that
+    * come out of an uncached shuffle skip it and take the exchange path.
     */
   def computeTriples(turns: Dataset[Turn], tagger: SectionTagger.Trained,
       extractDates: Boolean = false)(implicit spark: SparkSession): Dataset[Triple] = {

@@ -419,7 +419,11 @@ object PipelineMain {
       // salted path — the same planner decision an Iceberg sort-order-aware
       // scan would make.
       def writeConv(df: DataFrame): Unit = write("s4_conv", df, Seq("s3_extract"))
-      try writeConv(ConvFinalize.runClustered(extracted).toDF())
+      // the clustered path keeps s3's partitions, cut for turns: rebalance
+      // its conversation rows into AQE-sized files, or every s3 partition
+      // lands an s4 file and s6 (partitioned by pred) multiplies them. A
+      // narrow coalesce would merge the resolution's tasks too.
+      try writeConv(ConvFinalize.runClustered(extracted).toDF().hint("rebalance"))
       catch {
         // Match the dedicated contract-violation type by class (executor
         // exceptions usually deserialize intact on the driver) or by its

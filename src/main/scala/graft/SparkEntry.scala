@@ -749,15 +749,13 @@ object SparkEntry {
       val extracted = TurnExtract.extract(labeled)
       val salted = ConvFinalize.run(extracted).collect()
         .map(c => c.conv_id -> c).toMap
-      // cached: a range shuffle re-samples its bounds on each execution, so
-      // runClustered's boundary pass and its scan must read one materialization
+      // uncached: a range shuffle re-samples its bounds on each execution,
+      // so runClustered must not trust a boundary pass over it
       val clusteredIn = extracted
         .repartitionByRange(7, col("conv_id"), col("turn_idx"))
         .sortWithinPartitions("conv_id", "turn_idx")
-        .cache()
       val clustered = ConvFinalize.runClustered(clusteredIn, bucketSize = 32)
         .collect().map(c => c.conv_id -> c).toMap
-      clusteredIn.unpersist()
       Seq(
         ("clustered_equals_salted", clustered == salted),
         ("all_convs_resolved", salted.size == nConvs && clustered.size == nConvs),

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions.{col, spark_partition_id, struct}
 
 import graft.rules.{DictRules, Rules}
@@ -396,8 +398,26 @@ object ConvFinalize {
     */
   private final case class PartBounds(first: String, last: String, ascending: Boolean)
 
-  /** The boundary pass: one [[PartBounds]] per non-empty partition, keyed
-    * by partition index. Only `conv_id` is selected, so Catalyst prunes
+  /** Walks a physical plan through adaptive plans and query stages. An
+    * in-memory scan is a leaf, so cached data hides the plan that built it.
+    */
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  /** Whether executing `pass` (one of [[runClustered]]'s two passes over
+    * its input) runs a shuffle outside cached data. Such an input need not
+    * be cut into the same partitions on two executions: a range shuffle
+    * re-samples its bounds, a round-robin one deals rows in arrival order,
+    * and AQE coalesces by the bytes of the columns read, which the
+    * one-column boundary pass shrinks. Its boundary pass would say nothing
+    * about its scan, so it takes the exchange path. A broadcast exchange
+    * does not count: it leaves the streamed side's partitions as they are.
+    */
+  private def reshuffles(pass: Dataset[_]): Boolean =
+    PlanWalk.find(pass.queryExecution.executedPlan)(_.isInstanceOf[ShuffleExchangeLike]).isDefined
+
+  /** The boundary pass over `ids` (partition id, conv_id): one
+    * [[PartBounds]] per non-empty partition, keyed by partition index.
+    * Only `conv_id` is selected from the input, so Catalyst prunes
     * every S1–S3 column expression; a partition stops being read at its
     * first non-ascending run. The narrow scan learns its index from
     * `spark_partition_id()`, so a partition where that column is not its
@@ -405,8 +425,8 @@ object ConvFinalize {
     * evaluates the column at plan time, every row reads 0, and the scan
     * could not tell its partitions apart.
     */
-  private def partitionBounds(extracted: org.apache.spark.sql.DataFrame): Map[Int, PartBounds] =
-    extracted.select(spark_partition_id(), col("conv_id")).queryExecution.toRdd
+  private def partitionBounds(ids: DataFrame): Map[Int, PartBounds] =
+    ids.queryExecution.toRdd
       .mapPartitionsWithIndex { (index, rows) =>
         if (!rows.hasNext) Iterator.empty
         else {
@@ -498,7 +518,9 @@ object ConvFinalize {
     * the ends of two ranges. Those go through the exchange path
     * ([[exchangeMerge]]) over `extracted` filtered to them, unioned in
     * only when there are any. When the layout cannot be verified, the
-    * whole input takes the exchange path.
+    * whole input takes the exchange path, and so does an input whose plan
+    * runs a shuffle outside cached data ([[reshuffles]]): its partitions
+    * may be cut differently on each execution, so no boundary pass runs.
     *
     * Safety: the contract is checked, not trusted. In-partition
     * interleaving or disorder throws in either scan; a partition whose
@@ -508,26 +530,27 @@ object ConvFinalize {
     * single-resolution guard reject duplicates. No violation can silently
     * corrupt a result — callers with arbitrary inputs use [[run]].
     *
-    * Cost: the boundary pass is a job run when this is called. It scans
-    * `extracted`'s upstream a second time, so a caller whose input is not
-    * a scan (say, a `repartitionByRange` shuffle, as q51 feeds) pays that
-    * upstream twice unless it caches `extracted` first. Such a caller must
-    * cache anyway: a shuffle need not cut its partitions the same way on
-    * two executions (a range shuffle re-samples its bounds, AQE coalesces
-    * by the bytes of the columns read), and boundaries that move between
-    * the passes throw.
+    * Cost: the boundary pass is a job run when this is called. It runs
+    * `extracted`'s upstream a second time, pruned to `conv_id`, so a
+    * caller whose upstream is costly beyond its column expressions pays
+    * that twice unless it caches `extracted` first. A shuffled input pays
+    * no boundary pass; caching it lets it take the narrow scan.
     */
   def runClustered(extracted: org.apache.spark.sql.DataFrame, bucketSize: Int = 256)(
       implicit spark: SparkSession): Dataset[ConvExtract] = {
     import spark.implicits._
-    val bounds = partitionBounds(extracted)
-    straddlers(bounds) match {
+    // fresh plans: they see a cache added after `extracted` was planned
+    val ids = extracted.select(spark_partition_id(), col("conv_id"))
+    val scanIn = extracted
+      .select(spark_partition_id().as("_1"), struct(slimCols.map(col): _*).as("_2"))
+      .as[(Int, SlimTurn)]
+    val layout =
+      if (Seq(ids, scanIn).exists(reshuffles)) None
+      else { val bounds = partitionBounds(ids); straddlers(bounds).map(bounds -> _) }
+    layout match {
       case None => exchangeMerge(extracted, bucketSize)
-      case Some(cross) =>
-        val narrow = extracted
-          .select(spark_partition_id().as("_1"), struct(slimCols.map(col): _*).as("_2"))
-          .as[(Int, SlimTurn)]
-          .mapPartitions(it => narrowScan(it, bounds, cross, bucketSize))
+      case Some((bounds, cross)) =>
+        val narrow = scanIn.mapPartitions(it => narrowScan(it, bounds, cross, bucketSize))
         if (cross.isEmpty) narrow
         else narrow.union(exchangeMerge(
           extracted.filter(col("conv_id").isin(cross.toSeq: _*)), bucketSize))

@@ -283,6 +283,41 @@ class ConvFinalizeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assertSinglePhase(df, ds)
   }
 
+  test("uncached range-shuffled input takes the exchange path and resolves exactly") {
+    import org.apache.spark.sql.functions.col
+    // q51's shape at spec size: a range split on (conv_id, turn_idx) cuts
+    // through conversations, and each execution re-samples its bounds
+    // (reservoir seeds follow the RDD id), so a boundary pass over it need
+    // not match the scan's partitions
+    val rows = (0 until 300).flatMap { c =>
+      (0 until 1 + (c * 7) % 40).map(i => turn(f"conv_$c%04d", i, text = s"c$c t$i",
+        sal = if (i == 3) Some(SalStruct(Seq(30000.0 + c), Nil, Nil, sw_kw = true)) else None))
+    }
+    val ranged = partitioned(rows.grouped(rows.size / 4 + 1).toSeq)
+      .repartitionByRange(7, col("conv_id"), col("turn_idx"))
+      .sortWithinPartitions("conv_id", "turn_idx")
+    (1 to 3).foreach { _ =>
+      val ds = ConvFinalize.runClustered(ranged, bucketSize = 16)
+      assert(shuffleExchanges(ds) == 2, ds.queryExecution.executedPlan.toString) // range + groupByKey
+      assertSinglePhase(ranged, ds)
+    }
+  }
+
+  test("a cached range-shuffled input takes the narrow scan") {
+    import org.apache.spark.sql.functions.col
+    val convs = ascendingConvs
+    // ranged by conv_id alone, no conversation straddles
+    val cached = partitioned(convs.grouped(3).map(_.flatten).toSeq)
+      .repartitionByRange(5, col("conv_id"))
+      .sortWithinPartitions("conv_id", "turn_idx")
+      .cache()
+    try {
+      val ds = ConvFinalize.runClustered(cached, bucketSize = 16)
+      assert(shuffleExchanges(ds) == 0, ds.queryExecution.executedPlan.toString)
+      assertSinglePhase(cached, ds)
+    } finally cached.unpersist()
+  }
+
   test("partitions holding disjoint ranges out of index order: no exchange, exact") {
     // a checkpoint scan packs files largest first: ranges disjoint, index order arbitrary
     val convs = ascendingConvs
