@@ -47,14 +47,15 @@ object KgPipeline {
     * stage bench call. `extractDates` is the X5 flag (reference ships it
     * disabled — ExtractInfo.py:131-132).
     *
-    * S4 resolves conversations via [[ConvFinalize.runClustered]]: every
-    * input here is conv-clustered and turn-sorted (transcript tables sorted
-    * by (conv_id, turn_idx), the generator), so each conversation resolves
-    * in the partition that scans it and only the conversations that
-    * straddle a partition boundary are exchanged; contract violations
-    * throw, never corrupt. Its boundary pass is a job run by this call,
-    * over `turns` with S1–S3 pruned to the conv_id column; `turns` that
-    * come out of an uncached shuffle skip it and take the exchange path.
+    * S4 resolves conversations via [[ConvFinalize.runClustered]]: inputs
+    * here are usually conv-clustered and turn-sorted (transcript tables
+    * sorted by (conv_id, turn_idx), the generator), so each conversation
+    * resolves in the partition that scans it and only the conversations
+    * that straddle a partition boundary take the salted path. Any other
+    * order with unique (conv_id, turn_idx) resolves on the salted path
+    * whole; a repeated turn throws, never corrupts. Its boundary pass is a
+    * job run by this call, over `turns` with S1–S3 pruned to the key
+    * columns; `turns` that come out of an uncached shuffle skip it.
     */
   def computeTriples(turns: Dataset[Turn], tagger: SectionTagger.Trained,
       extractDates: Boolean = false)(implicit spark: SparkSession): Dataset[Triple] = {

@@ -410,36 +410,18 @@ object PipelineMain {
     if (active("s4_conv")) {
       val extracted = spark.read.parquet(path("s3_extract"))
       // s3_extract preserves s0's conv-clustered, turn-sorted write order
-      // (narrow stages, one parquet file per task), so the clustered path
-      // applies. The scan can still break the layout in one corner: the
-      // reader bin-packs files into partitions by size, so the two file
+      // (narrow stages, one parquet file per task), so runClustered
+      // resolves it in the narrow scan. Where the reader breaks that layout
+      // — it bin-packs files into partitions by size, so the two file
       // halves of a conversation that straddled an upstream rowgroup split
-      // may land reordered in one partition. runClustered THROWS on that
-      // (never corrupts) and the driver falls back to the order-insensitive
-      // salted path — the same planner decision an Iceberg sort-order-aware
-      // scan would make.
-      def writeConv(df: DataFrame): Unit = write("s4_conv", df, Seq("s3_extract"))
-      // the clustered path keeps s3's partitions, cut for turns: rebalance
-      // its conversation rows into AQE-sized files, or every s3 partition
+      // may land reordered in one partition — the boundary pass sees it
+      // and runClustered takes the order-insensitive salted path instead.
+      // The narrow scan keeps s3's partitions, cut for turns: rebalance its
+      // conversation rows into AQE-sized files, or every s3 partition
       // lands an s4 file and s6 (partitioned by pred) multiplies them. A
       // narrow coalesce would merge the resolution's tasks too.
-      try writeConv(ConvFinalize.runClustered(extracted).toDF().hint("rebalance"))
-      catch {
-        // Match the dedicated contract-violation type by class (executor
-        // exceptions usually deserialize intact on the driver) or by its
-        // class NAME inside a Spark-wrapped message — never by a broader
-        // substring like "ConvFinalize.", which any unrelated failure
-        // whose stack trace merely passes through the stage would match,
-        // silently re-running (and possibly mis-merging) on the salted
-        // path instead of surfacing the real error.
-        case e: Exception if Iterator.iterate(e: Throwable)(_.getCause)
-            .takeWhile(_ != null).take(8)
-            .exists(t => t.isInstanceOf[graft.operators.ConvContractViolation] ||
-              Option(t.getMessage).exists(_.contains("ConvContractViolation"))) =>
-          println("[graft] s4_conv: scan did not preserve the clustered layout; " +
-            "falling back to the salted path")
-          writeConv(ConvFinalize.run(extracted).toDF())
-      }
+      write("s4_conv", ConvFinalize.runClustered(extracted).toDF().hint("rebalance"),
+        Seq("s3_extract"))
     }
 
     // ---- s5: entity linking over org mentions ----

@@ -750,14 +750,19 @@ object SparkEntry {
       val salted = ConvFinalize.run(extracted).collect()
         .map(c => c.conv_id -> c).toMap
       // uncached: a range shuffle re-samples its bounds on each execution,
-      // so runClustered must not trust a boundary pass over it
+      // so runClustered must not trust a boundary pass over it and takes
+      // the salted path whole. The cached copy is a verified layout with
+      // straddlers: the narrow scan plus the salted path over them.
       val clusteredIn = extracted
         .repartitionByRange(7, col("conv_id"), col("turn_idx"))
         .sortWithinPartitions("conv_id", "turn_idx")
-      val clustered = ConvFinalize.runClustered(clusteredIn, bucketSize = 32)
+      def clusteredOf(in: DataFrame) = ConvFinalize.runClustered(in, bucketSize = 32)
         .collect().map(c => c.conv_id -> c).toMap
+      val clustered = clusteredOf(clusteredIn)
+      val cachedIn = clusteredIn.cache()
+      val narrow = try clusteredOf(cachedIn) finally cachedIn.unpersist()
       Seq(
-        ("clustered_equals_salted", clustered == salted),
+        ("clustered_equals_salted", clustered == salted && narrow == salted),
         ("all_convs_resolved", salted.size == nConvs && clustered.size == nConvs),
         ("skew_conv_present", salted.keySet.exists(_.endsWith("00000000")))
       ).toDF("invariant", "ok")

@@ -28,13 +28,10 @@ final case class ConvExtract(
     start_dates: Seq[String],
     deadline_dates: Seq[String])
 
-/** Thrown (from executors) when input rows violate the clustered/salted
-  * partitioning contract — duplicated, interleaved, or disordered turns.
-  * A dedicated type so [[graft.PipelineMain]]'s salted-path fallback can
-  * match contract violations by CLASS (or class name inside a
-  * Spark-wrapped message) instead of message substrings, which would also
-  * match unrelated failures whose stack traces merely mention
-  * ConvFinalize (OOM, codegen errors, corrupt reads).
+/** Thrown (from executors) when S4's input breaks its contract: a
+  * repeated `(conv_id, turn_idx)`, or partition boundaries that moved
+  * between [[ConvFinalize.runClustered]]'s two passes. A dedicated type,
+  * so a caller can tell a contract break from other failures by class.
   */
 final class ConvContractViolation(msg: String) extends IllegalStateException(msg)
 
@@ -45,11 +42,13 @@ final class ConvContractViolation(msg: String) extends IllegalStateException(msg
   * turn_idx inside the conversation (collect order post-shuffle is
   * otherwise nondeterministic — SURVEY §7.4).
   *
-  * The pipeline ships [[runClustered]]: on a conv-clustered, turn-sorted
-  * input it resolves each conversation where it is scanned and exchanges
-  * only the conversations that straddle a partition boundary. [[run]] is
-  * the order-insensitive path for arbitrary inputs (and the driver's
-  * fallback when the clustered contract does not hold).
+  * The pipeline ships [[runClustered]], which has two routes: on a
+  * conv-clustered, turn-sorted input it resolves each conversation where
+  * it is scanned, and it sends whatever that scan cannot resolve — the
+  * conversations that straddle a partition boundary, or the whole input
+  * when its layout is not verified — through [[run]], the
+  * order-insensitive salted path. Any input with unique
+  * `(conv_id, turn_idx)` resolves.
   *
   * Skew (north_star: "salted joins for skew-heavy conversation keys"):
   * [[run]]'s aggregation is TWO-LEVEL. Phase 1 groups by the salted key
@@ -148,10 +147,10 @@ object ConvFinalize {
     * turn-range bucket. `sal_broke` carries the salary short-circuit
     * state across buckets; ordered-distinct seqs merge by filtered concat.
     * `bucket` is the merge sort key (salted path: turn_idx / bucketSize;
-    * clustered path: the chunk's first turn_idx); `idx_lo`/`idx_hi` are the
+    * narrow scan: the chunk's first turn_idx); `idx_lo`/`idx_hi` are the
     * covered turn_idx range, used by [[mergePartials]] to reject partials
-    * whose ranges overlap (which can only happen when a caller violated the
-    * contiguous-contiguous-range contract, e.g. a duplicated input).
+    * whose ranges overlap. A repeated turn inside one bucket throws in
+    * [[partialOf]], so a duplicated input fails on either route.
     */
   final case class ConvPartial(
       conv_id: String, bucket: Int,
@@ -163,6 +162,14 @@ object ConvFinalize {
 
   def partialOf(convId: String, bucket: Int, turnsUnsorted: Seq[SlimTurn]): ConvPartial = {
     val turns = turnsUnsorted.sortBy(_.turn_idx)
+    // (conv_id, turn_idx) is unique: merging a repeated turn would
+    // silently double its text and mentions
+    if (turns.nonEmpty) turns.lazyZip(turns.tail).foreach { (a, b) =>
+      if (a.turn_idx == b.turn_idx)
+        throw new ConvContractViolation(
+          s"ConvFinalize: turn_idx ${a.turn_idx} twice in conv_id=$convId - " +
+            "the input is not sorted by unique (conv_id, turn_idx); it duplicated a turn")
+    }
     val emp = scala.collection.mutable.LinkedHashSet.empty[String]
     turns.foreach(_.emp_groups.foreach(emp += _))
     val edu = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -207,11 +214,10 @@ object ConvFinalize {
     */
   def mergePartials(convId: String, partsUnsorted: Seq[ConvPartial]): ConvExtract = {
     val parts = partsUnsorted.sortBy(p => (p.bucket, p.idx_lo))
-    // contiguous-range invariant: every merge strategy (salted buckets,
-    // clustered chunks, cross-partition boundary partials) produces
-    // disjoint turn_idx ranges; a proper overlap means the same turns
-    // reached two partials (duplicated/interleaved input) and merging
-    // would silently misorder the conversation text — fail instead
+    // contiguous-range invariant: both merge strategies (salted buckets,
+    // the narrow scan's chunks) produce disjoint turn_idx ranges; a proper
+    // overlap means the same turns reached two partials and merging would
+    // silently misorder the conversation text — fail instead
     // ranges are INCLUSIVE, so a shared endpoint ([0,5] then [5,9], or two
     // zero-width [0,0] partials from a duplicated single-turn conversation)
     // is already the same turn reaching two partials — hence <=, not <
@@ -302,10 +308,9 @@ object ConvFinalize {
   // ------------------------------------------------------------------
 
   /** Folds each contiguous run of one conv_id into ordered `bucketSize`
-    * chunk partials (bucket = the chunk's first turn_idx, so partials of
-    * one conversation from different partitions sort correctly). A run
-    * `keep` declines is only walked: its turns are order-checked but no
-    * partial is built. Memory: at most one chunk of RAW turns at a time,
+    * chunk partials (bucket = the chunk's first turn_idx). A run `keep`
+    * declines is only walked: its turns are order-checked but no partial
+    * is built. Memory: at most one chunk of RAW turns at a time,
     * plus the current run's partials — whose conv-level payload
     * (concatenated text + mention arrays) grows with the conversation, the
     * same footprint as the salted path's phase-2 merge.
@@ -323,11 +328,11 @@ object ConvFinalize {
         var lastIdx = Int.MinValue
         while (in.hasNext && in.head.conv_id == convId) {
           val t = in.next()
-          if (t.turn_idx <= lastIdx) // == is a duplicated turn: (conv_id, turn_idx) is unique
+          if (t.turn_idx <= lastIdx)
             throw new ConvContractViolation(
               s"ConvFinalize.runClustered: turn_idx ${t.turn_idx} after $lastIdx inside " +
-                s"conv_id=$convId - the input is not sorted by unique (conv_id, turn_idx); " +
-                "use ConvFinalize.run (salted path) for unsorted inputs")
+                s"conv_id=$convId - the boundary pass saw its turns rise, so the input " +
+                "changed between passes")
           lastIdx = t.turn_idx
           if (folding) {
             chunk += t
@@ -342,59 +347,9 @@ object ConvFinalize {
       }
     }
 
-  /** One-pass scan output of the exchange path: exactly one side set — a
-    * fully resolved interior conversation, or a partial for the merge.
-    */
-  final case class ClusteredOut(done: Option[ConvExtract], part: Option[ConvPartial])
-
-  /** Per-partition scan of the exchange path: resolves interior runs on
-    * the spot and emits the first and last run of the partition as
-    * partials (they may continue in a neighboring partition). A conv_id
-    * recurring after its run closed throws; `seen` holds one conv_id per
-    * conversation for the partition's lifetime.
-    */
-  private[operators] def clusteredScan(
-      rows: Iterator[SlimTurn], bucketSize: Int): Iterator[ClusteredOut] = {
-    val seen = new java.util.HashSet[String]()
-    val runs = runsOf(rows, bucketSize, _ => true)
-    runs.zipWithIndex.flatMap { case ((convId, partials), i) =>
-      if (!seen.add(convId))
-        throw new ConvContractViolation(
-          s"ConvFinalize.runClustered: conv_id=$convId appears in non-contiguous runs " +
-            "within one partition - the input is not clustered by conv_id; " +
-            "use ConvFinalize.run (salted path) for unclustered inputs")
-      if (i == 0 || !runs.hasNext) partials.map(p => ClusteredOut(None, Some(p)))
-      else Seq(ClusteredOut(Some(mergePartials(convId, partials)), None))
-    }
-  }
-
-  /** The exchange path: [[clusteredScan]], then one `groupByKey` that
-    * merges each conversation's partials and rejects a conversation
-    * resolved more than once (duplicated across partitions).
-    */
-  private def exchangeMerge(extracted: org.apache.spark.sql.DataFrame, bucketSize: Int)(
-      implicit spark: SparkSession): Dataset[ConvExtract] = {
-    import spark.implicits._
-    slim(extracted)
-      .mapPartitions(it => clusteredScan(it, bucketSize))
-      .groupByKey(r => r.done.map(_.conv_id).getOrElse(r.part.get.conv_id))
-      .mapGroups { (cid, it) =>
-        val rs = it.toSeq
-        val dones = rs.flatMap(_.done)
-        val parts = rs.flatMap(_.part)
-        if (dones.length == 1 && parts.isEmpty) dones.head
-        else if (dones.isEmpty && parts.nonEmpty) mergePartials(cid, parts)
-        else
-          throw new ConvContractViolation(
-            s"ConvFinalize.runClustered: conv_id=$cid resolved ${dones.length} times with " +
-              s"${parts.length} loose partials - the input duplicated a conversation across " +
-              "partitions; use ConvFinalize.run (salted path) for such inputs")
-      }
-  }
-
   /** Boundary-pass row of one non-empty partition: its first and last
-    * conv_id, and whether its conv_id runs ascend (no null, each run's id
-    * above the one before).
+    * conv_id, and whether it is sorted for the narrow scan (no null, each
+    * run's conv_id above the one before, turn_idx rising inside each run).
     */
   private final case class PartBounds(first: String, last: String, ascending: Boolean)
 
@@ -408,18 +363,18 @@ object ConvFinalize {
     * be cut into the same partitions on two executions: a range shuffle
     * re-samples its bounds, a round-robin one deals rows in arrival order,
     * and AQE coalesces by the bytes of the columns read, which the
-    * one-column boundary pass shrinks. Its boundary pass would say nothing
-    * about its scan, so it takes the exchange path. A broadcast exchange
+    * narrow boundary pass shrinks. Its boundary pass would say nothing
+    * about its scan, so it takes the salted path. A broadcast exchange
     * does not count: it leaves the streamed side's partitions as they are.
     */
   private def reshuffles(pass: Dataset[_]): Boolean =
     PlanWalk.find(pass.queryExecution.executedPlan)(_.isInstanceOf[ShuffleExchangeLike]).isDefined
 
-  /** The boundary pass over `ids` (partition id, conv_id): one
+  /** The boundary pass over `ids` (partition id, conv_id, turn_idx): one
     * [[PartBounds]] per non-empty partition, keyed by partition index.
-    * Only `conv_id` is selected from the input, so Catalyst prunes
-    * every S1–S3 column expression; a partition stops being read at its
-    * first non-ascending run. The narrow scan learns its index from
+    * Only the two key columns are selected from the input, so Catalyst
+    * prunes every S1–S3 column expression; a partition stops being read
+    * at its first row out of order. The narrow scan learns its index from
     * `spark_partition_id()`, so a partition where that column is not its
     * index counts as not ascending: over a local relation the optimizer
     * evaluates the column at plan time, every row reads 0, and the scan
@@ -436,14 +391,20 @@ object ConvFinalize {
           var prev = Option(head.getUTF8String(1)).map(_.clone()).orNull
           val first = Option(prev).map(_.toString).orNull
           var last = first
-          var ascending = first != null && head.getInt(0) == index
+          var prevIdx = head.getInt(2)
+          var ascending = first != null && !head.isNullAt(2) && head.getInt(0) == index
           while (ascending && rows.hasNext) {
-            val id = rows.next().getUTF8String(1)
-            if (id == null) ascending = false
-            else if (id != prev) {
-              val s = id.toString
-              if (s.compareTo(last) > 0) { prev = id.clone(); last = s }
-              else ascending = false
+            val row = rows.next()
+            val id = row.getUTF8String(1)
+            if (id == null || row.isNullAt(2)) ascending = false
+            else {
+              val idx = row.getInt(2)
+              if (id != prev) {
+                val s = id.toString
+                if (s.compareTo(last) > 0) { prev = id.clone(); last = s }
+                else ascending = false
+              } else if (idx <= prevIdx) ascending = false
+              prevIdx = idx
             }
           }
           Iterator.single(index -> PartBounds(first, last, ascending))
@@ -470,7 +431,8 @@ object ConvFinalize {
 
   /** Per-partition scan of a verified layout: resolves every run in place
     * except the straddlers, which it only walks. It re-checks what the
-    * boundary pass saw — each run's conv_id above the previous one, and,
+    * boundary pass saw — each run's conv_id above the previous one,
+    * turn_idx rising inside each run ([[runsOf]]), and,
     * at the end of the partition, the same first and last conv_id — so a
     * partition whose boundaries moved between the two passes throws
     * instead of resolving a split conversation twice.
@@ -510,37 +472,40 @@ object ConvFinalize {
     * table written with SORTED BY (conv_id, turn_idx), the stage
     * checkpoints, the generator).
     *
-    * Two passes. The boundary pass ([[partitionBounds]]) reads `conv_id`
-    * alone and returns each partition's first and last conv_id. Where
-    * every partition's runs ascend and partition ranges meet only at
-    * endpoints, [[narrowScan]] resolves every conversation where it is
-    * scanned — no exchange — except the straddlers, the conv_ids shared by
-    * the ends of two ranges. Those go through the exchange path
-    * ([[exchangeMerge]]) over `extracted` filtered to them, unioned in
-    * only when there are any. When the layout cannot be verified, the
-    * whole input takes the exchange path, and so does an input whose plan
-    * runs a shuffle outside cached data ([[reshuffles]]): its partitions
-    * may be cut differently on each execution, so no boundary pass runs.
+    * Two routes. The boundary pass ([[partitionBounds]]) reads `conv_id`
+    * and `turn_idx` and returns each partition's first and last conv_id.
+    * Where every partition is sorted (conv_id runs ascend, turn_idx rises
+    * inside each run) and partition ranges meet only at endpoints,
+    * [[narrowScan]] resolves every conversation where it is scanned — no
+    * exchange — except the straddlers, the conv_ids shared by the ends of
+    * two ranges. Everything the narrow scan does not resolve goes through
+    * the salted path ([[run]]): the straddlers, over `extracted` filtered
+    * to them and unioned in only when there are any, or the whole input
+    * when its layout is not verified or its plan runs a shuffle outside
+    * cached data ([[reshuffles]]) — such partitions may be cut differently
+    * on each execution, so no boundary pass runs. Any input with unique
+    * `(conv_id, turn_idx)` resolves, whatever its order.
     *
-    * Safety: the contract is checked, not trusted. In-partition
-    * interleaving or disorder throws in either scan; a partition whose
-    * boundaries moved between the passes throws at its end in
-    * [[narrowScan]]; every conversation that crosses a partition reaches
-    * the exchange path, whose overlap guard ([[mergePartials]]) and
-    * single-resolution guard reject duplicates. No violation can silently
-    * corrupt a result — callers with arbitrary inputs use [[run]].
+    * Safety: the contract is checked, not trusted. A repeated turn throws
+    * in [[partialOf]] on either route; a partition whose boundaries moved
+    * between the passes throws in [[narrowScan]] instead of resolving a
+    * split conversation twice. No violation can silently corrupt a result.
     *
     * Cost: the boundary pass is a job run when this is called. It runs
-    * `extracted`'s upstream a second time, pruned to `conv_id`, so a
-    * caller whose upstream is costly beyond its column expressions pays
-    * that twice unless it caches `extracted` first. A shuffled input pays
-    * no boundary pass; caching it lets it take the narrow scan.
+    * `extracted`'s upstream a second time, pruned to the two key columns,
+    * so a caller whose upstream is costly beyond its column expressions
+    * pays that twice unless it caches `extracted` first. A shuffled input
+    * pays no boundary pass; caching it lets it take the narrow scan. An
+    * unverified layout pays the boundary pass on top of the salted path's
+    * two exchanges. That includes an input hash-partitioned by conv_id
+    * and sorted, whose conversations are whole in each partition but do
+    * not ascend across runs; no caller in the pipeline produces one.
     */
   def runClustered(extracted: org.apache.spark.sql.DataFrame, bucketSize: Int = 256)(
       implicit spark: SparkSession): Dataset[ConvExtract] = {
     import spark.implicits._
     // fresh plans: they see a cache added after `extracted` was planned
-    val ids = extracted.select(spark_partition_id(), col("conv_id"))
+    val ids = extracted.select(spark_partition_id(), col("conv_id"), col("turn_idx"))
     val scanIn = extracted
       .select(spark_partition_id().as("_1"), struct(slimCols.map(col): _*).as("_2"))
       .as[(Int, SlimTurn)]
@@ -548,12 +513,11 @@ object ConvFinalize {
       if (Seq(ids, scanIn).exists(reshuffles)) None
       else { val bounds = partitionBounds(ids); straddlers(bounds).map(bounds -> _) }
     layout match {
-      case None => exchangeMerge(extracted, bucketSize)
+      case None => run(extracted, bucketSize)
       case Some((bounds, cross)) =>
         val narrow = scanIn.mapPartitions(it => narrowScan(it, bounds, cross, bucketSize))
         if (cross.isEmpty) narrow
-        else narrow.union(exchangeMerge(
-          extracted.filter(col("conv_id").isin(cross.toSeq: _*)), bucketSize))
+        else narrow.union(run(extracted.filter(col("conv_id").isin(cross.toSeq: _*)), bucketSize))
     }
   }
 }

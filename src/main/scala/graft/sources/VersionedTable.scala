@@ -957,7 +957,8 @@ object VersionedTable {
   /** The change data feed of versions (fromSeq, toSeq] (Delta's
     * `readChangeData`): one row per row-level change, tagged
     * `_change_type` (insert / delete / update_preimage / update_postimage)
-    * and `_commit_version`. Planned from manifest evidence per step:
+    * and `_commit_version`. Planned from manifest evidence per step
+    * ([[walkSteps]]):
     * an append's new file groups stream as inserts (no sidecar needed —
     * the data files ARE the change set); a layout-only rewrite
     * (compact / sort / z-order — content id unchanged) contributes
@@ -973,60 +974,39 @@ object VersionedTable {
       implicit spark: SparkSession): DataFrame = {
     require(fromSeq <= toSeq, s"fromSeq $fromSeq > toSeq $toSeq")
     val vs = versions(table)
-    def at(seq: Int) = vs.find(_.seq == seq).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $seq of $table not found (expired or never committed)"))
-    val to = at(toSeq); at(fromSeq)
-    val slices: Seq[DataFrame] =
-      vs.filter(v => v.seq >= fromSeq && v.seq <= toSeq).sortBy(_.seq)
-        .sliding(2).flatMap {
-          case Seq(a, b) =>
-            val prior = a.dirs.toSet
-            val added = b.dirs.filterNot(prior)
-            val removed = prior -- b.dirs.toSet
-            // same gap rule as the append walk: tag-exempt expire can
-            // retain non-adjacent commits, across which a step is
-            // unclassifiable from manifest evidence
-            if (b.seq != a.seq + 1 && (added.nonEmpty || removed.nonEmpty || b.dels != a.dels))
-              throw new IllegalStateException(
-                s"versions between v${a.seq} and v${b.seq} of $table expired — " +
-                  "the change feed cannot be answered across the gap")
-            else if (added.isEmpty && removed.isEmpty &&
-              b.snapshotId == a.snapshotId) Seq.empty // noop / schema
-            else if (removed.isEmpty && added.nonEmpty && b.dels == a.dels)
-              Seq(spark.read.option("mergeSchema", "true")
-                .parquet(added.map(d => s"$table/$d"): _*)
-                .withColumn("_change_type", lit("insert"))
-                .withColumn("_commit_version", lit(b.seq)))
-            else if (b.snapshotId == a.snapshotId) Seq.empty // layout-only (incl. applyDeletes)
-            else b.changes match {
-              // replay ONLY the sidecar the commit's own manifest line
-              // records — a bare changes/v<seq> dir on disk is not
-              // evidence (a crashed op's orphan could carry that name
-              // for an unrelated commit) and is left to [[vacuum]]
-              case Some(cd) =>
-                Seq(spark.read.option("mergeSchema", "true")
-                  .parquet(s"$table/$cd")
-                  .withColumn("_commit_version", lit(b.seq)))
-              // LEGACY lines (pre-dirseqs, pre-recorded-sidecar tables)
-              // never named their sidecar: for those — and ONLY those,
-              // matching vacuum/expire's legacy protection — fall back
-              // to the bare-name dir. A post-record commit that owns a
-              // sidecar always names it, so an unrecorded bare dir at a
-              // modern commit's seq stays an unclaimable orphan.
-              case None if b.dirSeqs.isEmpty &&
-                  hexists(hpath(changesDir(table, b.seq))) =>
-                Seq(spark.read.option("mergeSchema", "true")
-                  .parquet(changesDir(table, b.seq))
-                  .withColumn("_commit_version", lit(b.seq)))
-              case None => throw new IllegalStateException(
-                s"commit v${b.seq} of $table changed rows without a recorded " +
-                  "change capture (overwrite/rollback, or a delete/merge/" +
-                  "morDelete before setChangeCapture) — the feed cannot " +
-                  "replay it; read snapshots instead")
-            }
-          case _ => Seq.empty
-        }.toSeq
+    val to = retained(vs, table, toSeq); retained(vs, table, fromSeq)
+    val slices: Seq[DataFrame] = walkSteps(vs, table, fromSeq, toSeq,
+        "the change feed cannot be answered across the gap")(
+      appended = (b, added) => Seq(spark.read.option("mergeSchema", "true")
+        .parquet(added.map(d => s"$table/$d"): _*)
+        .withColumn("_change_type", lit("insert"))
+        .withColumn("_commit_version", lit(b.seq))),
+      rowLevel = b => b.changes match {
+        // replay ONLY the sidecar the commit's own manifest line
+        // records — a bare changes/v<seq> dir on disk is not
+        // evidence (a crashed op's orphan could carry that name
+        // for an unrelated commit) and is left to [[vacuum]]
+        case Some(cd) =>
+          Seq(spark.read.option("mergeSchema", "true")
+            .parquet(s"$table/$cd")
+            .withColumn("_commit_version", lit(b.seq)))
+        // LEGACY lines (pre-dirseqs, pre-recorded-sidecar tables)
+        // never named their sidecar: for those — and ONLY those,
+        // matching vacuum/expire's legacy protection — fall back
+        // to the bare-name dir. A post-record commit that owns a
+        // sidecar always names it, so an unrecorded bare dir at a
+        // modern commit's seq stays an unclaimable orphan.
+        case None if b.dirSeqs.isEmpty &&
+            hexists(hpath(changesDir(table, b.seq))) =>
+          Seq(spark.read.option("mergeSchema", "true")
+            .parquet(changesDir(table, b.seq))
+            .withColumn("_commit_version", lit(b.seq)))
+        case None => throw new IllegalStateException(
+          s"commit v${b.seq} of $table changed rows without a recorded " +
+            "change capture (overwrite/rollback, or a delete/merge/" +
+            "morDelete before setChangeCapture) — the feed cannot " +
+            "replay it; read snapshots instead")
+      })
     val phys =
       if (slices.isEmpty) readPhysical(table, to).limit(0)
         .withColumn("_change_type", lit(null).cast("string"))
@@ -1958,14 +1938,52 @@ object VersionedTable {
     })
   }
 
-  /** The file groups APPENDED across versions (fromSeq, toSeq] of `vs` — the one
-    * manifest walk behind both the streaming source's micro-batches and
-    * [[readChangesBetween]]. Per step, decided from manifest evidence
-    * alone: an append (dirs superset) contributes its new dirs; a
-    * layout-only rewrite — compact / rewriteSorted / rewriteZOrder, dirs
-    * replaced but the content snapshot id UNCHANGED — contributes nothing
-    * (the rows all flowed through earlier versions); a data rewrite
-    * (overwrite / deleteRange / merge) throws — a row-level change is not
+  /** The one manifest walk behind [[appendedDirsIn]] and
+    * [[readChangeFeed]]: the steps between consecutive retained versions in
+    * [fromSeq, toSeq] of `vs`, each classified from manifest evidence
+    * alone. An append (no dir removed, delete files unchanged) hands its
+    * new dirs to `appended`; a layout-only rewrite — compact /
+    * rewriteSorted / rewriteZOrder / applyDeletes, dirs replaced but the
+    * content snapshot id UNCHANGED — contributes nothing (the rows all
+    * flowed through earlier versions); any other step changed rows in
+    * place (overwrite / deleteRange / merge / morDelete / rollback) and
+    * goes to `rowLevel`.
+    *
+    * Tag-exempt expire can retain NON-ADJACENT commits (a tagged island
+    * inside a dropped range): across such a gap the step is
+    * unclassifiable — an interior data rewrite could hide behind a
+    * dirs-superset (post-rewrite rows delivered as "appends") or an
+    * interior compaction could masquerade as a data rewrite. A gap with
+    * identical dirs and delete files is provably empty; any other gap
+    * throws, naming `gapMsg`.
+    */
+  private def retained(vs: Seq[Version], table: String, seq: Int): Version =
+    vs.find(_.seq == seq).getOrElse(throw new IllegalArgumentException(
+      s"version $seq of $table not found (expired or never committed)"))
+
+  private def walkSteps[A](vs: Seq[Version], table: String, fromSeq: Int, toSeq: Int,
+      gapMsg: String)(appended: (Version, Seq[String]) => Seq[A],
+      rowLevel: Version => Seq[A]): Seq[A] =
+    vs.filter(v => v.seq >= fromSeq && v.seq <= toSeq).sortBy(_.seq)
+      .sliding(2).flatMap {
+        case Seq(a, b) =>
+          val prior = a.dirs.toSet
+          val added = b.dirs.filterNot(prior)
+          val removed = prior -- b.dirs.toSet
+          if (b.seq != a.seq + 1 && (added.nonEmpty || removed.nonEmpty || b.dels != a.dels))
+            throw new IllegalStateException(
+              s"versions between v${a.seq} and v${b.seq} of $table expired — $gapMsg")
+          // a changed delete-file set is a row-level change even with the
+          // dirs untouched (morDelete) — only dels-stable steps are appends
+          else if (removed.isEmpty && added.nonEmpty && b.dels == a.dels) appended(b, added)
+          else if (b.snapshotId == a.snapshotId) Seq.empty // noop / schema / layout-only
+          else rowLevel(b)
+        case _ => Seq.empty
+      }.toSeq
+
+  /** The file groups APPENDED across versions (fromSeq, toSeq] of `vs` —
+    * the walk behind both the streaming source's micro-batches and
+    * [[readChangesBetween]]. A row-level step throws: it is not
     * representable as appended rows, and failing loudly at the exact
     * version beats silently re-delivering or dropping. Both endpoints
     * must still be retained (expire makes the walk unanswerable).
@@ -1973,39 +1991,15 @@ object VersionedTable {
   private[graft] def appendedDirsIn(vs: Seq[Version], table: String, fromSeq: Int,
       toSeq: Int): Seq[String] = {
     require(fromSeq <= toSeq, s"fromSeq $fromSeq > toSeq $toSeq")
-    def at(seq: Int) = vs.find(_.seq == seq).getOrElse(
-      throw new IllegalArgumentException(
-        s"version $seq of $table not found (expired or never committed)"))
-    at(fromSeq); at(toSeq)
-    if (fromSeq == toSeq) return Seq.empty
-    vs.filter(v => v.seq >= fromSeq && v.seq <= toSeq).sortBy(_.seq)
-      .sliding(2).flatMap {
-        case Seq(a, b) =>
-          val prior = a.dirs.toSet
-          val added = b.dirs.filterNot(prior)
-          val removed = prior -- b.dirs.toSet
-          // tag-exempt expire can retain NON-ADJACENT commits (a tagged
-          // island inside a dropped range): across such a gap the step is
-          // unclassifiable from manifest evidence — an interior data
-          // rewrite could hide behind a dirs-superset (silently delivering
-          // post-rewrite rows as "appends") or an interior compaction
-          // could masquerade as a data rewrite. Identical-dirs gaps are
-          // provably empty; anything else fails loudly.
-          if (b.seq != a.seq + 1 && (added.nonEmpty || removed.nonEmpty || b.dels != a.dels))
-            throw new IllegalStateException(
-              s"versions between v${a.seq} and v${b.seq} of $table expired — " +
-                "the appended-rows walk cannot be answered across the gap; " +
-                "retain more versions or read full snapshots")
-          // a changed delete-file set is a row-level change even with the
-          // dirs untouched (morDelete) — only dels-stable steps are appends
-          else if (removed.isEmpty && b.dels == a.dels) added
-          else if (b.snapshotId == a.snapshotId) Seq.empty // layout-only (incl. applyDeletes)
-          else throw new IllegalStateException(
-            s"commit v${b.seq} of $table rewrote data in place " +
-              "(overwrite/delete/merge/morDelete/rollback) — the range is not " +
-              "representable as appended rows; read versions instead")
-        case _ => Seq.empty
-      }.toSeq
+    retained(vs, table, fromSeq); retained(vs, table, toSeq)
+    walkSteps(vs, table, fromSeq, toSeq,
+        "the appended-rows walk cannot be answered across the gap; " +
+          "retain more versions or read full snapshots")(
+      appended = (_, added) => added,
+      rowLevel = b => throw new IllegalStateException(
+        s"commit v${b.seq} of $table rewrote data in place " +
+          "(overwrite/delete/merge/morDelete/rollback) — the range is not " +
+          "representable as appended rows; read versions instead"))
   }
 
   /** Incremental append read (Iceberg's incremental scan / Delta CDF's

@@ -146,20 +146,38 @@ class ConvFinalizeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(clustered == single)
   }
 
-  test("clustered fast path throws on interleaved conv runs instead of corrupting") {
+  test("clustered fast path resolves interleaved conv runs exactly") {
     import spark.implicits._
-    val rows = Seq(turn("a", 0), turn("b", 0), turn("b", 1), turn("a", 1), turn("c", 0))
+    val rows = Seq(turn("a", 0, text = "a0"), turn("b", 0), turn("b", 1),
+      turn("a", 1, text = "a1"), turn("c", 0))
     val df = spark.createDataset(spark.sparkContext.parallelize(rows, 1)).toDF()
-    val e = intercept[Exception](ConvFinalize.runClustered(df).collect())
-    assert(msgChain(e).contains("not clustered"), msgChain(e))
+    assertSinglePhase(df, ConvFinalize.runClustered(df))
   }
 
-  test("clustered fast path throws on unsorted turn_idx instead of corrupting") {
+  test("clustered fast path resolves unsorted turn_idx exactly") {
     import spark.implicits._
-    val rows = Seq(turn("z", 0), turn("a", 5), turn("a", 3), turn("a", 7), turn("q", 0))
+    val rows = Seq(turn("z", 0), turn("a", 5, text = "a5"), turn("a", 3, text = "a3"),
+      turn("a", 7, text = "a7"), turn("q", 0))
     val df = spark.createDataset(spark.sparkContext.parallelize(rows, 1)).toDF()
-    val e = intercept[Exception](ConvFinalize.runClustered(df).collect())
-    assert(msgChain(e).contains("not sorted"), msgChain(e))
+    assertSinglePhase(df, ConvFinalize.runClustered(df))
+  }
+
+  test("a conversation's later turns before its earlier ones in one ascending partition resolve exactly") {
+    // conv_ids ascend, so only the boundary pass's turn_idx check keeps
+    // this partition off the narrow scan: one file half of "b" (turns
+    // 10-19) packed before the other (turns 0-9)
+    val b = (0 until 20).map(i => turn("b", i, text = s"b$i",
+      loc = if (i % 7 == 1) Seq(if (i < 10) "Germany" else "Poland") else Nil))
+    val df = partitioned(Seq(Seq(turn("a", 0)) ++ b.drop(10) ++ b.take(10) ++ Seq(turn("c", 0))))
+    assertSinglePhase(df, ConvFinalize.runClustered(df, bucketSize = 4))
+  }
+
+  test("the salted path throws on a turn repeated inside a bucket") {
+    import spark.implicits._
+    val rows = Seq(turn("a", 0), turn("a", 1), turn("a", 2), turn("a", 1), turn("b", 0))
+    val df = rows.toDS().toDF()
+    val e = intercept[Exception](ConvFinalize.run(df, bucketSize = 16).collect())
+    assert(msgChain(e).contains("ConvContractViolation"), msgChain(e))
   }
 
   test("clustered fast path throws when a conversation is duplicated across partitions") {
@@ -249,7 +267,7 @@ class ConvFinalizeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       monster.slice(40, 100),
       monster.drop(100) ++ rest.tail.flatten))
     val ds = ConvFinalize.runClustered(df, bucketSize = 16)
-    assert(shuffleExchanges(ds) > 0, "the straddler must take the exchange path")
+    assert(shuffleExchanges(ds) > 0, "the straddler must take the salted path")
     assertSinglePhase(df, ds)
     // the currency short-circuit at turn 97 sits in the middle partition
     assert(ds.collect().find(_.conv_id == "conv_05_monster").get.sal_values == Seq(52000.0))
@@ -275,7 +293,7 @@ class ConvFinalizeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       msgChain(e).contains("moved between the two passes"), msgChain(e))
   }
 
-  test("non-ascending input (monster mid-stream) takes the exchange path, == single-phase fold") {
+  test("non-ascending input (monster mid-stream) takes the salted path, == single-phase fold") {
     import spark.implicits._
     val df = spark.createDataset(spark.sparkContext.parallelize(clusteredFixture, 4)).toDF()
     val ds = ConvFinalize.runClustered(df, bucketSize = 16)
@@ -283,7 +301,7 @@ class ConvFinalizeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assertSinglePhase(df, ds)
   }
 
-  test("uncached range-shuffled input takes the exchange path and resolves exactly") {
+  test("uncached range-shuffled input takes the salted path and resolves exactly") {
     import org.apache.spark.sql.functions.col
     // q51's shape at spec size: a range split on (conv_id, turn_idx) cuts
     // through conversations, and each execution re-samples its bounds
@@ -298,7 +316,8 @@ class ConvFinalizeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       .sortWithinPartitions("conv_id", "turn_idx")
     (1 to 3).foreach { _ =>
       val ds = ConvFinalize.runClustered(ranged, bucketSize = 16)
-      assert(shuffleExchanges(ds) == 2, ds.queryExecution.executedPlan.toString) // range + groupByKey
+      // the range shuffle + the salted path's two groupByKeys
+      assert(shuffleExchanges(ds) == 3, ds.queryExecution.executedPlan.toString)
       assertSinglePhase(ranged, ds)
     }
   }
@@ -328,7 +347,7 @@ class ConvFinalizeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assertSinglePhase(df, ds)
   }
 
-  test("a local Seq input (partition id folded at plan time) takes the exchange path, exactly") {
+  test("a local Seq input (partition id folded at plan time) takes the salted path, exactly") {
     import spark.implicits._
     // a LocalRelation: spark_partition_id() reads 0 in every partition, so
     // the partitions cannot be told apart and the layout is not verified
