@@ -4,6 +4,7 @@ import java.lang.management.ManagementFactory
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ml.SectionTagger
 import graft.operators._
@@ -101,17 +102,19 @@ object Bench {
     if (unpersistEagerly) tagged.unpersist()
     // runClustered runs its boundary pass when called: time it with s4
     val convs = phase("s4_conv") {
-      val c = ConvFinalize.runClustered(extracted).cache()
+      val c = ConvFinalize.runClustered(extracted).rdd.persist(StorageLevel.MEMORY_AND_DISK)
       c.count(); c
     }
     if (unpersistEagerly) extracted.unpersist()
-    val canon = phase("s5_linking") {
-      val c = Linking.canonicalize(KgPipeline.orgMentions(convs)).cache()
-      c.count(); c
-    }
-    val nTriples = phase("s6_emit")(KgPipeline.emitTriples(convs, canon).count())
+    // a canonical table (the LSH path) is materialized inside the phase
+    val canon = phase("s5_linking")(Linking.link(convs.flatMap(_.orgs)) match {
+      case Left(c) => c.cache().count(); Left(c)
+      case local => local
+    })
+    val nTriples = phase("s6_emit")(KgPipeline.emitLinked(convs, canon).count())
     if (!unpersistEagerly) Seq(cleaned, tagged, extracted).foreach(_.unpersist())
-    Seq(convs.toDF(), canon).foreach(_.unpersist())
+    convs.unpersist()
+    canon.swap.foreach(_.unpersist())
     (out.toSeq, nTriples)
   }
 

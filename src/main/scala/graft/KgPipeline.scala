@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.ml.SectionTagger
 import graft.model.{Triple, Turn}
@@ -56,31 +58,59 @@ object KgPipeline {
     * whole; a repeated turn throws, never corrupts. Its boundary pass is a
     * job run by this call, over `turns` with S1–S3 pruned to the key
     * columns; `turns` that come out of an uncached shuffle skip it.
+    *
+    * The resolved conversations are persisted as objects (an RDD, so no
+    * encoder round trip and no CacheManager entry; the ContextCleaner
+    * drops the blocks once the returned Dataset is gone). S5 linking
+    * counts their org surfaces in one job ([[Linking.link]]) that also
+    * fills that persist; the triples come from one map-side pass over it
+    * ([[emitLinked]]).
     */
   def computeTriples(turns: Dataset[Turn], tagger: SectionTagger.Trained,
       extractDates: Boolean = false)(implicit spark: SparkSession): Dataset[Triple] = {
     val tagged = SectionTagger.predict(tagger, cleanTurns(turns))
     val extracted = TurnExtract.extract(tagged, extractDates)
-    val convs = ConvFinalize.runClustered(extracted).cache()
-    emitTriples(convs, Linking.canonicalize(orgMentions(convs)))
+    val convs = ConvFinalize.runClustered(extracted).rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    emitLinked(convs, Linking.link(convs.flatMap(_.orgs)))
   }
 
   /** S5 linking input — one `surface` row per org mention. */
   def orgMentions(convs: Dataset[ConvExtract]): DataFrame =
     convs.toDF().select(explode(col("orgs")).as("surface"))
 
+  /** S5 scoring + S6 emit, given the canonical org table — the landed
+    * `s5_entities` in the checkpointing driver. A table the driver can
+    * hold ([[Linking.linkedTable]]) emits map-side ([[emitLinked]]); a
+    * larger one is joined. `convs` hold one row per conv_id, as S4
+    * writes them.
+    */
+  def emitTriples(convs: Dataset[ConvExtract], orgCanonical: DataFrame)(
+      implicit spark: SparkSession): Dataset[Triple] =
+    emitLinked(convs.rdd, Linking.linkedTable(orgCanonical))
+
   /** S5 scoring + S6 emit. A conversation's sector, ISCO code and salary
     * estimate depend only on its own skills and location (the reference
     * scores each posting on its own, extractor.py:95-128), so both run
     * map-side over the convs: [[Scoring.enrich]] against the weight and
     * salary tables every executor already holds, then
-    * [[TripleEmit.convTriples]] — no join, no exchange. Only the org
-    * triples meet another table, the cross-conversation canonical map.
+    * [[TripleEmit.convTriples]]. With a driver-sized canonical map the org
+    * triples come out of the same pass ([[TripleEmit.orgTriplesOf]] over
+    * the broadcast map): one flatMap, no join, no exchange. That is exact
+    * because `convs` hold one row per conv_id, so per-conversation
+    * distinct is the global one. A canonical table keeps the org triples'
+    * join ([[TripleEmit.orgTriples]]).
     */
-  def emitTriples(convs: Dataset[ConvExtract], orgCanonical: DataFrame)(
+  def emitLinked(convs: RDD[ConvExtract], canonical: Linking.Linked)(
       implicit spark: SparkSession): Dataset[Triple] = {
     import spark.implicits._
-    convs.flatMap(c => TripleEmit.convTriples(Scoring.enrich(c)))
-      .union(TripleEmit.orgTriples(convs, orgCanonical))
+    canonical match {
+      case Right(m) =>
+        val canon = spark.sparkContext.broadcast(m)
+        spark.createDataset(convs.flatMap(c => TripleEmit.convTriples(Scoring.enrich(c)) ++
+          TripleEmit.orgTriplesOf(c.conv_id, c.orgs, s => canon.value.getOrElse(s, s))))
+      case Left(table) =>
+        spark.createDataset(convs.flatMap(c => TripleEmit.convTriples(Scoring.enrich(c))))
+          .union(TripleEmit.orgTriples(spark.createDataset(convs), table))
+    }
   }
 }

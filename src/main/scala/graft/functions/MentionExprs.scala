@@ -1,7 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -9,8 +11,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.rules.Rules
+import graft.sources.Dims
 
-/** X3/X4/X5 mention extraction as native expressions (SURVEY §2.6).
+/** X3/X4/X5/X9 mention extraction as native expressions (SURVEY §2.6).
   *
   * These were `regexp_extract_all` + `transform`/`filter` Column chains;
   * the per-turn regex scans were the last java.util.regex on the hot path
@@ -33,6 +36,30 @@ object MentionEvals {
 
   /** X5 date-like spans over CLEANED text, stoplist-filtered. */
   def dates(s: UTF8String): ArrayData = strArray(Rules.extractDates(s.toString))
+
+  // X9 keywords in Dims.employmentKeywords order, each with its group
+  private val empKeywords: Array[UTF8String] =
+    Dims.employmentKeywords.map(UTF8String.fromString).toArray
+  private val empGroupOf: Array[UTF8String] = {
+    val groupOf = Dims.employmentGroups.flatMap { case (g, ss) => ss.map(_ -> g) }.toMap
+    Dims.employmentKeywords.map(k => UTF8String.fromString(groupOf(k))).toArray
+  }
+
+  /** X9 employment groups over CLEANED text: the group of every keyword
+    * the text contains, keyword order, first hit per group kept
+    * (ExtractInfo.py:562-597). A null text has no groups.
+    */
+  def employment(s: UTF8String): ArrayData = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Any]
+    if (s != null) {
+      var i = 0
+      while (i < empKeywords.length) {
+        if (s.contains(empKeywords(i)) && !out.contains(empGroupOf(i))) out += empGroupOf(i)
+        i += 1
+      }
+    }
+    new GenericArrayData(out.toArray)
+  }
 }
 
 abstract class MentionExpr extends UnaryExpression {
@@ -69,6 +96,26 @@ case class DatesExtractExpr(child: Expression) extends MentionExpr {
     copy(child = newChild)
 }
 
+/** [[MentionEvals.employment]]: never null — a null text yields an empty
+  * array, as the Column twin in EmploymentSpec does.
+  */
+case class EmploymentExtractExpr(child: Expression) extends MentionExpr {
+  override def prettyName: String = "extract_employment"
+  override def nullable: Boolean = false
+  override def eval(input: InternalRow): Any =
+    MentionEvals.employment(child.eval(input).asInstanceOf[UTF8String])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.MentionEvals.employment(${c.isNull} ? null : ${c.value});""",
+      isNull = FalseLiteral)
+  }
+  override protected def withNewChildInternal(newChild: Expression): EmploymentExtractExpr =
+    copy(child = newChild)
+}
+
 object MentionFunctions {
   def extract_locations(c: Column): Column =
     Bridge.column(LocationsExtractExpr(Bridge.expression(c)))
@@ -76,4 +123,6 @@ object MentionFunctions {
     Bridge.column(OrgsExtractExpr(Bridge.expression(c)))
   def extract_dates(c: Column): Column =
     Bridge.column(DatesExtractExpr(Bridge.expression(c)))
+  def extract_employment(c: Column): Column =
+    Bridge.column(EmploymentExtractExpr(Bridge.expression(c)))
 }

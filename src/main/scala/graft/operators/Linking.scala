@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -124,6 +127,12 @@ object ConnectedComponents {
   * surface = most frequent member (lexicographic min tie-break). The
   * reference's nearest kin are the ground-truth similarity ops G1/G2 and
   * the dead DBSCAN path X17 (SURVEY §2.6).
+  *
+  * Two paths, chosen by vocabulary size: up to `localThreshold` distinct
+  * surfaces, one job counts them ([[surfaceCounts]]) and the driver
+  * links them with a shingle index + union-find (the same
+  * Jaccard rule and canonical choice); above it, or past the driver's
+  * pair budget, the distributed LSH path runs.
   */
 object Linking {
 
@@ -135,13 +144,43 @@ object Linking {
         i => s.substr(i + 1, lit(3))))
   }
 
+  /** Distinct-surface budget of the driver-side path: a vocabulary of at
+    * most this many surfaces links on the driver, a larger one through LSH.
+    */
+  private val defaultLocalThreshold: Long = 20000L
+
+  /** Linked org surfaces: Right(surface -> canonical) when the driver
+    * holds the map, Left(the `surface`, `canonical` table) when it does
+    * not.
+    */
+  type Linked = Either[DataFrame, Map[String, String]]
+
+  /** Links a vocabulary of org surfaces: on the driver
+    * ([[localCanonical]]) when it fits, else through LSH.
+    */
+  def link(surfaces: RDD[String])(implicit spark: SparkSession): Linked = {
+    import spark.implicits._
+    localCanonical(surfaces).toRight(canonicalizeLsh(surfaces.toDF("surface"))._1)
+  }
+
+  /** A landed canonical table as [[link]] returns it: read to the driver
+    * when it holds at most the driver path's budget of rows, else kept
+    * as the table.
+    */
+  def linkedTable(table: DataFrame)(implicit spark: SparkSession): Linked = {
+    import spark.implicits._
+    val rows = table.select(col("surface"), col("canonical"))
+      .limit(defaultLocalThreshold.toInt + 1).as[(String, String)].collect()
+    if (rows.length <= defaultLocalThreshold) Right(rows.toMap) else Left(table)
+  }
+
   /** mentions(surface) -> (surface, canonical). Distinct surfaces only go
     * through LSH — at 10^12 mentions the distinct() collapses to entity
     * vocabulary scale before any pairwise work, and LSH bands bound the
     * candidate pairs instead of an O(n²) self-join.
     */
   def canonicalize(mentions: DataFrame, jaccardDistance: Double = 0.5,
-      localThreshold: Long = 20000L)(implicit spark: SparkSession): DataFrame =
+      localThreshold: Long = defaultLocalThreshold)(implicit spark: SparkSession): DataFrame =
     canonicalizeWithMetrics(mentions, jaccardDistance, localThreshold)._1
 
   /** [[canonicalize]] plus a blocking-audit frame (`metric`, `value`):
@@ -153,38 +192,67 @@ object Linking {
     * star-sampled buckets. The pipeline lands this beside s5_entities.
     */
   def canonicalizeWithMetrics(mentions: DataFrame, jaccardDistance: Double = 0.5,
-      localThreshold: Long = 20000L)(
+      localThreshold: Long = defaultLocalThreshold)(
       implicit spark: SparkSession): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val counts = mentions.groupBy("surface").agg(count(lit(1)).as("freq")).cache()
-    // count() materializes the cache in one parallel job, so the gated
-    // collect below reads cached blocks (a limit()-based gate measured
-    // WORSE here: CollectLimit's incremental take re-ran the aggregation
-    // across its scale-up jobs, ~0.4 s in the round-6 stage profile,
-    // OPTIMIZATION_r06.md)
-    val n = counts.count()
-    val local =
-      if (n <= localThreshold)
-        canonicalizeLocal(
-          counts.select(col("surface"), col("freq")).as[(String, Long)].collect(),
-          jaccardDistance)
-      else None
-    local match {
-      case Some(df) => (df, Seq(("path_local", 1L)).toDF("metric", "value"))
-      case None =>
-        val (df, m) = canonicalizeLsh(counts, jaccardDistance)
-        (df, Seq(("path_lsh", 1L)).toDF("metric", "value").unionAll(m))
+    localCanonical(mentions.select(col("surface")).as[String].rdd, jaccardDistance,
+        localThreshold) match {
+      case Some(m) =>
+        (m.toSeq.toDF("surface", "canonical"), Seq(("path_local", 1L)).toDF("metric", "value"))
+      case None => canonicalizeLsh(mentions, jaccardDistance)
     }
   }
 
+  /** The driver-side path alone: surface -> canonical over every distinct
+    * surface, from one [[surfaceCounts]] job and the driver union-find.
+    * None when the vocabulary exceeds `localThreshold` or the shingle
+    * index exceeds its pair budget; the caller then links through
+    * [[canonicalizeLsh]].
+    */
+  def localCanonical(surfaces: RDD[String], jaccardDistance: Double = 0.5,
+      localThreshold: Long = defaultLocalThreshold): Option[Map[String, String]] =
+    surfaceCounts(surfaces, localThreshold).flatMap(canonicalizeLocal(_, jaccardDistance))
+
+  /** (surface, count) over every distinct surface — the rows of
+    * `groupBy("surface").count()`. Each task counts its partition into a
+    * hash map and stops reading once the map holds `localThreshold + 1`
+    * surfaces (None). The maps merge on the executors in a tree, one level
+    * per factor of 16 partitions, each merge capped the same way and None
+    * absorbing, so the driver merges at most a few dozen maps of at most
+    * `localThreshold` surfaces each, whatever the partition count.
+    */
+  def surfaceCounts(surfaces: RDD[String], localThreshold: Long): Option[Array[(String, Long)]] = {
+    val cap = localThreshold
+    val merge = (a: Option[Counts], b: Option[Counts]) => mergeUpTo(a, b, cap)
+    val depth = math.max(1, math.ceil(math.log(surfaces.getNumPartitions) / math.log(16)).toInt)
+    surfaces.mapPartitions(it => Iterator(countUpTo(it, cap)))
+      .treeAggregate(Option(new Counts))(merge, merge, depth)
+      .map(_.asScala.iterator.map { case (s, n) => (s, n.longValue) }.toArray)
+  }
+
+  private type Counts = java.util.HashMap[String, java.lang.Long]
+
+  private def countUpTo(it: Iterator[String], cap: Long): Option[Counts] = {
+    val m = new Counts
+    while (it.hasNext && m.size <= cap) m.merge(it.next(), 1L, (a, b) => a + b)
+    Option.when(m.size <= cap)(m)
+  }
+
+  /** Merges the smaller count map into the larger; None past `cap`. */
+  private def mergeUpTo(a: Option[Counts], b: Option[Counts], cap: Long): Option[Counts] =
+    a.zip(b).flatMap { case (x, y) =>
+      val (big, small) = if (x.size >= y.size) (x, y) else (y, x)
+      small.forEach((s, n) => big.merge(s, n, (p, q) => p + q))
+      Option.when(big.size <= cap)(big)
+    }
+
   /** Driver-side path for entity vocabularies that fit in memory after the
-    * distinct-surface collapse (rows already collected by the gate; shingle
-    * inverted index bounds the candidate pairs, then union-find +
+    * distinct-surface collapse (rows already counted by [[surfaceCounts]];
+    * shingle inverted index bounds the candidate pairs, then union-find +
     * frequency-mode canonical).
     */
-  private def canonicalizeLocal(rows: Array[(String, Long)], jaccardDistance: Double)(
-      implicit spark: SparkSession): Option[DataFrame] = {
-    import spark.implicits._
+  private def canonicalizeLocal(rows: Array[(String, Long)],
+      jaccardDistance: Double): Option[Map[String, String]] = {
     def sh(s: String): Set[String] = {
       val l = s.toLowerCase
       if (l.length < 3) Set(l) else (0 to l.length - 3).map(i => l.substring(i, i + 3)).toSet
@@ -224,14 +292,24 @@ object Linking {
       }
     }
     val byComp = rows.indices.groupBy(find)
-    val out = byComp.flatMap { case (_, members) =>
+    Some(byComp.iterator.flatMap { case (_, members) =>
       val canon = members.minBy(i => (-rows(i)._2, rows(i)._1))
       members.map(i => (rows(i)._1, rows(canon)._1))
-    }.toSeq
-    Some(out.toDF("surface", "canonical"))
+    }.toMap)
   }
 
-  private def canonicalizeLsh(counts: DataFrame, jaccardDistance: Double)(
+  /** The distributed path: (surface, canonical) plus the blocking audit,
+    * whose first row is `path_lsh`.
+    */
+  def canonicalizeLsh(mentions: DataFrame, jaccardDistance: Double = 0.5)(
+      implicit spark: SparkSession): (DataFrame, DataFrame) = {
+    import spark.implicits._
+    val (df, m) = canonicalizeLshCounts(
+      mentions.groupBy("surface").agg(count(lit(1)).as("freq")), jaccardDistance)
+    (df, Seq(("path_lsh", 1L)).toDF("metric", "value").unionAll(m))
+  }
+
+  private def canonicalizeLshCounts(counts: DataFrame, jaccardDistance: Double)(
       implicit spark: SparkSession): (DataFrame, DataFrame) = {
     // vertex id: per-row monotonic id FROZEN by the checkpoint — a
     // 64-bit content hash would silently alias unrelated surfaces at

@@ -38,7 +38,7 @@ object TripleEmit {
       "start_date", "deadline_date")
 
   /** Pure per-conversation emission of the non-org triples — shared by the
-    * batch emit (graft.KgPipeline.emitTriples), its join twin below and the
+    * batch emit (graft.KgPipeline.emitLinked), its join twin below and the
     * streaming completion path (streaming.StreamingTriples), so all three
     * emit bit-identical rows.
     */
@@ -70,7 +70,7 @@ object TripleEmit {
     out.toSeq
   }
 
-  /** Join twin of graft.KgPipeline.emitTriples, kept as its reference:
+  /** Join twin of graft.KgPipeline.emitLinked, kept as its reference:
     * `enriched` carries (conv_id, sector, estimated_salary), at most one
     * row per conv, and the non-org triples cost ONE conv-scale left join.
     */
@@ -100,4 +100,12 @@ object TripleEmit {
       .distinct()
       .as[Triple]
   }
+
+  /** One conversation's `hiring_organization` triples: its org surfaces
+    * through `canonical`, distinct — [[orgTriples]] for a single conv, so
+    * the map-side batch emit and the streaming completion path (identity
+    * map) share it.
+    */
+  def orgTriplesOf(convId: String, orgs: Seq[String], canonical: String => String): Seq[Triple] =
+    orgs.map(canonical).distinct.map(Triple(convId, "hiring_organization", _))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.ExtractFunctions.{extract_education, extract_salary}
-import graft.functions.MentionFunctions.{extract_dates, extract_locations, extract_orgs}
+import graft.functions.MentionFunctions.{extract_dates, extract_employment, extract_locations, extract_orgs}
 import graft.sources.Dims
 
 /** Salary fields of one gated turn (null struct = gate closed or no hit). */
@@ -41,16 +41,10 @@ final case class TurnExtracted(
 object TurnExtract {
 
   /** X9 — employment surfaces by substring containment, mapped to group
-    * names, first-hit order preserved (ExtractInfo.py:562-597).
+    * names, first-hit order preserved (ExtractInfo.py:562-597). Pinned to
+    * its typedlit + filter/transform Column twin by EmploymentSpec.
     */
-  def employmentGroupsCol(clean: Column): Column = {
-    val surfaceToGroup =
-      typedlit(Dims.employmentGroups.flatMap { case (g, ss) => ss.map(_ -> g) }.toMap)
-    array_distinct(
-      transform(
-        filter(typedlit(Dims.employmentKeywords), k => clean.contains(k)),
-        k => element_at(surfaceToGroup, k)))
-  }
+  def employmentGroupsCol(clean: Column): Column = extract_employment(clean)
 
   /** X3 — location gazetteer scan (countries + cities), mapped to country
     * display names, match-order distinct (Rules.scanGazetteer).

@@ -11,6 +11,11 @@ package graft.rules
   * the original Pattern chain as the differential twin, and
   * CleanScanSpec pins scanner == regex on the fixture corpus and
   * adversarial edge cases.
+  *
+  * Most turns hold nothing most passes rewrite (no tag, no caret, no
+  * thousands comma), so each pass first checks, mostly by `indexOf`,
+  * whether it would change anything, and returns its input untouched when
+  * not: no StringBuilder copy per pass per turn.
   */
 object CleanScan {
 
@@ -22,8 +27,44 @@ object CleanScan {
   @inline private def isWordChar(c: Char): Boolean = // regex \w: [a-zA-Z0-9_]
     isAsciiLetter(c) || isDigit(c) || c == '_'
 
+  /** Whether `at(s, i)` holds at some index of `s`. */
+  @inline private def exists(s: String, at: (String, Int) => Boolean): Boolean = {
+    var i = 0
+    while (i < s.length && !at(s, i)) i += 1
+    i < s.length
+  }
+
+  /** [[exists]] over the indices that hold `c` only. */
+  @inline private def existsAt(s: String, c: Char, at: (String, Int) => Boolean): Boolean = {
+    var i = s.indexOf(c)
+    while (i >= 0 && !at(s, i)) i = s.indexOf(c, i + 1)
+    i >= 0
+  }
+
+  // the match sites of the single-char passes below: the loops and the
+  // fast-path checks read the same predicate
+  private def letterDigitAt(s: String, i: Int): Boolean =
+    i > 0 && isDigit(s.charAt(i)) && isAsciiLetter(s.charAt(i - 1))
+  private def singleLetterAt(s: String, i: Int): Boolean =
+    isAsciiLetter(s.charAt(i)) &&
+      (i == 0 || !isWordChar(s.charAt(i - 1))) &&
+      (i + 1 == s.length || !isWordChar(s.charAt(i + 1)))
+  private def kiloAt(s: String, i: Int): Boolean =
+    s.charAt(i) == 'k' && i > 0 && isDigit(s.charAt(i - 1))
+  private def thousandsCommaAt(s: String, i: Int): Boolean =
+    s.charAt(i) == ',' && i > 0 && isDigit(s.charAt(i - 1)) &&
+      i + 3 < s.length && isDigit(s.charAt(i + 1)) &&
+      isDigit(s.charAt(i + 2)) && isDigit(s.charAt(i + 3))
+  private def rangeAt(s: String, i: Int): Boolean =
+    s.charAt(i) == '-' && i >= 4 && i + 4 < s.length &&
+      isDigit(s.charAt(i - 1)) && isDigit(s.charAt(i - 2)) &&
+      isDigit(s.charAt(i - 3)) && isDigit(s.charAt(i - 4)) &&
+      isDigit(s.charAt(i + 1)) && isDigit(s.charAt(i + 2)) &&
+      isDigit(s.charAt(i + 3)) && isDigit(s.charAt(i + 4))
+
   /** [\n\r\t] -> "" */
   def stripNewlines(s: String): String = {
+    if (s.indexOf('\n') < 0 && s.indexOf('\r') < 0 && s.indexOf('\t') < 0) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -36,24 +77,41 @@ object CleanScan {
 
   // the admitted set of the reference's negated charset class (see
   // Rules.charsetPattern derivation): alnum handled in code, plus these
-  private val admittedPunct: Set[Char] =
-    "-_!@#%&=,'\";:~`č₽€£$^()+[].{}|?<>".toSet
+  private val admittedPunct: String = "-_!@#%&=,'\";:~`č₽€£$^()+[].{}|?<>"
+  private val admittedAscii: Array[Boolean] = Array.tabulate(128) { i =>
+    val c = i.toChar
+    isAsciiLetter(c) || isDigit(c) || isWs(c) || admittedPunct.indexOf(c) >= 0
+  }
+  private val admittedOther: String = admittedPunct.filter(_ >= 128)
+  @inline private def admitted(c: Char): Boolean =
+    if (c < 128) admittedAscii(c) else admittedOther.indexOf(c) >= 0
 
   /** charsetPattern (negated class)+ -> "" : keep only admitted chars. */
   def charsetKeep(s: String): String = {
+    var first = 0
+    while (first < s.length && admitted(s.charAt(first))) first += 1
+    if (first == s.length) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (isAsciiLetter(c) || isDigit(c) || isWs(c) || admittedPunct.contains(c))
-        sb.append(c)
+      if (admitted(c)) sb.append(c)
       i += 1
     }
     sb.toString
   }
 
+  /** True when `s` holds a '<' with a '>' somewhere after it: the only
+    * strings a `<[^>]+>` pass can change.
+    */
+  private def mayHoldTag(s: String): Boolean = {
+    val lt = s.indexOf('<')
+    lt >= 0 && s.indexOf('>', lt + 1) >= 0
+  }
+
   /** <[^>]+> -> "" (html tags; at least one char between brackets). */
   def stripTags(s: String): String = {
+    if (!mayHoldTag(s)) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -70,6 +128,7 @@ object CleanScan {
 
   /** \^[a-zA-Z]\s+ -> "" */
   def stripCaretSingles(s: String): String = {
+    if (s.indexOf('^') < 0) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -86,6 +145,10 @@ object CleanScan {
 
   /** \s+ -> " " */
   def collapseWs(s: String): String = {
+    var i0 = 0
+    while (i0 < s.length && (!isWs(s.charAt(i0)) ||
+        s.charAt(i0) == ' ' && (i0 + 1 == s.length || !isWs(s.charAt(i0 + 1))))) i0 += 1
+    if (i0 == s.length) return s // every whitespace run is one ' '
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -110,11 +173,12 @@ object CleanScan {
 
   /** ([a-zA-Z])(\d+) -> "$1 $2": space at every letter->digit boundary. */
   def splitLetterDigit(s: String): String = {
+    if (!exists(s, letterDigitAt)) return s
     val sb = new java.lang.StringBuilder(s.length + 8)
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (i > 0 && isDigit(c) && isAsciiLetter(s.charAt(i - 1))) sb.append(' ')
+      if (letterDigitAt(s, i)) sb.append(' ')
       sb.append(c)
       i += 1
     }
@@ -123,14 +187,11 @@ object CleanScan {
 
   /** \b[a-zA-Z]\b -> "": drop letters with non-word chars on both sides. */
   def dropSingleLetters(s: String): String = {
+    if (!exists(s, singleLetterAt)) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      val single = isAsciiLetter(c) &&
-        (i == 0 || !isWordChar(s.charAt(i - 1))) &&
-        (i + 1 == s.length || !isWordChar(s.charAt(i + 1)))
-      if (!single) sb.append(c)
+      if (!singleLetterAt(s, i)) sb.append(s.charAt(i))
       i += 1
     }
     sb.toString
@@ -138,11 +199,12 @@ object CleanScan {
 
   /** (\d+)(k) -> "$1000": 'k' preceded by a digit becomes "000". */
   def expandKilo(s: String): String = {
+    if (!existsAt(s, 'k', kiloAt)) return s
     val sb = new java.lang.StringBuilder(s.length + 8)
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (c == 'k' && i > 0 && isDigit(s.charAt(i - 1))) sb.append("000")
+      if (kiloAt(s, i)) sb.append("000")
       else sb.append(c)
       i += 1
     }
@@ -151,14 +213,11 @@ object CleanScan {
 
   /** (?<=\d),(?=\d{3}) -> "": thousands comma removal. */
   def dropThousandsCommas(s: String): String = {
+    if (!existsAt(s, ',', thousandsCommaAt)) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      val thousands = c == ',' && i > 0 && isDigit(s.charAt(i - 1)) &&
-        i + 3 < s.length && isDigit(s.charAt(i + 1)) &&
-        isDigit(s.charAt(i + 2)) && isDigit(s.charAt(i + 3))
-      if (!thousands) sb.append(c)
+      if (!thousandsCommaAt(s, i)) sb.append(s.charAt(i))
       i += 1
     }
     sb.toString
@@ -168,6 +227,7 @@ object CleanScan {
     * "(\d+) (sym)", spaced=false "(\d+)(sym)").
     */
   def reorderCurrency(s: String, sym: Char, spaced: Boolean): String = {
+    if (s.indexOf(sym) < 0) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -192,31 +252,32 @@ object CleanScan {
 
   /** (?<=\d{4})-(?=\d{4}) -> " to " */
   def rangeToWords(s: String): String = {
+    if (!existsAt(s, '-', rangeAt)) return s
     val sb = new java.lang.StringBuilder(s.length + 8)
     var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      val isRange = c == '-' && i >= 4 && i + 4 < s.length &&
-        isDigit(s.charAt(i - 1)) && isDigit(s.charAt(i - 2)) &&
-        isDigit(s.charAt(i - 3)) && isDigit(s.charAt(i - 4)) &&
-        isDigit(s.charAt(i + 1)) && isDigit(s.charAt(i + 2)) &&
-        isDigit(s.charAt(i + 3)) && isDigit(s.charAt(i + 4))
-      if (isRange) sb.append(" to ") else sb.append(c)
+      if (rangeAt(s, i)) sb.append(" to ") else sb.append(s.charAt(i))
       i += 1
     }
     sb.toString
   }
 
-  // string.punctuation minus [$-:.%,£_] (ExtractInfo.py:156)
-  private val customPunct: Set[Char] = "!\"#;<=>?@[\\]^`{|}~".toSet
+  // string.punctuation minus [$-:.%,£_] (ExtractInfo.py:156); all ASCII
+  private val customPunct: Array[Boolean] = {
+    val t = new Array[Boolean](128)
+    "!\"#;<=>?@[\\]^`{|}~".foreach(c => t(c) = true)
+    t
+  }
+  @inline private def isCustomPunct(c: Char): Boolean = c < 128 && customPunct(c)
 
   /** custom punctuation class -> "" */
   def dropCustomPunct(s: String): String = {
+    if (!exists(s, (t, i) => isCustomPunct(t.charAt(i)))) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
       val c = s.charAt(i)
-      if (!customPunct.contains(c)) sb.append(c)
+      if (!isCustomPunct(c)) sb.append(c)
       i += 1
     }
     sb.toString
@@ -226,6 +287,7 @@ object CleanScan {
     * unlike the clean chain's removal).
     */
   def stripTagsSpace(s: String): String = {
+    if (!mayHoldTag(s)) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {
@@ -249,6 +311,7 @@ object CleanScan {
     * opener with no closer on its line stays literal).
     */
   def dropParensSpans(s: String): String = {
+    if (s.indexOf('[') < 0 && s.indexOf('(') < 0) return s
     val sb = new java.lang.StringBuilder(s.length)
     var i = 0
     while (i < s.length) {

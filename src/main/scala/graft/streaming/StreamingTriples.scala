@@ -19,7 +19,7 @@ import graft.operators.{ConvExtract, ConvFinalize, SalStruct, Scoring, TripleEmi
   *   extraction (TurnExtract) → stateful buffer per conv_id
   *   (flatMapGroupsWithState, event-time timeout) → ConvFinalize
   *   .finalizeConv → Scoring.enrich → TripleEmit.convTriples — the
-  *   per-conversation scorer and emitter the batch KgPipeline.emitTriples
+  *   per-conversation scorer and emitter the batch KgPipeline.emitLinked
   *   runs too.
   *
   * The one documented divergence: `hiring_organization` objects are the
@@ -62,7 +62,7 @@ object StreamingTriples {
   def completeConv(convId: String, turns: Seq[ConvFinalize.SlimTurn]): Seq[Triple] = {
     val c: ConvExtract = ConvFinalize.finalizeConv(convId, turns)
     TripleEmit.convTriples(Scoring.enrich(c)) ++
-      c.orgs.map(s => Triple(convId, "hiring_organization", s))
+      TripleEmit.orgTriplesOf(convId, c.orgs, identity)
   }
 
   /** Batch-vs-stream parity harness, shared by StreamingTriplesSpec and

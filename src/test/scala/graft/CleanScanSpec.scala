@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.rules.Rules
+import graft.rules.{CleanScan, Rules}
 import graft.sources.TranscriptGen
 
 /** Differential pin: the regex-free scanner chain must equal the original
@@ -27,7 +27,10 @@ class CleanScanSpec extends AnyFunSuite {
       "euro 500", "eur 500", "usd 500", "dollar 500", "500 euro 600 eur ",
       "tab\there", "mix \u000B vt \f ff", "  lead", "trail  ",
       "masteratms atm atms", "&amp; co", "Grüß größe straße", "čžš čč",
-      "45,000 € per year in 2024-2025 range", "^x ^y ^z chain").foreach(check)
+      "45,000 € per year in 2024-2025 range", "^x ^y ^z chain",
+      // fast-path boundaries through the whole chain
+      "trailing space ", "a1", "k", "no digit k here", "< with no close", "a < b",
+      ",", ", no digits ,", "tab\tonly").foreach(check)
   }
 
   test("scanner == regex twin on the generated fixture corpus") {
@@ -43,6 +46,76 @@ class CleanScanSpec extends AnyFunSuite {
       val n = rnd.nextInt(40)
       check((0 until n).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString)
     }
+  }
+
+  // ---- each pass alone: the fast path that returns its input unchanged ----
+
+  private def re(pattern: String, replacement: String): String => String = {
+    val p = java.util.regex.Pattern.compile(pattern)
+    s => p.matcher(s).replaceAll(replacement)
+  }
+
+  /** (name, scanner pass, the one regex pass it replicates) */
+  private val passes: Seq[(String, String => String, String => String)] = Seq(
+    ("stripNewlines", CleanScan.stripNewlines, re("[\\n\\r\\t]", "")),
+    ("charsetKeep", CleanScan.charsetKeep,
+      re("[^-_a-zA-Z0-9!@#%&=,'\";:~`č₽€£$^()+\\[\\].{}|?<>\\s]+", "")),
+    ("stripTags", CleanScan.stripTags, re("<[^>]+>", "")),
+    ("stripCaretSingles", CleanScan.stripCaretSingles, re("\\^[a-zA-Z]\\s+", "")),
+    ("collapseWs", CleanScan.collapseWs, re("\\s+", " ")),
+    ("stripPrefixB", CleanScan.stripPrefixB, re("^b\\s+", "")),
+    ("splitLetterDigit", CleanScan.splitLetterDigit, re("([a-zA-Z])(\\d+)", "$1 $2")),
+    ("dropSingleLetters", CleanScan.dropSingleLetters, re("\\b[a-zA-Z]\\b", "")),
+    ("expandKilo", CleanScan.expandKilo, re("(\\d+)(k)", "$1000")),
+    ("dropThousandsCommas", CleanScan.dropThousandsCommas, re("(?<=\\d),(?=\\d{3})", "")),
+    ("reorderCurrency € spaced", CleanScan.reorderCurrency(_, '€', spaced = true),
+      re("(\\d+) (€)", "€ $1")),
+    ("reorderCurrency $", CleanScan.reorderCurrency(_, '$', spaced = false),
+      re("(\\d+)(\\$)", "\\$ $1")),
+    ("rangeToWords", CleanScan.rangeToWords, re("(?<=\\d{4})-(?=\\d{4})", " to ")),
+    ("dropCustomPunct", CleanScan.dropCustomPunct, re("[!\"#;<=>?@\\[\\\\\\]^`{|}~]", "")),
+    ("stripTagsSpace", CleanScan.stripTagsSpace, re("<[^>]+>", " ")),
+    ("dropParensSpans", CleanScan.dropParensSpans, re("[\\[(].*?[\\])]", " ")))
+
+  /** Inputs at the boundary of each pass's fast-path check: one side of
+    * each pair leaves the pass nothing to do, the other just enough.
+    */
+  private val passEdges = Seq(
+    "", "plain words only", "a lone trailing space ", " lone leading", "two  spaces",
+    "tab\tonly", "new\nline", "cr\rreturn", "vt\u000Bff\f", "\t", " \n",
+    "a1", "1a", "ab12", "_1", "a", "a b", "ab", "x_y", "k", "kk 3", "3k", "k3", "3 k",
+    "<", "no close <here", "> before <", "<>", "a<b>c", "<<a>", "open < close >",
+    ",", ", no digits,", "1,", ",123", "1,23", "1,234", "a,234", ",1,234", "a,b 5,000",
+    "^", "^a", "^a ", "x^ay", "^ab ",
+    "b", "b x", "bx y", "€", "5€", "5 €", "$", "5$", "5 $",
+    "-", "1234-", "-5678", "123-4567", "1234-5678", "(", "[x", "(x)", "[x)", "(x\ny)",
+    "#", "plain!", "a~b", "č", "ä", "€£", "\\")
+
+  private def escaped(s: String): String =
+    s.flatMap(c => if (c >= ' ' && c < 127) c.toString else f"\\u${c.toInt}%04x")
+
+  test("each scanner pass == its regex on fast-path boundaries") {
+    for ((name, scan, regex) <- passes; s <- passEdges)
+      assert(scan(s) == regex(s), s"$name, input: ${escaped(s)}")
+  }
+
+  test("each scanner pass == its regex under seeded fuzz") {
+    val alphabet = "ab k09€$£<>,-^._! \t\n\u000B\f\r;\"?&=:#([)]" + "é€£č"
+    val rnd = new scala.util.Random(7)
+    (0 until 2000).foreach { _ =>
+      val s = (0 until rnd.nextInt(24)).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+      // Java's \b counts non-ASCII letters as word chars, the scanner does
+      // not; in the chain NFKD + charsetKeep remove them first
+      val asciiLetters = !s.exists(c => c >= 128 && c.isLetter)
+      for ((name, scan, regex) <- passes if asciiLetters || name != "dropSingleLetters")
+        assert(scan(s) == regex(s), s"$name, input: ${escaped(s)}")
+    }
+  }
+
+  test("a pass with nothing to change returns its input itself") {
+    val untouched = "plain words 42 and more"
+    for ((name, scan, _) <- passes)
+      assert(scan(untouched) eq untouched, name)
   }
 
   // ---- mention scanners: each pinned to its Pattern twin ----
