@@ -76,15 +76,10 @@ object Bench {
     * scoring and S6 emit, which have no Spark stage of their own. The
     * sum slightly exceeds a fused end-to-end run (caching overhead), which
     * is why the headline `kg_pipeline` number comes from the un-instrumented
-    * runs instead. `unpersistEagerly` drops each upstream cache as soon as
-    * its consumer materializes — the memory policy the 100M-turn
-    * AnchorScale leg needs; the default keeps the round-4 behavior (all
-    * unpersisted at the end). Returns (per-stage seconds, triple count) —
-    * serving both the driver bench and the scale anchor.
+    * runs instead. Every stage cache is unpersisted at the end.
     */
   def kgStages(spark: SparkSession, tagger: SectionTagger.Trained,
-      turns: org.apache.spark.sql.Dataset[graft.model.Turn],
-      unpersistEagerly: Boolean = false): (Seq[(String, Double)], Long) = {
+      turns: org.apache.spark.sql.Dataset[graft.model.Turn]): Seq[(String, Double)] = {
     implicit val s: SparkSession = spark
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     def phase[A](name: String)(f: => A): A = {
@@ -96,26 +91,23 @@ object Bench {
     phase("s1_clean")(cleaned.count())
     val tagged = SectionTagger.predict(tagger, cleaned).cache()
     phase("s2_tag")(tagged.count())
-    if (unpersistEagerly) cleaned.unpersist()
     val extracted = TurnExtract.extract(tagged).cache()
     phase("s3_extract")(extracted.count())
-    if (unpersistEagerly) tagged.unpersist()
     // runClustered runs its boundary pass when called: time it with s4
     val convs = phase("s4_conv") {
       val c = ConvFinalize.runClustered(extracted).rdd.persist(StorageLevel.MEMORY_AND_DISK)
       c.count(); c
     }
-    if (unpersistEagerly) extracted.unpersist()
     // a canonical table (the LSH path) is materialized inside the phase
     val canon = phase("s5_linking")(Linking.link(convs.flatMap(_.orgs)) match {
       case Left(c) => c.cache().count(); Left(c)
       case local => local
     })
-    val nTriples = phase("s6_emit")(KgPipeline.emitLinked(convs, canon).count())
-    if (!unpersistEagerly) Seq(cleaned, tagged, extracted).foreach(_.unpersist())
+    phase("s6_emit")(KgPipeline.emitLinked(convs, canon).count())
+    Seq(cleaned, tagged, extracted).foreach(_.unpersist())
     convs.unpersist()
     canon.swap.foreach(_.unpersist())
-    (out.toSeq, nTriples)
+    out.toSeq
   }
 
   final case class KgResult(nTurns: Long, nTriples: Long, runs: Seq[Measured],
@@ -179,7 +171,7 @@ object Bench {
       val (_, m) = measure(KgPipeline.computeTriples(turns, tagger).count())
       runs += m
     }
-    val stages = kgStages(spark, tagger, turns)._1
+    val stages = kgStages(spark, tagger, turns)
     turns.unpersist()
     KgResult(nTurns, nTriples, runs.toSeq, stages, anomaly = anomalous, cpuFloor = kgCpuFloor)
   }

@@ -24,7 +24,7 @@ object KgPipeline {
     */
   def cleanTurns(turns: Dataset[_]): DataFrame =
     turns.toDF().withColumn("text_clean",
-      graft.functions.CleanFunctions.clean_text(col("text")))
+      graft.functions.Kernels.clean_text(col("text")))
 
   /** Training frame for the tagger: generator-labeled turns from a conv-id
     * region disjoint from any evaluation range (the reference trains on a

@@ -332,7 +332,7 @@ object SparkEntry {
     "q34_translate_chunks" -> ((s, d) =>
       t(s, d, "documents").select(col("doc_id"),
         array_join(
-          Translate.translate_chunks(split(col("text"), "\\. "),
+          graft.functions.Kernels.translate_chunks(split(col("text"), "\\. "),
             TextAnalysis.langId(col("text"))),
           "||").as("translated"))),
     // ------------- independent semantic oracles for the LSH family -------------
@@ -670,7 +670,7 @@ object SparkEntry {
         .groupBy(col("subj"))
         .agg(sort_array(collect_set(lower(col("obj")))).as("skills"))
         .withColumn("kept",
-          graft.functions.SkillClusterFunctions.filter_skills_dbscan(col("skills")))
+          graft.functions.Kernels.filter_skills_dbscan(col("skills")))
         .withColumn("in_vocab", array_intersect(col("skills"), typedLit(vocab)))
       def all(cond: Column): Column = (count(lit(1)) === sum(when(cond, 1).otherwise(0)))
       perConv.agg(
@@ -745,7 +745,7 @@ object SparkEntry {
         .flatMap(i => graft.sources.TranscriptGen.labeledTurnsFor(i, 42L, 2, 150)
           .map { case (tn, c) => (tn.conv_id, tn.turn_idx, tn.role, tn.tool, tn.text, c) })
         .toDF("conv_id", "turn_idx", "role", "tool", "text", "category")
-        .withColumn("text_clean", graft.functions.CleanFunctions.clean_text(col("text")))
+        .withColumn("text_clean", graft.functions.Kernels.clean_text(col("text")))
       val extracted = TurnExtract.extract(labeled)
       val salted = ConvFinalize.run(extracted).collect()
         .map(c => c.conv_id -> c).toMap
@@ -1291,7 +1291,7 @@ object SparkEntry {
         concat(lit("(555) 867-"), lpad(pmod(col("doc_id"), lit(10000)).cast("string"), 4, "0")),
         col("text"))
       docs.select(col("doc_id"),
-        graft.functions.PiiFunctions.redact_pii(synth).as("redacted"))
+        graft.functions.Kernels.redact_pii(synth).as("redacted"))
     }),
     // q73: MIXTURE RESAMPLING with repetition (epoch reweighting) — de
     // rows 2.5x (2 guaranteed copies + a hash-drawn half), en 0.25x, the

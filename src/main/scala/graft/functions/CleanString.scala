@@ -1,57 +1,22 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The full canonical clean chain as ONE codegen'd expression.
+/** The full canonical clean chain as ONE codegen'd kernel
+  * (`Kernels.clean_text`).
   *
   * The didactic pure-Column version (operators.CleanText.clean) nests ~30
   * regexp_replace nodes into a single projection; the generated method
   * exceeds the JIT's inlining/compilation limits and every step pays a
-  * UTF8String↔String round-trip — profiled at ~1 ms/row. This expression
+  * UTF8String↔String round-trip — profiled at ~1 ms/row. This evaluator
   * does one String conversion and runs the statically-compiled pattern
   * chain (graft.rules.Rules.cleanString), ~25× faster, and is pinned equal
-  * to the Column version by CleanTextSpec. SURVEY §7.3 reserved exactly
-  * this escape hatch ("custom Expression only if profiling demands").
+  * to the Column version by CleanTextSpec. Like every per-row kernel it is
+  * a static method that the one generic [[Kernel]] expression calls from
+  * generated code and from `eval`; no kernel needs an Expression class.
   */
 object CleanFast {
   def cleanUTF8(s: UTF8String): UTF8String =
     if (s == null) null
     else UTF8String.fromString(graft.rules.Rules.cleanString(s.toString))
-}
-
-case class CleanStringExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "clean_text"
-
-  // SQL-registered (graft_clean_string): reject non-string input at
-  // analysis instead of misreading the value at runtime
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      // NullType: a null literal / all-null CASE branch evaluates to null,
-      // like every builtin string function
-      case StringType | org.apache.spark.sql.types.NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    CleanFast.cleanUTF8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.CleanFast.cleanUTF8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): CleanStringExpr =
-    copy(child = newChild)
-}
-
-object CleanFunctions {
-  def clean_text(c: Column): Column =
-    Bridge.column(CleanStringExpr(Bridge.expression(c)))
 }

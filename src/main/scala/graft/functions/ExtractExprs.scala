@@ -1,15 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Salary (X6/X7) and education (X10) extraction as native expressions.
+/** Salary (X6/X7) and education (X10) extraction as native kernels
+  * (`Kernels.extract_salary` / `extract_education`).
   *
   * These were typed `Dataset.map` parsers behind Column gates; on this
   * host every object-encoder boundary costs a full row materialization, so
@@ -23,7 +20,13 @@ object ExtractEvals {
   private def dblArray(xs: Seq[Double]): ArrayData =
     new GenericArrayData(xs.toArray[Any])
 
-  /** -> struct(values, currencies, cur_assoc, sw_kw) or null. */
+  val salarySchema: StructType = StructType(Seq(
+    StructField("values", ArrayType(DoubleType, containsNull = false)),
+    StructField("currencies", ArrayType(StringType, containsNull = false)),
+    StructField("cur_assoc", ArrayType(DoubleType, containsNull = false)),
+    StructField("sw_kw", BooleanType, nullable = false)))
+
+  /** -> [[salarySchema]] struct(values, currencies, cur_assoc, sw_kw) or null. */
   def salary(s: UTF8String): InternalRow = {
     if (s == null) return null
     graft.rules.Rules.extractSalary(s.toString) match {
@@ -39,44 +42,4 @@ object ExtractEvals {
   def education(s: UTF8String): ArrayData =
     if (s == null) new GenericArrayData(Array.empty[Any])
     else strArray(graft.rules.Rules.extractEducation(s.toString))
-}
-
-case class SalaryExtractExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = SalaryExtractExpr.schema
-  override def nullable: Boolean = true
-  override def prettyName: String = "extract_salary"
-  override def nullSafeEval(input: Any): Any =
-    ExtractEvals.salary(input.asInstanceOf[UTF8String])
-  // salary() itself returns null for gated-out rows → re-check after call
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.functions.ExtractEvals.salary($c);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-  override protected def withNewChildInternal(newChild: Expression): SalaryExtractExpr =
-    copy(child = newChild)
-}
-
-object SalaryExtractExpr {
-  val schema: StructType = StructType(Seq(
-    StructField("values", ArrayType(DoubleType, containsNull = false)),
-    StructField("currencies", ArrayType(StringType, containsNull = false)),
-    StructField("cur_assoc", ArrayType(DoubleType, containsNull = false)),
-    StructField("sw_kw", BooleanType, nullable = false)))
-}
-
-case class EducationExtractExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "extract_education"
-  override def nullSafeEval(input: Any): Any =
-    ExtractEvals.education(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ExtractEvals.education($c)")
-  override protected def withNewChildInternal(newChild: Expression): EducationExtractExpr =
-    copy(child = newChild)
-}
-
-object ExtractFunctions {
-  def extract_salary(c: Column): Column = Bridge.column(SalaryExtractExpr(Bridge.expression(c)))
-  def extract_education(c: Column): Column = Bridge.column(EducationExtractExpr(Bridge.expression(c)))
 }

@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** One-pass native kernels for the full-corpus language-ID and quality
@@ -22,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * the quality formula folds token length / stopword / all-digit tallies
   * in one walk.
   *
-  * Null handling: the expressions are uniformly null-propagating
-  * (nullSafeEval, like every other graft kernel); TextAnalysis.langId /
+  * Null handling: the kernels are null-propagating (`Kernel.Propagate`,
+  * like almost every other graft kernel); TextAnalysis.langId /
   * langIdTrigram coalesce the output to the label their Column twins'
   * CaseWhen falls through to on null input ("es" / "en"), keeping the
   * three-way native == twin == DuckDB equivalence total.
@@ -270,45 +265,4 @@ object LangEvals {
     java.math.BigDecimal.valueOf(v)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
   }
-}
-
-case class LangIdExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "lang_id"
-  override def nullSafeEval(input: Any): Any =
-    LangEvals.langId(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LangEvals.langId($c)")
-  override protected def withNewChildInternal(newChild: Expression): LangIdExpr =
-    copy(child = newChild)
-}
-
-case class LangIdTrigramExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "lang_id_trigram"
-  override def nullSafeEval(input: Any): Any =
-    LangEvals.langIdTrigram(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LangEvals.langIdTrigram($c)")
-  override protected def withNewChildInternal(newChild: Expression): LangIdTrigramExpr =
-    copy(child = newChild)
-}
-
-case class QualityScoreExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "quality_score"
-  override def nullSafeEval(input: Any): Any =
-    LangEvals.qualityScore(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.LangEvals.qualityScore($c)")
-  override protected def withNewChildInternal(newChild: Expression): QualityScoreExpr =
-    copy(child = newChild)
-}
-
-object LangFunctions {
-  def lang_id(c: Column): Column = Bridge.column(LangIdExpr(Bridge.expression(c)))
-  def lang_id_trigram(c: Column): Column =
-    Bridge.column(LangIdTrigramExpr(Bridge.expression(c)))
-  def quality_score(c: Column): Column =
-    Bridge.column(QualityScoreExpr(Bridge.expression(c)))
 }

@@ -1,19 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.rules.Rules
 import graft.sources.Dims
 
-/** X3/X4/X5/X9 mention extraction as native expressions (SURVEY §2.6).
+/** X3/X4/X5/X9 mention extraction as native kernels (SURVEY §2.6),
+  * declared as `Kernels.extract_locations` / `extract_orgs` /
+  * `extract_dates` / `extract_employment` and called by TurnExtract.
   *
   * These were `regexp_extract_all` + `transform`/`filter` Column chains;
   * the per-turn regex scans were the last java.util.regex on the hot path
@@ -60,69 +55,4 @@ object MentionEvals {
     }
     new GenericArrayData(out.toArray)
   }
-}
-
-abstract class MentionExpr extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-}
-
-case class LocationsExtractExpr(child: Expression) extends MentionExpr {
-  override def prettyName: String = "extract_locations"
-  override def nullSafeEval(input: Any): Any =
-    MentionEvals.locations(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MentionEvals.locations($c)")
-  override protected def withNewChildInternal(newChild: Expression): LocationsExtractExpr =
-    copy(child = newChild)
-}
-
-case class OrgsExtractExpr(child: Expression) extends MentionExpr {
-  override def prettyName: String = "extract_orgs"
-  override def nullSafeEval(input: Any): Any =
-    MentionEvals.orgs(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MentionEvals.orgs($c)")
-  override protected def withNewChildInternal(newChild: Expression): OrgsExtractExpr =
-    copy(child = newChild)
-}
-
-case class DatesExtractExpr(child: Expression) extends MentionExpr {
-  override def prettyName: String = "extract_dates"
-  override def nullSafeEval(input: Any): Any =
-    MentionEvals.dates(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MentionEvals.dates($c)")
-  override protected def withNewChildInternal(newChild: Expression): DatesExtractExpr =
-    copy(child = newChild)
-}
-
-/** [[MentionEvals.employment]]: never null — a null text yields an empty
-  * array, as the Column twin in EmploymentSpec does.
-  */
-case class EmploymentExtractExpr(child: Expression) extends MentionExpr {
-  override def prettyName: String = "extract_employment"
-  override def nullable: Boolean = false
-  override def eval(input: InternalRow): Any =
-    MentionEvals.employment(child.eval(input).asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val c = child.genCode(ctx)
-    ev.copy(code = code"""
-      ${c.code}
-      ${CodeGenerator.javaType(dataType)} ${ev.value} =
-        graft.functions.MentionEvals.employment(${c.isNull} ? null : ${c.value});""",
-      isNull = FalseLiteral)
-  }
-  override protected def withNewChildInternal(newChild: Expression): EmploymentExtractExpr =
-    copy(child = newChild)
-}
-
-object MentionFunctions {
-  def extract_locations(c: Column): Column =
-    Bridge.column(LocationsExtractExpr(Bridge.expression(c)))
-  def extract_orgs(c: Column): Column =
-    Bridge.column(OrgsExtractExpr(Bridge.expression(c)))
-  def extract_dates(c: Column): Column =
-    Bridge.column(DatesExtractExpr(Bridge.expression(c)))
-  def extract_employment(c: Column): Column =
-    Bridge.column(EmploymentExtractExpr(Bridge.expression(c)))
 }

@@ -1,18 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** All banded-minhash bucket ids of one shingle array in ONE pass.
   *
   * The declarative formulation (bands × rowsPerBand `array_min(transform(
   * shingles, xxhash64(...)))` Columns) re-walks the shingle array once per
   * hash function and allocates an intermediate array each time — profiled
-  * at 2.5 s of q19's wall time at sf0.1. This expression walks the array
+  * at 2.5 s of q19's wall time at sf0.1. This kernel walks the array
   * once, computing two base XXH64 values per shingle and deriving the
   * `bands × rowsPerBand` permutation family by double hashing
   * (h_i = h1 + i·h2 — Kirsch–Mitzenmacher, standard for LSH families),
@@ -56,25 +52,4 @@ object MinHashFast {
     }
     new GenericArrayData(out)
   }
-}
-
-case class MinHashBandsExpr(child: Expression, bands: Int, rowsPerBand: Int, seed: Long)
-    extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_bands"
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashFast.bandBuckets(input.asInstanceOf[ArrayData], bands, rowsPerBand, seed)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.MinHashFast.bandBuckets($c, $bands, $rowsPerBand, ${seed}L)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashBandsExpr =
-    copy(child = newChild)
-}
-
-object MinHashFunctions {
-  def minhash_bands(c: Column, bands: Int, rowsPerBand: Int, seed: Long): Column =
-    Bridge.column(MinHashBandsExpr(Bridge.expression(c), bands, rowsPerBand, seed))
 }

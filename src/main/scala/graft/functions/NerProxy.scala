@@ -1,11 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.rules.Rules
@@ -23,7 +18,7 @@ import graft.rules.Rules
   *
   * Every rule called here is a char scanner (extractLocations /
   * employmentSurfaces / currencyHits / timeSpans / extractEducation —
-  * timeSpans via Rules.TimeScan since round 3), so this expression keeps
+  * timeSpans via Rules.TimeScan since round 3), so this kernel keeps
   * the tagger's prepare() projection java.util.regex-free in BOTH train
   * and serve; PlanSpec's no-regex assertion covers the plan shape and
   * RulesSpec fuzz pins each scanner to its Pattern twin.
@@ -33,7 +28,7 @@ object NerProxyFast {
   val names: Seq[String] =
     Seq("digit_ratio", "word_ratio", "ner_loc", "ner_emp", "ner_cur", "ner_hour", "ner_edu")
 
-  /** Raw feature array in [[names]] order — shared by the expression and
+  /** Raw feature array in [[names]] order — shared by the kernel and
     * the compiled tagger serve (TaggerServe.scala).
     */
   def rawCounts(str: String): Array[Double] = {
@@ -57,23 +52,4 @@ object NerProxyFast {
   }
 
   def counts(s: UTF8String): ArrayData = new GenericArrayData(rawCounts(s.toString))
-}
-
-case class NerProxyExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "ner_proxy_counts"
-
-  override def nullSafeEval(input: Any): Any =
-    NerProxyFast.counts(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NerProxyFast.counts($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NerProxyExpr =
-    copy(child = newChild)
-}
-
-object NerProxyFunctions {
-  def ner_proxy_counts(c: Column): Column =
-    Bridge.column(NerProxyExpr(Bridge.expression(c)))
 }

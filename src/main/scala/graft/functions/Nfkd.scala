@@ -1,20 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Unicode NFKD normalization as a native, codegen'd Catalyst expression.
+/** Unicode NFKD normalization as a native, codegen'd kernel
+  * (`Kernels.nfkd_normalize`).
   *
   * The reference applies `unicodedata.normalize("NFKD", s)` as the first
   * step of every clean_string clone (/root/reference/extract-info/
   * ExtractInfo.py:160). Spark has no builtin for it; a Scala UDF would
   * break whole-stage codegen in the hottest projection of the pipeline,
-  * so this is the one place a custom Expression is genuinely justified
-  * (SURVEY.md §7.3).
+  * so it runs as a static evaluator that the generic [[Kernel]] expression
+  * calls from generated code (SURVEY.md §7.3).
   */
 object NfkdNormalize {
   /** Static so generated code can call it. ASCII fast path: NFKD is the
@@ -26,25 +22,4 @@ object NfkdNormalize {
     else UTF8String.fromString(
       java.text.Normalizer.normalize(s.toString, java.text.Normalizer.Form.NFKD))
   }
-}
-
-case class NfkdNormalizeExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfkd_normalize"
-
-  override def nullSafeEval(input: Any): Any =
-    NfkdNormalize.normalize(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.NfkdNormalize.normalize($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NfkdNormalizeExpr =
-    copy(child = newChild)
-}
-
-object functions {
-  /** Column API: NFKD-normalize a string column (codegen'd, null-safe). */
-  def nfkd_normalize(c: Column): Column =
-    Bridge.column(NfkdNormalizeExpr(Bridge.expression(c)))
 }

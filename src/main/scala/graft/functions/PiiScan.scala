@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** PII redaction for training corpora — emails, IPv4 addresses and phone
@@ -222,60 +217,5 @@ object PiiScan {
       if (len >= 7 && len <= 15 && (e >= s.length || !isWord(s.charAt(e)))) e
       else -1
     }
-  }
-}
-
-/** `redact_pii(text)` as a codegen'd unary expression — one String
-  * round-trip per row, statically-compiled scanner (no regex on the
-  * full-corpus scrub path).
-  */
-case class PiiRedactExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "redact_pii"
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType | org.apache.spark.sql.types.NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    PiiScan.redactUTF8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PiiScan.redactUTF8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): PiiRedactExpr =
-    copy(child = newChild)
-}
-
-object PiiFunctions {
-  def redact_pii(c: Column): Column =
-    Bridge.column(PiiRedactExpr(Bridge.expression(c)))
-
-  /** The five patterns as java.util.regex literals — the Column twin's
-    * building blocks, shared with the spec's differential.
-    */
-  val emailRe = "[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}"
-  val octetRe = "(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])"
-  val ipRe = s"\\b$octetRe\\.$octetRe\\.$octetRe\\.$octetRe\\b"
-  val nanpParenRe = "\\(\\d{3}\\) \\d{3}-\\d{4}"
-  val nanpDashRe = "\\b\\d{3}-\\d{3}-\\d{4}\\b"
-  val e164Re = "\\+\\d{7,15}\\b"
-
-  /** Pure-Column twin (nested regexp_replace, java.util.regex) — the
-    * differential pin for the scanner and the declarative documentation
-    * of its semantics; fuzz-pinned equal in PiiScanSpec.
-    */
-  def redactPiiColumn(c: Column): Column = {
-    import org.apache.spark.sql.functions.regexp_replace
-    val e = regexp_replace(c, emailRe, "<EMAIL>")
-    val ip = regexp_replace(e, ipRe, "<IP>")
-    val p1 = regexp_replace(ip, nanpParenRe, "<PHONE>")
-    val p2 = regexp_replace(p1, nanpDashRe, "<PHONE>")
-    regexp_replace(p2, e164Re, "<PHONE>")
   }
 }

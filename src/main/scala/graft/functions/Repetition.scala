@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -206,20 +202,4 @@ object RepetitionEvals {
     val dupWord = if (nw == 0) 0.0 else (nw - toks.distinct.length).toDouble / nw
     (nw.toLong, dupWord, topFrac(2), topFrac(3), topFrac(4), dupFrac(5))
   }
-}
-
-case class RepetitionStatsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = RepetitionEvals.schema
-  override def prettyName: String = "repetition_stats"
-  override def nullSafeEval(input: Any): Any =
-    RepetitionEvals.stats(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.RepetitionEvals.stats($c)")
-  override protected def withNewChildInternal(newChild: Expression): RepetitionStatsExpr =
-    copy(child = newChild)
-}
-
-object RepetitionFunctions {
-  def repetition_stats(c: Column): Column =
-    Bridge.column(RepetitionStatsExpr(Bridge.expression(c)))
 }

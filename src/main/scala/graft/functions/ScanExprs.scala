@@ -1,10 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass scanners for the corpus-wide text-analysis kernels that
@@ -143,55 +138,4 @@ object ScanEvals {
     }
     UTF8String.fromBytes(out, 0, o)
   }
-}
-
-case class WsTokenCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "ws_token_count"
-  override def nullSafeEval(input: Any): Any =
-    ScanEvals.wsTokenCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ScanEvals.wsTokenCount($c)")
-  override protected def withNewChildInternal(newChild: Expression): WsTokenCountExpr =
-    copy(child = newChild)
-}
-
-case class BpeTokenCountExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "bpe_token_count"
-  override def nullSafeEval(input: Any): Any =
-    ScanEvals.bpeTokenCount(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ScanEvals.bpeTokenCount($c)")
-  override protected def withNewChildInternal(newChild: Expression): BpeTokenCountExpr =
-    copy(child = newChild)
-}
-
-case class CollapseWsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "collapse_ws"
-  override def nullSafeEval(input: Any): Any =
-    ScanEvals.collapseWs(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ScanEvals.collapseWs($c)")
-  override protected def withNewChildInternal(newChild: Expression): CollapseWsExpr =
-    copy(child = newChild)
-}
-
-case class AsciiNormalizeExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "ascii_normalize"
-  override def nullSafeEval(input: Any): Any =
-    ScanEvals.asciiNormalize(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ScanEvals.asciiNormalize($c)")
-  override protected def withNewChildInternal(newChild: Expression): AsciiNormalizeExpr =
-    copy(child = newChild)
-}
-
-object ScanFunctions {
-  def ws_token_count(c: Column): Column = Bridge.column(WsTokenCountExpr(Bridge.expression(c)))
-  def bpe_token_count(c: Column): Column = Bridge.column(BpeTokenCountExpr(Bridge.expression(c)))
-  def collapse_ws(c: Column): Column = Bridge.column(CollapseWsExpr(Bridge.expression(c)))
-  def ascii_normalize(c: Column): Column = Bridge.column(AsciiNormalizeExpr(Bridge.expression(c)))
 }

@@ -1,14 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** k-word shingles as ONE codegen'd expression.
+/** k-word shingles as ONE codegen'd kernel (`Kernels.word_shingles`).
   *
   * Semantics are pinned (ShinglesSpec) to the pure-Column twin
   * `Dedup.wordShinglesColumn`: split(lower(c), "\\s+") with Java
@@ -69,36 +64,4 @@ object ShingleFast {
     }
     new GenericArrayData(seen.toArray)
   }
-}
-
-case class WordShinglesExpr(child: Expression, k: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
-
-  // SQL-registered (graft_word_shingles): reject non-string input at
-  // analysis instead of misreading the value at runtime
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      // NullType: a null literal / all-null CASE branch evaluates to null,
-      // like every builtin string function
-      case StringType | org.apache.spark.sql.types.NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects string, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    ShingleFast.shingles(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleFast.shingles($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): WordShinglesExpr =
-    copy(child = newChild)
-}
-
-object ShingleFunctions {
-  def word_shingles(c: Column, k: Int): Column =
-    Bridge.column(WordShinglesExpr(Bridge.expression(c), k))
 }

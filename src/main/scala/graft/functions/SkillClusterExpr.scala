@@ -1,14 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** X17 DBSCAN skill filter as one native expression over the per-posting
+/** X17 DBSCAN skill filter as one native kernel over the per-posting
   * skill array (kernel: graft.rules.SkillCluster — the ε-sweep and its
   * quirks are documented and pinned there / in SkillClusterSpec).
   */
@@ -28,34 +23,4 @@ object SkillClusterEvals {
     val out = graft.rules.SkillCluster.filterSkills(in.toSeq)
     new GenericArrayData(out.map(UTF8String.fromString).toArray[Any])
   }
-}
-
-case class SkillDbscanExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "filter_skills_dbscan"
-
-  // SQL-registered (graft_filter_skills_dbscan): reject non-array<string>
-  // input at analysis instead of misreading array data at runtime
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) | org.apache.spark.sql.types.NullType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects array<string>, got ${other.simpleString}")
-    }
-
-  override def nullSafeEval(input: Any): Any =
-    SkillClusterEvals.filterSkills(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.SkillClusterEvals.filterSkills($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): SkillDbscanExpr =
-    copy(child = newChild)
-}
-
-object SkillClusterFunctions {
-  def filter_skills_dbscan(c: Column): Column =
-    Bridge.column(SkillDbscanExpr(Bridge.expression(c)))
 }

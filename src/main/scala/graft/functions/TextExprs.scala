@@ -1,13 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{BooleanType, DataType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Character-class predicates as native expressions. langId runs over the
+/** Character-class predicates as native kernels. langId runs over the
   * FULL corpus in a training pipeline, and its CJK gate was the last
   * java.util.regex (`rlike`) on a full-scan hot path (this host's measured
   * intra-JVM regex thread collapse, BENCH_SCALING.md). The scan below is a
@@ -30,19 +25,4 @@ object TextEvals {
     }
     false
   }
-}
-
-case class HasCjkExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "has_cjk"
-  override def nullSafeEval(input: Any): Any =
-    TextEvals.hasCjk(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextEvals.hasCjk($c)")
-  override protected def withNewChildInternal(newChild: Expression): HasCjkExpr =
-    copy(child = newChild)
-}
-
-object TextFunctions {
-  def has_cjk(c: Column): Column = Bridge.column(HasCjkExpr(Bridge.expression(c)))
 }

@@ -1,14 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** M1 tokenizer as a regex-free expression: lowercase + maximal [a-z]+
+/** M1 tokenizer as a regex-free kernel (`Kernels.letter_runs`): lowercase + maximal [a-z]+
   * runs — the exact output of MLlib's
   * RegexTokenizer(pattern="[a-z]+", gaps=false, toLowercase=true,
   * minTokenLength=1), which ran java.util.regex per turn inside the
@@ -19,7 +14,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object TokenizeEvals {
   /** String-level tokenizer — single source of truth shared by the
-    * expression below and the compiled tagger serve (TaggerServe.scala).
+    * `letterRuns` kernel and the compiled tagger serve (TaggerServe.scala).
     */
   def letterRunsStr(s: String): Array[String] = {
     val str = s.toLowerCase
@@ -41,19 +36,4 @@ object TokenizeEvals {
   def letterRuns(s: UTF8String): ArrayData =
     new GenericArrayData(
       letterRunsStr(s.toString).map(UTF8String.fromString).toArray[Any])
-}
-
-case class LetterRunsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "letter_runs"
-  override def nullSafeEval(input: Any): Any =
-    TokenizeEvals.letterRuns(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TokenizeEvals.letterRuns($c)")
-  override protected def withNewChildInternal(newChild: Expression): LetterRunsExpr =
-    copy(child = newChild)
-}
-
-object TokenizeFunctions {
-  def letter_runs(c: Column): Column = Bridge.column(LetterRunsExpr(Bridge.expression(c)))
 }

@@ -1,18 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types._
 
-/** Embedding kernels as native expressions. The Column twins
+/** Embedding kernels (`Kernels.cosine_f` / `lsh_buckets`). The Column twins
   * (SimilaritySearch.cosine / bandBuckets) build on Spark's higher-order
   * functions, which evaluate interpreted with per-element boxing — fine
   * for correctness, ~10× too slow as the ANN hot path (128 plane dots ×
   * 64 dims per vector). These run the same left-fold float→double loops
-  * over primitive arrays; OperatorSpec pins expression == Column twin.
+  * over primitive arrays; OperatorSpec pins kernel == Column twin.
   */
 object VectorEvals {
 
@@ -67,46 +62,4 @@ object VectorEvals {
     }
     new GenericArrayData(out)
   }
-}
-
-case class CosineExpr(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true // null on dim mismatch, like the HOF twin
-  override def prettyName: String = "cosine_f"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    VectorEvals.cosineF(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  // cosineF itself returns null on mismatched lengths → re-check after call
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val tmp = ctx.freshName("cosRes")
-      s"""
-        java.lang.Double $tmp = graft.functions.VectorEvals.cosineF($a, $b);
-        ${ev.isNull} = ($tmp == null);
-        ${ev.value} = ${ev.isNull} ? -1.0 : $tmp.doubleValue();
-      """
-    })
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CosineExpr =
-    copy(left = l, right = r)
-}
-
-case class LshBucketsExpr(child: Expression, planes: Array[Double],
-    bands: Int, bandBits: Int) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "lsh_buckets"
-  override def nullSafeEval(input: Any): Any =
-    VectorEvals.lshBuckets(input.asInstanceOf[ArrayData], planes, bands, bandBits)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "double[]")
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.VectorEvals.lshBuckets($c, $planesRef, $bands, $bandBits)")
-  }
-  override protected def withNewChildInternal(newChild: Expression): LshBucketsExpr =
-    copy(child = newChild)
-}
-
-object VectorFunctions {
-  def cosine_f(a: Column, b: Column): Column =
-    Bridge.column(CosineExpr(Bridge.expression(a), Bridge.expression(b)))
-  def lsh_buckets(v: Column, planes: Array[Array[Double]], bands: Int, bandBits: Int): Column =
-    Bridge.column(LshBucketsExpr(Bridge.expression(v), planes.flatten, bands, bandBits))
 }

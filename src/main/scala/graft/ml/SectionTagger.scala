@@ -7,8 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.NerProxyFast
-import graft.functions.NerProxyFunctions.ner_proxy_counts
-import graft.functions.TokenizeFunctions.letter_runs
+import graft.functions.Kernels.{letter_runs, ner_proxy_counts}
 
 /** S2 — section tagger as a Spark ML Pipeline (SURVEY §2.4 M1-M13):
   * letter-run tokens → 1-gram + 2-gram CountVectorizers (minDF=2, mirrors

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-import graft.functions.functions.nfkd_normalize
+import graft.functions.Kernels.nfkd_normalize
 import graft.sources.Dims
 
 /** The canonical clean_string chain (SURVEY §2.2 F3) as a pure Column

@@ -33,7 +33,7 @@ object Dedup {
     * the codegen'd scanner expression (regex-free hot path).
     */
   def wordShingles(c: Column, k: Int): Column =
-    graft.functions.ShingleFunctions.word_shingles(c, k)
+    graft.functions.Kernels.word_shingles.withConsts(k)(c)
 
   /** Pure-Column twin of [[wordShingles]] — kept as the differential pin
     * for the scanner expression (ShinglesSpec) and as the declarative
@@ -97,9 +97,9 @@ object Dedup {
       rowsPerBand: Int = 2, bucketCap: Int = 2000,
       seed: Int = 42): (DataFrame, DataFrame) = {
     // all band buckets in one codegen'd pass over the shingle array
-    // (graft.functions.MinHashBandsExpr); bucket ids are band-salted longs
-    val sig = graft.functions.MinHashFunctions.minhash_bands(
-      col("shingles"), bands, rowsPerBand, seed.toLong)
+    // (graft.functions.MinHashFast); bucket ids are band-salted longs
+    val sig = graft.functions.Kernels.minhash_bands
+      .withConsts(bands, rowsPerBand, seed.toLong)(col("shingles"))
     // materialize the exploded (id, band, bucket) rows once: they feed the
     // bucket-size census AND both sides of the self-join
     val banded = nodes

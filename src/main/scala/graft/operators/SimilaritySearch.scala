@@ -27,7 +27,7 @@ object SimilaritySearch {
     * interpreted with per-element boxing); bit-identical to
     * [[cosineColumns]], pinned by OperatorSpec.
     */
-  def cosine(a: Column, b: Column): Column = graft.functions.VectorFunctions.cosine_f(a, b)
+  def cosine(a: Column, b: Column): Column = graft.functions.Kernels.cosine_f(a, b)
 
   /** HOF-Column twin of [[cosine]] (differential pin only). Zero-norm
     * sides map to 0.0 like the native kernel (NaN would sort FIRST under
@@ -72,7 +72,7 @@ object SimilaritySearch {
     */
   def bandBuckets(v: Column, planes: Array[Array[Double]],
       bands: Int, bandBits: Int): Column =
-    graft.functions.VectorFunctions.lsh_buckets(v, planes, bands, bandBits)
+    graft.functions.Kernels.lsh_buckets.withConsts(planes.flatten, bands, bandBits)(v)
 
   /** HOF-Column twin of [[bandBuckets]] (differential pin only). */
   def bandBucketsColumns(v: Column, planes: Array[Array[Double]],

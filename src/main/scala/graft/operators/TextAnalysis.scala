@@ -30,13 +30,10 @@ object TextAnalysis {
   /** Regex-free CJK gate (native codepoint-range scan — lang-ID is a
     * full-corpus op, and `rlike` here was the last regex on a full-scan hot
     * path; PlanSpec pins the q12/q33 plans regex-free). The `rlike` twin is
-    * the differential pin in RulesSpec; the DuckDB oracle keeps
+    * the differential pin in OperatorSpec; the DuckDB oracle keeps
     * regexp_matches.
     */
-  def hasCjk(c: Column): Column = graft.functions.TextFunctions.has_cjk(c)
-
-  /** rlike twin of [[hasCjk]] (differential pin only). */
-  def hasCjkRegex(c: Column): Column = c.rlike("[\\x{4e00}-\\x{9fff}]")
+  def hasCjk(c: Column): Column = graft.functions.Kernels.has_cjk(c)
 
   /** Deterministic language ID: CJK chars → zh, else marker-word argmax
     * with the fixed order en > de > fr > es on ties. Native one-pass
@@ -48,7 +45,7 @@ object TextAnalysis {
     * equivalence total over null rows.
     */
   def langId(c: Column): Column =
-    coalesce(graft.functions.LangFunctions.lang_id(lower(c)), lit("es"))
+    coalesce(graft.functions.Kernels.lang_id(lower(c)), lit("es"))
 
   /** Column twin of [[langId]] (differential pin only). */
   def langIdColumn(c: Column): Column = {
@@ -97,7 +94,7 @@ object TextAnalysis {
     * comparisons go null and fall through to "es".
     */
   def langIdTrigram(c: Column): Column =
-    coalesce(graft.functions.LangFunctions.lang_id_trigram(lower(c)), lit("en"))
+    coalesce(graft.functions.Kernels.lang_id_trigram(lower(c)), lit("en"))
 
   /** Column twin of [[langIdTrigram]] (differential pin only). */
   def langIdTrigramColumn(c: Column): Column = {
@@ -127,7 +124,7 @@ object TextAnalysis {
     * java.util.regex AND materialized the token array per row just to take
     * its length). [[wsTokenCountRegex]] is the fuzz-pinned Pattern twin.
     */
-  def wsTokenCount(c: Column): Column = graft.functions.ScanFunctions.ws_token_count(c)
+  def wsTokenCount(c: Column): Column = graft.functions.Kernels.ws_token_count(c)
 
   /** regex twin of [[wsTokenCount]] (differential pin only). */
   def wsTokenCountRegex(c: Column): Column = size(split(c, "\\s+"))
@@ -137,7 +134,7 @@ object TextAnalysis {
     * [[bpeTokenCountRegex]] is the fuzz-pinned Pattern twin.
     */
   val bpeTokenPattern = "[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]"
-  def bpeTokenCount(c: Column): Column = graft.functions.ScanFunctions.bpe_token_count(c)
+  def bpeTokenCount(c: Column): Column = graft.functions.Kernels.bpe_token_count(c)
 
   /** regex twin of [[bpeTokenCount]] (differential pin only). */
   def bpeTokenCountRegex(c: Column): Column =
@@ -155,7 +152,7 @@ object TextAnalysis {
     * fuzz-pinned twin, bit-identical including the round-6.
     */
   def qualityScore(c: Column): Column =
-    graft.functions.LangFunctions.quality_score(lower(c))
+    graft.functions.Kernels.quality_score(lower(c))
 
   /** Column twin of [[qualityScore]] (differential pin only). */
   def qualityScoreColumn(c: Column): Column = {
@@ -192,7 +189,7 @@ object TextAnalysis {
     * independent RE2 formulation.
     */
   def fingerprint(c: Column): Column =
-    md5(graft.functions.ScanFunctions.collapse_ws(lower(c)))
+    md5(graft.functions.Kernels.collapse_ws(lower(c)))
 
   /** regex twin of [[fingerprint]] (differential pin only). */
   def fingerprintRegex(c: Column): Column =
@@ -217,7 +214,7 @@ object TextAnalysis {
     * scanner; [[normalizeRegex]] is the fuzz-pinned Pattern twin.
     */
   def normalize(c: Column): Column =
-    graft.functions.ScanFunctions.ascii_normalize(lower(c))
+    graft.functions.Kernels.ascii_normalize(lower(c))
 
   /** regex twin of [[normalize]] (differential pin only). */
   def normalizeRegex(c: Column): Column =
@@ -231,7 +228,7 @@ object TextAnalysis {
     * regex-free codegen'd pass per document (functions/Repetition.scala).
     */
   def repetitionStats(c: Column): Column =
-    graft.functions.RepetitionFunctions.repetition_stats(c)
+    graft.functions.Kernels.repetition_stats(c)
 
   /** The Gopher filter gate over [[repetitionStats]]: keep docs whose
     * repetition signals sit under the thresholds (defaults are the paper's

@@ -1,11 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** F8 — the reference's chunked-translation protocol
@@ -78,19 +73,4 @@ object Translate {
     val out = translateChunkedData(in, lang.toString, stubTranslate)
     new GenericArrayData(out.map(UTF8String.fromString).toArray[Any])
   }
-
-  def translate_chunks(chunks: Column, lang: Column): Column =
-    Bridge.column(TranslateChunksExpr(Bridge.expression(chunks), Bridge.expression(lang)))
-}
-
-case class TranslateChunksExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "translate_chunks"
-  override def nullSafeEval(chunks: Any, lang: Any): Any =
-    Translate.evalStub(chunks.asInstanceOf[ArrayData], lang.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, l) => s"graft.operators.Translate.evalStub($c, $l)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TranslateChunksExpr =
-    copy(left = l, right = r)
 }

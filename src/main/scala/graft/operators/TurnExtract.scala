@@ -3,9 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.ExtractFunctions.{extract_education, extract_salary}
-import graft.functions.MentionFunctions.{extract_dates, extract_employment, extract_locations, extract_orgs}
-import graft.sources.Dims
+import graft.functions.Kernels.{extract_dates, extract_education, extract_employment,
+  extract_locations, extract_orgs, extract_salary}
 
 /** Salary fields of one gated turn (null struct = gate closed or no hit). */
 final case class SalStruct(values: Seq[Double], currencies: Seq[String],
@@ -32,63 +31,24 @@ final case class TurnExtracted(
 
 /** S3 mention detection — rule extractors X1-X10, all expressed as Column
   * expressions: builtins where they fit, the parsers and gazetteer/ORG/
-  * date scans as native codegen'd expressions over the regex-free Rules
-  * char scanners (each pinned to its Pattern twin by CleanScanSpec). The
-  * whole stage is one narrow whole-stage-codegen projection with zero
-  * java.util.regex on the hot path: no shuffle, no object-encoder
-  * boundary (SURVEY §2.11, BENCH_SCALING.md regex collapse).
+  * date scans as `graft.functions.Kernels` called directly:
+  *   - X9 `extract_employment`: employment surfaces by substring
+  *     containment, mapped to group names, first-hit order
+  *     (ExtractInfo.py:562-597; EmploymentSpec pins its HOF twin);
+  *   - X3 `extract_locations`: gazetteer scan over cleaned text, country
+  *     display names, match-order distinct (Rules.scanGazetteer);
+  *   - X4 `extract_orgs`: ORG mentions on RAW text (capitalization carries
+  *     the signal) with the reference's URL/length filters and a country
+  *     blocklist (Rules.extractOrgs);
+  *   - X5 `extract_dates`: date-like spans over cleaned text
+  *     (Rules.extractDates: the reference's DATE pattern + stoplist).
+  * Each kernel is a regex-free Rules char scanner pinned to its Pattern
+  * twin by CleanScanSpec (and to a regexp_extract_all Column twin by
+  * OperatorSpec). The whole stage is one narrow whole-stage-codegen
+  * projection with zero java.util.regex on the hot path: no shuffle, no
+  * object-encoder boundary (SURVEY §2.11, BENCH_SCALING.md regex collapse).
   */
 object TurnExtract {
-
-  /** X9 — employment surfaces by substring containment, mapped to group
-    * names, first-hit order preserved (ExtractInfo.py:562-597). Pinned to
-    * its typedlit + filter/transform Column twin by EmploymentSpec.
-    */
-  def employmentGroupsCol(clean: Column): Column = extract_employment(clean)
-
-  /** X3 — location gazetteer scan (countries + cities), mapped to country
-    * display names, match-order distinct (Rules.scanGazetteer).
-    */
-  def locationsCol(clean: Column): Column = extract_locations(clean)
-
-  /** regexp_extract_all twin of [[locationsCol]] — differential pin only
-    * (OperatorSpec asserts expression == Column-regex on the corpus).
-    */
-  def locationsColRegex(clean: Column): Column =
-    array_distinct(
-      transform(
-        regexp_extract_all(clean, lit(graft.rules.Rules.gazAlternationStr), lit(1)),
-        s => element_at(typedlit(Dims.gazetteer), s)))
-
-  private val orgPattern = "\\b([A-Z][a-z]+(?: [A-Z][a-zA-Z]+)+)\\b"
-
-  /** X4 — ORG mentions on RAW text (capitalization carries the signal),
-    * with the reference's URL/length filters and a country blocklist
-    * (Rules.extractOrgs).
-    */
-  def orgsCol(raw: Column): Column = extract_orgs(raw)
-
-  /** regexp_extract_all twin of [[orgsCol]] (differential pin only). */
-  def orgsColRegex(raw: Column): Column = {
-    val countryLit = typedlit(Dims.countries.map(_.name))
-    array_distinct(
-      filter(
-        regexp_extract_all(raw, lit(orgPattern), lit(1)),
-        o => !lower(o).contains("http") && !lower(o).contains("www") &&
-          length(o) >= 3 && !array_contains(countryLit, o)))
-  }
-
-  /** X5 — date-like spans over cleaned text (Rules.extractDates: same
-    * pattern string + stoplist as the reference's DATE branch).
-    */
-  def datesCol(clean: Column): Column = extract_dates(clean)
-
-  /** regexp_extract_all twin of [[datesCol]] (differential pin only). */
-  def datesColRegex(clean: Column): Column =
-    array_distinct(
-      filter(
-        regexp_extract_all(clean, lit(graft.rules.Rules.datePatternStr), lit(0)),
-        d => !array_contains(typedlit(graft.rules.Rules.dateStoplist.toSeq), d)))
 
   /** turns(+category) -> TurnExtracted-shaped DataFrame. Input must carry
     * conv_id, turn_idx, role, tool, text, text_clean, category.
@@ -106,12 +66,12 @@ object TurnExtract {
     val cl = col("text_clean")
     def gatedDates(cat: String): Column =
       if (extractDates)
-        when(col("category") === cat, datesCol(cl)).otherwise(typedlit(Seq.empty[String]))
+        when(col("category") === cat, extract_dates(cl)).otherwise(typedlit(Seq.empty[String]))
       else typedlit(Seq.empty[String])
     turns
-      .withColumn("emp_groups", employmentGroupsCol(cl))
-      .withColumn("locations", locationsCol(cl))
-      .withColumn("orgs", orgsCol(col("text")))
+      .withColumn("emp_groups", extract_employment(cl))
+      .withColumn("locations", extract_locations(cl))
+      .withColumn("orgs", extract_orgs(col("text")))
       .withColumn("edu_phrases",
         when(col("category") === "education_requirements", extract_education(cl))
           .otherwise(typedlit(Seq.empty[String])))

@@ -39,12 +39,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectOptimizerRule(_ => SimilarityJoinRule)
     ext.injectOptimizerRule(_ => ManifestAggRule)
 
-    ext.injectFunction(one("graft_clean_string")(CleanStringExpr))
+    ext.injectFunction(one("graft_clean_string")(c => Kernel(Kernels.clean_text, Seq(c))))
     ext.injectFunction(two("graft_token_jaccard")(TokenJaccardExpr(_, _)))
-    ext.injectFunction(one("graft_filter_skills_dbscan")(SkillDbscanExpr))
+    ext.injectFunction(one("graft_filter_skills_dbscan")(c => Kernel(Kernels.filter_skills_dbscan, Seq(c))))
     ext.injectFunction(two("graft_word_shingles") { (c, k) =>
       k match {
-        case Literal(kv: Int, IntegerType) => WordShinglesExpr(c, kv)
+        case Literal(kv: Int, IntegerType) => Kernel(Kernels.word_shingles, Seq(c), Seq(kv))
         case other => throw new IllegalArgumentException(
           s"graft_word_shingles: k must be an integer literal, got $other")
       }

@@ -454,11 +454,11 @@ object Rules {
     * `\b(s1|s2|…)\b` alternation sorted by (-length, surface): at each
     * word start the LONGEST surface whose trailing edge is also a word
     * boundary wins, the match is consumed (non-overlapping), surfaces map
-    * to country names, first-occurrence distinct. This is what
-    * TurnExtract.locationsCol expressed with regexp_extract_all; pinned to
-    * [[scanGazetteerRegex]] by CleanScanSpec fuzz. (Distinct from
-    * [[extractLocations]], the per-surface-first-occurrence NER-proxy
-    * counter — the two differ only on nested surfaces.)
+    * to country names, first-occurrence distinct. This is what the
+    * extract_locations kernel's regexp_extract_all twin (OperatorSpec)
+    * expresses; pinned to [[scanGazetteerRegex]] by CleanScanSpec fuzz.
+    * (Distinct from [[extractLocations]], the per-surface-first-occurrence
+    * NER-proxy counter — the two differ only on nested surfaces.)
     */
   private val gazByFirst: Map[Char, IndexedSeq[(String, String)]] =
     Dims.gazetteer.toSeq.sortBy { case (s, _) => (-s.length, s) }
@@ -660,7 +660,7 @@ object Rules {
 
   /** spaCy-DATE re-expression over CLEANED text (the reference NERs the
     * cleaned chunk): "[d] <month> <year>" and "dd.mm.yyyy" spans. Shared
-    * with the Column twin in TurnExtract.datesCol.
+    * with the extract_dates kernel's Column twin in OperatorSpec.
     */
   val datePatternStr: String =
     "\\b(?:\\d{1,2} )?(?:" + Dims.monthNames.mkString("|") + ") \\d{4}\\b" +

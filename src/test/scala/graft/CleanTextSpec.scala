@@ -24,7 +24,7 @@ class CleanTextSpec extends SparkSpec {
     val inputs = (generated ++ edges).distinct
     val got = inputs.toDF("text")
       .withColumn("c", CleanText.clean(col("text")))
-      .withColumn("f", graft.functions.CleanFunctions.clean_text(col("text")))
+      .withColumn("f", graft.functions.Kernels.clean_text(col("text")))
       .select("text", "c", "f").as[(String, String, String)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
     inputs.foreach { in =>
@@ -37,7 +37,7 @@ class CleanTextSpec extends SparkSpec {
     import spark.implicits._
     val inputs = Seq("ﬁne", "①②③", "Ａｂｃ", "plain ascii", "é (combining)")
     val got = inputs.toDF("s")
-      .select(col("s"), graft.functions.functions.nfkd_normalize(col("s")).as("n"))
+      .select(col("s"), graft.functions.Kernels.nfkd_normalize(col("s")).as("n"))
       .as[(String, String)].collect().toMap
     inputs.foreach { s =>
       val want = java.text.Normalizer.normalize(s, java.text.Normalizer.Form.NFKD)

@@ -5,8 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
-import graft.functions.EmploymentExtractExpr
-import graft.operators.TurnExtract
+import graft.functions.{Kernel, Kernels}
 import graft.sources.{Dims, TranscriptGen}
 
 /** The typedlit + filter/transform Column chain X9 ran as before it
@@ -30,7 +29,7 @@ class EmploymentSpec extends SparkSpec {
   private def assertTwins(texts: Seq[String]): Unit = {
     import spark.implicits._
     val got = texts.toDF("t").select(col("t"),
-      TurnExtract.employmentGroupsCol(col("t")).as("native"),
+      Kernels.extract_employment(col("t")).as("native"),
       EmploymentHof.employmentGroupsCol(col("t")).as("hof"))
       .as[(String, Seq[String], Seq[String])].collect()
     assert(got.length == texts.length)
@@ -65,10 +64,10 @@ class EmploymentSpec extends SparkSpec {
   test("the expression is never null and evaluates the same interpreted") {
     import spark.implicits._
     val row = Seq[String](null).toDF("t")
-      .select(TurnExtract.employmentGroupsCol(col("t")).as("g")).head()
+      .select(Kernels.extract_employment(col("t")).as("g")).head()
     assert(!row.isNullAt(0) && row.getSeq[String](0).isEmpty)
     def interpreted(s: String): Seq[String] = {
-      val a = EmploymentExtractExpr(Literal.create(s, StringType)).eval()
+      val a = Kernel(Kernels.extract_employment, Seq(Literal.create(s, StringType))).eval()
         .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       (0 until a.numElements()).map(i => a.getUTF8String(i).toString)
     }

@@ -1,10 +1,46 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.functions.Kernels
 import graft.operators._
 import graft.rules.DictRules
 import graft.sources.Dims
+
+/** regexp_extract_all / rlike Column twins of the S3 mention kernels and
+  * the CJK gate — differential pins only.
+  */
+object MentionRegexTwins {
+  private val orgPattern = "\\b([A-Z][a-z]+(?: [A-Z][a-zA-Z]+)+)\\b"
+
+  /** twin of `Kernels.extract_locations` */
+  def locationsColRegex(clean: Column): Column =
+    array_distinct(
+      transform(
+        regexp_extract_all(clean, lit(graft.rules.Rules.gazAlternationStr), lit(1)),
+        s => element_at(typedlit(Dims.gazetteer), s)))
+
+  /** twin of `Kernels.extract_orgs` */
+  def orgsColRegex(raw: Column): Column = {
+    val countryLit = typedlit(Dims.countries.map(_.name))
+    array_distinct(
+      filter(
+        regexp_extract_all(raw, lit(orgPattern), lit(1)),
+        o => !lower(o).contains("http") && !lower(o).contains("www") &&
+          length(o) >= 3 && !array_contains(countryLit, o)))
+  }
+
+  /** twin of `Kernels.extract_dates` */
+  def datesColRegex(clean: Column): Column =
+    array_distinct(
+      filter(
+        regexp_extract_all(clean, lit(graft.rules.Rules.datePatternStr), lit(0)),
+        d => !array_contains(typedlit(graft.rules.Rules.dateStoplist.toSeq), d)))
+
+  /** twin of `Kernels.has_cjk` */
+  def hasCjkRegex(c: Column): Column = c.rlike("[\\x{4e00}-\\x{9fff}]")
+}
 
 /** Distributed-operator specs: join-based scoring vs the pure functions,
   * linking/CC, dedup family, ANN recall, multimodal plumbing.
@@ -95,18 +131,18 @@ class OperatorSpec extends SparkSpec {
     val cleaned = KgPipeline.cleanTurns(graft.sources.TranscriptGen.dataset(spark, 60, 42L))
       .select(col("text"), col("text_clean"))
     val locDiff = cleaned.select(
-      TurnExtract.locationsCol(col("text_clean")).as("a"),
-      TurnExtract.locationsColRegex(col("text_clean")).as("b"))
+      Kernels.extract_locations(col("text_clean")).as("a"),
+      MentionRegexTwins.locationsColRegex(col("text_clean")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(locDiff == 0, "locations expression != regex twin")
     val orgDiff = turns.select(
-      TurnExtract.orgsCol(col("text")).as("a"),
-      TurnExtract.orgsColRegex(col("text")).as("b"))
+      Kernels.extract_orgs(col("text")).as("a"),
+      MentionRegexTwins.orgsColRegex(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(orgDiff == 0, "orgs expression != regex twin")
     val dateDiff = cleaned.select(
-      TurnExtract.datesCol(col("text_clean")).as("a"),
-      TurnExtract.datesColRegex(col("text_clean")).as("b"))
+      Kernels.extract_dates(col("text_clean")).as("a"),
+      MentionRegexTwins.datesColRegex(col("text_clean")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(dateDiff == 0, "dates expression != regex twin")
   }
@@ -203,7 +239,7 @@ class OperatorSpec extends SparkSpec {
       "鿿", "ꀀ", "emoji 😀 only", "ärger straße", "日本語テスト")
     val diff = cases.toDF("t").select(
       operators.TextAnalysis.hasCjk(col("t")).as("a"),
-      operators.TextAnalysis.hasCjkRegex(col("t")).as("b"))
+      MentionRegexTwins.hasCjkRegex(col("t")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0, "has_cjk scanner != rlike twin")
   }

@@ -158,7 +158,7 @@ class SkillClusterSpec extends SparkSpec {
       Seq.empty[String])
     val df = fixtures.zipWithIndex.map { case (sk, i) => (i, sk) }.toDF("id", "skills")
     val got = df.select(col("id"),
-        graft.functions.SkillClusterFunctions.filter_skills_dbscan(col("skills")).as("kept"))
+        graft.functions.Kernels.filter_skills_dbscan(col("skills")).as("kept"))
       .as[(Int, Seq[String])].collect().toMap
     fixtures.zipWithIndex.foreach { case (sk, i) =>
       assert(got(i) == SkillCluster.filterSkills(sk), s"row $i")

@@ -121,7 +121,7 @@ class TaggerSpec extends SparkSpec {
     val rt = new RegexTokenizer().setInputCol("text_clean").setOutputCol("rt_tokens")
       .setPattern("[a-z]+").setGaps(false).setMinTokenLength(1)
     val both = rt.transform(df.withColumn("tokens",
-      graft.functions.TokenizeFunctions.letter_runs(col("text_clean"))))
+      graft.functions.Kernels.letter_runs(col("text_clean"))))
     val diff = both.filter(col("tokens") =!= col("rt_tokens")).count()
     assert(diff == 0)
   }
